@@ -790,11 +790,19 @@ def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
 # (1<<code_size)+1 — exercised across the 512/1024 boundaries by
 # test_lzw_roundtrip_crosses_width_boundaries.
 
+# The single-byte root codes per minimum code size (one byte per root
+# code, so 8 bits at most; a larger size raises KeyError, which the
+# decoder quarantines): each image copies its base table instead of
+# rebuilding it.
+_LZW_ENCODE_BASE = {m: {bytes([i]): i for i in range(1 << m)} for m in range(9)}
+_LZW_DECODE_BASE = {m: {i: bytes([i]) for i in range(1 << m)} for m in range(9)}
+
+
 def _lzw_encode(indices: bytes, min_code_size: int) -> bytes:
     clear = 1 << min_code_size
     eoi = clear + 1
     code_size = min_code_size + 1
-    table = {bytes([i]): i for i in range(clear)}
+    table = dict(_LZW_ENCODE_BASE[min_code_size])
     next_code = eoi + 1
     bitbuf = 0
     nbits = 0
@@ -835,7 +843,8 @@ def _lzw_decode(data: bytes, min_code_size: int) -> bytes:
     clear = 1 << min_code_size
     eoi = clear + 1
     code_size = min_code_size + 1
-    table = {i: bytes([i]) for i in range(clear)}
+    base = _LZW_DECODE_BASE[min_code_size]
+    table = dict(base)
     next_code = eoi + 1
     bitbuf = 0
     nbits = 0
@@ -859,7 +868,7 @@ def _lzw_decode(data: bytes, min_code_size: int) -> bytes:
     while True:
         code = read()
         if code == clear:
-            table = {i: bytes([i]) for i in range(clear)}
+            table = dict(base)
             next_code = eoi + 1
             code_size = min_code_size + 1
             prev = None
@@ -881,6 +890,12 @@ def _lzw_decode(data: bytes, min_code_size: int) -> bytes:
             if next_code == (1 << code_size) and code_size < 12:
                 code_size += 1
         prev = entry
+
+
+# entry i = (i, 2i, 3i), each channel clamped at 255
+_GIF_SYNTH_PALETTE = bytes(
+    c for i in range(256) for c in (min(i, 255), min(2 * i, 255), min(3 * i, 255))
+)
 
 
 def synth_gif_payload(df: DataFrame, id_col: str) -> DataFrame:
@@ -906,9 +921,6 @@ def synth_gif_payload(df: DataFrame, id_col: str) -> DataFrame:
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def build(did: int) -> bytes:
             w, h = 8 + did % 8, 4 + did % 4
-            palette = bytearray()
-            for i in range(256):
-                palette += bytes([min(i, 255), min(2 * i, 255), min(3 * i, 255)])
             idx = bytes(
                 did % 40 + r + c for r in range(h) for c in range(w)
             )
@@ -920,7 +932,7 @@ def synth_gif_payload(df: DataFrame, id_col: str) -> DataFrame:
             return (
                 b"GIF89a"
                 + struct.pack("<HHBBB", w, h, 0xF7, 0, 0)  # GCT, 256 entries
-                + bytes(palette)
+                + _GIF_SYNTH_PALETTE
                 + b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
                 + bytes([8])  # LZW min code size
                 + bytes(blocks)

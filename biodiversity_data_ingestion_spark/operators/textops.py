@@ -9,6 +9,7 @@ column pruning (only `text` + id are read).
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -99,6 +100,16 @@ def quality_score(df: DataFrame, id_col: str, text: str) -> DataFrame:
     )
 
 
+def _has_column(df: DataFrame, name: str) -> bool:
+    """Whether Spark's analyzer resolves ``name`` against ``df`` (so it
+    follows spark.sql.caseSensitive, case-insensitive by default)."""
+    try:
+        df.select(F.col(name))
+    except AnalysisException:
+        return False
+    return True
+
+
 def text_features(
     df: DataFrame,
     id_col: str,
@@ -133,7 +144,7 @@ def text_features(
     exchange). The ratio arithmetic sees the same integers either way,
     so values (and oracle hashes) are bit-identical.
     """
-    t = F.col(text) if text in df.columns else None
+    t = F.col(text) if _has_column(df, text) else None
     if t is None and not (words_col and n_chars_col and n_punct_col):
         # without the raw text, EVERY derived input must be precomputed;
         # otherwise F.lower(None)/F.length(None) below raises an opaque

@@ -823,6 +823,29 @@ def test_text_features_missing_text_without_precomputed_raises(spark):
         textops.text_features(narrow, "doc_id", "text")
 
 
+def test_text_features_resolves_text_column_case_insensitively(spark):
+    # Spark resolves column names case-insensitively by default, so
+    # "TEXT" names the "text" column; the contract check must agree, and
+    # must follow spark.sql.caseSensitive when it is on (in any spelling
+    # Spark accepts as true)
+    import pytest
+
+    from biodiversity_data_ingestion_spark.operators import textops
+
+    docs = spark.createDataFrame(
+        [(1, "The cat and the dog, of course."), (2, "el gato")],
+        "doc_id long, text string",
+    )
+    want = textops.text_features(docs, "doc_id", "text").collect()
+    assert textops.text_features(docs, "doc_id", "TEXT").collect() == want
+    spark.conf.set("spark.sql.caseSensitive", "TRUE")
+    try:
+        with pytest.raises(ValueError, match="text_features.*absent"):
+            textops.text_features(docs, "doc_id", "TEXT")
+    finally:
+        spark.conf.unset("spark.sql.caseSensitive")
+
+
 def test_st_within_matches_ray_cast_kernel(spark):
     # the unrolled pure-expression ray cast must agree with the numpy
     # kernel on every grid point — including a NON-convex ring, which
@@ -1002,6 +1025,13 @@ def test_lzw_roundtrip_crosses_width_boundaries():
         assert _lzw_decode(_lzw_encode(data, 8), 8) == data
     small = bytes(rng.randrange(4) for _ in range(5000))
     assert _lzw_decode(_lzw_encode(small, 2), 2) == small
+    # a CLEAR mid-stream drops the learned codes: with min code size 2,
+    # code 6 after the second CLEAR is KwKwK on 3, not the (1, 2) learned
+    # before it. 3-bit codes packed LSB-first: CLEAR 1 2 CLEAR 3 6 EOI
+    codes = [4, 1, 2, 4, 3, 6, 5]
+    packed = sum(c << (3 * i) for i, c in enumerate(codes))
+    stream = packed.to_bytes((3 * len(codes) + 7) // 8, "little")
+    assert _lzw_decode(stream, 2) == bytes([1, 2, 3, 3, 3])
 
 
 def test_gif_decode_golden_and_dead_letter(spark):
