@@ -286,7 +286,9 @@ def cms_build(
     shards/days by plain addition (map-side combinable, the same
     mergeable-state story as hll_rollup/kll_quantile_rollup but for
     FREQUENCIES). Returns (depth, cell, cnt)."""
-    assert 1 <= depth <= 4, "md5 carries four independent 32-bit slices"
+    if not 1 <= depth <= 4:
+        # md5 carries four independent 32-bit slices
+        raise ValueError("cms_build: depth must be between 1 and 4")
     cells = F.explode(
         F.array(
             *[

@@ -11,10 +11,10 @@ The reference has no graph/packing ops (its dedups are all single-key
 window top-1s, SURVEY.md §2.4 A5-A7); these extend that family to the
 multi-document near-dup clusters an LLM-training pipeline removes.
 
-Scale notes: connected components is the one genuinely iterative
-operator in the engine — implemented as min-label propagation with a
-checkpoint per round, costing one co-partitioned join per iteration and
-converging in O(graph diameter) rounds. Near-dup graphs are unions of
+Scale notes: connected components is min-label propagation, one
+co-partitioned join per round, converging in O(graph diameter) rounds
+(pagerank, HITS, label propagation and k-core are the module's other
+iterative graph operators). Near-dup graphs are unions of
 small tight clusters (diameter a handful), so the loop is short; for
 adversarial long-chain graphs the alternating large-star/small-star
 contraction (Kiveris et al., "Connected Components in MapReduce and
@@ -27,6 +27,7 @@ cap so a hot term cannot quadratically load one reducer.
 from __future__ import annotations
 
 import warnings
+from contextlib import contextmanager
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
@@ -34,6 +35,23 @@ from pyspark.sql import functions as F
 
 from ..functions.partitioning import fan_out
 from ..functions.textfn import tokenize
+
+
+def _checks_convergence(rnd: int, max_rounds: int) -> bool:
+    """Whether round ``rnd`` (0-based) of connected_components or k_core
+    runs its convergence job.
+
+    r15 (guide §1.2, r14 verdict #7): both loops track a monotone
+    quantity (CC: sum of labels; k_core: edge count) that strictly
+    decreases on any round that changes a row, so equality across TWO
+    rounds proves both were identity rounds, and an identity round is
+    idempotent — running up to one extra changes nothing. Past the first
+    two rounds, where near-dup and real graphs converge, the check runs
+    every second round, halving the per-round jobs on adversarial
+    diameters. The last allowed round always checks, which keeps CC's
+    non-root count and k_core's convergence warning exact.
+    """
+    return rnd < 2 or (rnd - 2) % 2 == 1 or rnd == max_rounds - 1
 
 
 def connected_components(
@@ -55,7 +73,8 @@ def connected_components(
     Each round is ONE hash-join of edges against labels on the node key
     plus a groupBy-min — both shuffle on the same key, so at scale the
     two exchanges line up and AQE reuses the partitioning. The label
-    frontier is localCheckpoint'ed per round: without it the plan
+    frontier is persisted for the first two rounds and
+    localCheckpoint'ed after that: without the truncation the plan
     lineage doubles every iteration and the job graph blows up
     exponentially (the classic iterative-Spark trap).
 
@@ -84,15 +103,11 @@ def connected_components(
     """
     e = pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     edges = e.unionByName(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
-    # r15 cache-first (same shape as pagerank/LPA/hits): one exchange
-    # keyed on "s" IS the materialization — HashPartitioning(s)
-    # satisfies the dedup aggregate's ClusteredDistribution([s, d])
-    # (subset rule), so the optional distinct rides the same exchange,
-    # and the seed-fold groupBy(s) below runs EXCHANGE-FREE over the
-    # cache. Replaces the localCheckpoint, which stored |edges| rows
-    # deserialized for the loop's lifetime (§5) behind an extra
-    # materialization layer. Serialized columnar level per the measured
-    # r15 probe (196 vs 323 MB, fill faster, reads flat).
+    # Cache-first, as in _edge_cache: one exchange keyed on "s" IS the
+    # materialization — HashPartitioning(s) satisfies the dedup
+    # aggregate's ClusteredDistribution([s, d]) (subset rule), so the
+    # optional distinct rides the same exchange, and the seed-fold
+    # groupBy(s) below runs EXCHANGE-FREE over the cache.
     edges = edges.repartition("s")
     if dedup_edges:
         # duplicate edges don't change any min-fold, but they multiply
@@ -114,17 +129,6 @@ def connected_components(
     # the fast persist path covers the common case and the checkpoint
     # path bounds plan growth for adversarial diameters. Measured ~2
     # jobs (~0.4 s fixed overhead) cheaper per CC call at sf0.1.
-    # Seed labels with one fold over direct neighbors (component0 =
-    # min(self, neighbors)) — same shuffle the plain distinct() init
-    # would cost, but it banks a full propagation round. Near-dup
-    # clusters are cliques (every member pairs with every other), so the
-    # seed fold alone reaches the fixpoint and the loop's first round is
-    # pure convergence detection.
-    labels = (
-        edges.groupBy(F.col("s").alias("node"))
-        .agg(F.least(F.min("s"), F.min("d")).alias("component"))
-        .persist()
-    )
     # convergence aggregate carries the non-root count as a second
     # scalar over the same scan — the free broadcast-gate bound.
     # NOTE (r14): broadcasting the per-round label frontier (as pagerank/
@@ -139,8 +143,20 @@ def connected_components(
         F.sum((F.col("node") != F.col("component")).cast("long")),
     ]
     _CKPT_AFTER = 2  # rounds on the fast persist path before truncating
-    prev_sum, n_non_root = labels.agg(*conv_agg).first()
+    labels = new_labels = None
     try:
+        # Seed labels with one fold over direct neighbors (component0 =
+        # min(self, neighbors)) — same shuffle the plain distinct() init
+        # would cost, but it banks a full propagation round. Near-dup
+        # clusters are cliques (every member pairs with every other), so the
+        # seed fold alone reaches the fixpoint and the loop's first round is
+        # pure convergence detection.
+        labels = (
+            edges.groupBy(F.col("s").alias("node"))
+            .agg(F.least(F.min("s"), F.min("d")).alias("component"))
+            .persist()
+        )
+        prev_sum, n_non_root = labels.agg(*conv_agg).first()
         for rnd in range(max_iter):
             neighbor_labels = edges.join(
                 labels.withColumnRenamed("node", "d"), "d"
@@ -164,22 +180,7 @@ def connected_components(
                 # extra checkpoint job but bounds plan growth past the
                 # common-case convergence horizon
                 new_labels = new_labels.localCheckpoint(eager=False)
-            # r15 (guide §1.2, r14 verdict #7): past the expected near-dup
-            # convergence horizon (_CKPT_AFTER — clique-shaped graphs fix in
-            # round 1), the convergence aggregate runs every SECOND round,
-            # halving per-round job count on adversarial-diameter graphs.
-            # Valid because sum(labels) is monotone non-increasing and
-            # strictly decreases whenever any label changes: equality across
-            # TWO rounds proves both were identity rounds. Identity rounds
-            # are idempotent on the min-fold, so running up to one extra
-            # changes no row. The last allowed round always checks (the
-            # n_non_root contract).
-            check = (
-                rnd < _CKPT_AFTER
-                or (rnd - _CKPT_AFTER) % 2 == 1
-                or rnd == max_iter - 1
-            )
-            if not check:
+            if not _checks_convergence(rnd, max_iter):
                 labels.unpersist()
                 labels = new_labels
                 continue
@@ -196,11 +197,11 @@ def connected_components(
         # per-query exchange budgets and re-optimizing the loop's tree on
         # every consumer). The checkpoint job just reads the cache — cheap.
         final = labels.localCheckpoint()  # eager: materialized before unpersist
-        labels.unpersist()
     finally:
-        # exception-safe release (the r14 ADVICE pattern): the edge
-        # cache must not outlive the call
-        edges.unpersist()
+        # every cache this call opened is released, whatever raised
+        for frame in (new_labels, labels, edges):
+            if frame is not None:
+                frame.unpersist()
     if return_non_root_count:
         return final, int(n_non_root or 0)
     return final
@@ -223,6 +224,74 @@ DROP_LIST_BROADCAST_ROWS = 4_000_000
 # free (the default deserialized level OOM'd an 8 GB-heap sf1 run).
 _EDGE_CACHE_LEVEL = StorageLevel.MEMORY_AND_DISK
 
+
+@contextmanager
+def _edge_cache(edges: DataFrame, src: str, dst: str, key: str):
+    """The edge cache, node table and gate shared by pagerank, HITS and
+    label propagation.
+
+    Yields ``(e, nodes, n_nodes, hint, rekey)``:
+
+    - ``e``: the ``(e_src, e_dst)`` edge list, hash-partitioned by
+      ``key`` and persisted at ``_EDGE_CACHE_LEVEL``. It IS the edge
+      materialization: every later read (nodes, degrees, each round)
+      hits the cache, so an expensive edge build (the co-purchase
+      basket-pair explode) runs once, not per consumer per round
+      (measured 10.8 s -> ~7 s at sf0.1).
+    - ``nodes``: the distinct endpoints, eagerly localCheckpoint'ed, and
+      ``n_nodes`` their count (a scalar, so "never collect" still holds).
+    - ``hint``: ``n_nodes <= DROP_LIST_BROADCAST_ROWS``, i.e. the node
+      table provably fits a broadcast (the gated regime).
+    - ``rekey(frame, by)``: a persisted copy of ``frame`` partitioned by
+      ``by``, filled from the cache (a columnar read plus one exchange,
+      never a second run of the raw edge build).
+
+    Why a pre-partitioned persist (r14/r15): callers key the cache by
+    the column their rounds GROUP on when gated (the broadcast frontier
+    join preserves partitioning, so the rounds run exchange-free) and by
+    the column they JOIN on when not (the sort-merge join then exchanges
+    only the O(nodes) side) — one |edges| exchange paid once replaces
+    one or two per round (guide §2.4). persist, not localCheckpoint:
+    under AQE a LogicalRDD reports UnknownPartitioning, while an
+    InMemoryRelation keeps the cached plan's partitioning (verified on
+    this build: zero Exchange above the InMemoryTableScan in a gated
+    round). Filling the cache straight from the edge build also dropped
+    an intermediate localCheckpoint that held |edges| rows deserialized
+    for the loop's lifetime (an 8 GB-heap sf1 run OOM'd there). A/B in
+    alternating fresh processes: pagerank sf0.1 4/5 pairs (medians
+    3.73 -> 3.47 s), sf1 3/3 (16.9 -> 8.1 s); label propagation sf0.1
+    4/5 (3.42 -> 3.32 s), sf1 3/3 (22.0 -> 15.3 s).
+
+    Every cache this scope opens is released on exit, whatever raised.
+    Callers therefore run their final round EAGERLY inside the scope:
+    an exchange-free round's last stage otherwise runs at consume time,
+    after the release, and recomputes the edges.
+    """
+    caches = []
+
+    def rekey(frame: DataFrame, by: str) -> DataFrame:
+        cached = frame.repartition(by).persist(_EDGE_CACHE_LEVEL)
+        caches.append(cached)
+        return cached
+
+    try:
+        e = rekey(
+            edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst")),
+            key,
+        )
+        nodes = (
+            e.select(F.col("e_src").alias("node"))
+            .unionByName(e.select(F.col("e_dst").alias("node")))
+            .distinct()
+            .localCheckpoint()
+        )
+        n_nodes = nodes.count()
+        yield e, nodes, n_nodes, n_nodes <= DROP_LIST_BROADCAST_ROWS, rekey
+    finally:
+        # newest first: dropping a cache before an unfilled copy of it
+        # makes Spark re-plan the copy
+        for cached in reversed(caches):
+            cached.unpersist()
 
 
 def gated_anti_join(
@@ -689,102 +758,59 @@ def pagerank(
     fixed < 2^53 and SCALE is a representable power of ten, so the
     division is correctly rounded identically everywhere).
 
-    EXECUTION NOTE: this builder is EAGER, not a lazy plan — the
-    final round's localCheckpoint(eager=True) runs all ``n_iter``
-    rounds at call time (required so the pre-partitioned edge cache
-    can be released before returning). Callers composing plans should
+    EXECUTION NOTE: this builder is EAGER, not a lazy plan — its final
+    round's localCheckpoint(eager=True) runs all ``n_iter`` rounds at
+    call time (why: :func:`_edge_cache`). Callers composing plans should
     expect the work to happen here, not at the first action.
     """
     num, den, scale = damping_num, damping_den, PAGERANK_SCALE
-    # materialize the edge list ONCE: it feeds nodes, out-degrees AND
-    # every iteration's contribution join — without a materialization an
-    # expensive edge construction (e.g. the quadratic basket-pair
-    # explode of the co-purchase graph) re-executes per consumer per
-    # round (measured 10.8 s -> ~7 s at sf0.1).
-    # r15: the materialization IS the pre-partitioned per-round cache
-    # (optimistically keyed for the gated regime; re-keyed below if the
-    # gate fails) instead of an intermediate localCheckpoint — the
-    # checkpoint stored |edges| rows DESERIALIZED for the loop's
-    # lifetime (the §5 memory term: an 8 GB-heap sf1 run OOM'd in
-    # exactly this unroll) and cost one extra full materialization
-    # layer. A/B alternating fresh processes: sf0.1 4/5 pairs (medians
-    # 3.73 -> 3.47), 10x sf1 3/3 pairs (medians 16.9 -> 8.1).
-    e = edges.select(
-        F.col(src).alias("e_src"), F.col(dst).alias("e_dst")
-    ).repartition("e_dst").persist(_EDGE_CACHE_LEVEL)
-    nodes = (
-        e.select(F.col("e_src").alias("node"))
-        .unionByName(e.select(F.col("e_dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    # node count as a plain int: one cheap count over the materialized
-    # node table (a scalar, not data, so "never collect" still holds
-    # for the rank/edge frames). It seeds the init rank, the per-round
-    # base term AND the broadcast gate below.
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        # empty graph: no nodes, no ranks — and no division by zero in
-        # the plan literals below
-        e.unpersist()
-        return nodes.select(
-            "node", F.lit(None).cast("double").alias("rank")
+    # keyed on the contribution groupBy key (the gated regime)
+    with _edge_cache(edges, src, dst, "e_dst") as (e, nodes, n_nodes, hint, rekey):
+        if n_nodes == 0:
+            # empty graph: no nodes, no ranks — and no division by zero in
+            # the plan literals below
+            return nodes.select(
+                "node", F.lit(None).cast("double").alias("rank")
+            )
+        # out-degrees are read TWICE per round (contribution join +
+        # dangling filter): materialize the |nodes|-sized table once
+        # instead of re-running the |edges|-sized groupBy up to 2 x n_iter
+        # times
+        deg = (
+            e.groupBy(F.col("e_src").alias("deg_node"))
+            .agg(F.count(F.lit(1)).alias("out_deg"))
+            .localCheckpoint()
         )
-    # out-degrees are read TWICE per round (contribution join + dangling
-    # filter): materialize the |nodes|-sized table once instead of
-    # re-running the |edges|-sized groupBy up to 2 x n_iter times
-    deg = (
-        e.groupBy(F.col("e_src").alias("deg_node"))
-        .agg(F.count(F.lit(1)).alias("out_deg"))
-        .localCheckpoint()
-    )
-    # Gated broadcast of the rank frontier into the contribution join
-    # (the gated_anti_join pattern): when the node table provably fits
-    # a broadcast, the |edges| side never shuffles — the per-round
-    # exchange drops to the contribution groupBy alone. Above the
-    # ceiling, plain shuffle join and AQE strategizes (the generic
-    # 100 TB path, where ranks are O(nodes) and cannot broadcast).
-    hint_ranks = n_nodes <= DROP_LIST_BROADCAST_ROWS
-    if hint_ranks:
-        # under the same gate, broadcast the (<= |nodes|)-row degree
-        # table into the per-round rank join and the per-round contrib
-        # result into the rank rebuild: the rank frontier and the node
-        # table (both checkpointed RDDs) then never re-shuffle — the
-        # only per-round exchange left is the contribution groupBy
-        # (guide §2.4: remove shuffles outright)
-        deg = F.broadcast(deg)
-    # r14: pre-partition the per-round edge cache by the key the rounds
-    # need — gated, the contribution groupBy key (the broadcast sender
-    # join preserves partitioning, so the last per-round |edges|
-    # exchange disappears and rounds run exchange-free); ungated, the
-    # sender join key (the SMJ then exchanges only the O(nodes) side
-    # per round). One exchange paid once replaces one per round (guide
-    # §2.4). persist, not localCheckpoint: LogicalRDD under AQE reports
-    # UnknownPartitioning, InMemoryRelation preserves the partitioning.
-    # r15: the gated key IS the build cache above; the ungated fallback
-    # re-keys from the in-memory cache (columnar read + one exchange,
-    # cheaper than re-running the raw edge build) and releases the
-    # mis-keyed one eagerly.
-    if hint_ranks:
-        e_r = e
-    else:
-        e_r = e.repartition("e_src").persist(_EDGE_CACHE_LEVEL)
-        e_r.count()
-        e.unpersist()
-    ranks = nodes.select(
-        "node", F.lit(scale // n_nodes).cast("long").alias("r")
-    ).localCheckpoint(eager=False)
-    base = (den - num) * scale // (den * n_nodes)
-    try:
+        # Gated broadcast of the rank frontier into the contribution join
+        # (the gated_anti_join pattern): when the node table provably
+        # fits a broadcast, the |edges| side never shuffles. Under the
+        # same gate the degree table and each round's contrib result
+        # broadcast too, so the rank frontier and the node table (both
+        # checkpointed RDDs) never re-shuffle and the contribution
+        # groupBy is the only per-round exchange left (guide §2.4).
+        # Above the ceiling, plain shuffle joins and AQE strategizes (the
+        # 100 TB path, where ranks are O(nodes) and cannot broadcast).
+        if hint:
+            deg = F.broadcast(deg)
+        else:
+            # re-key on the sender join key, then drop the mis-keyed cache
+            e_r = rekey(e, "e_src")
+            e_r.count()
+            e.unpersist()
+            e = e_r
+        ranks = nodes.select(
+            "node", F.lit(scale // n_nodes).cast("long").alias("r")
+        ).localCheckpoint(eager=False)
+        base = (den - num) * scale // (den * n_nodes)
         for it in range(n_iter):
             with_deg = ranks.join(
                 deg, ranks["node"] == deg["deg_node"], "left"
             ).drop("deg_node")
             senders = with_deg.where(F.col("out_deg").isNotNull())
-            if hint_ranks:
+            if hint:
                 senders = F.broadcast(senders)
             contribs = (
-                senders.join(e_r, F.col("node") == F.col("e_src"))
+                senders.join(e, F.col("node") == F.col("e_src"))
                 .groupBy(F.col("e_dst").alias("node"))
                 .agg(F.sum(F.expr("r div out_deg")).alias("contrib"))
             )
@@ -796,7 +822,7 @@ def pagerank(
             )
             ranks = (
                 nodes.join(
-                    F.broadcast(contribs) if hint_ranks else contribs,
+                    F.broadcast(contribs) if hint else contribs,
                     "node",
                     "left",
                 )
@@ -810,16 +836,9 @@ def pagerank(
                         " AS BIGINT)"
                     ).alias("r"),
                 )
-                # final round EAGER so the edge cache can be released below
-                # (an exchange-free round's last stage otherwise runs at
-                # consume time, after the unpersist, and recomputes e_r)
+                # final round EAGER, inside the cache scope (_edge_cache)
                 .localCheckpoint(eager=(it == n_iter - 1))
             )
-    finally:
-        # exception-safe release (r14 ADVICE): a throw mid-loop or in
-        # the eager final checkpoint must not leak the |edges| cache for
-        # the life of the SparkSession
-        e_r.unpersist()
     return ranks.select(
         "node", (F.col("r") / F.lit(float(scale))).alias("rank")
     )
@@ -869,15 +888,9 @@ def k_core(
     )
     n_edges = cur.count()
     converged = n_edges == 0
-    # r15 (guide §1.2, r14 verdict #7): past the expected convergence
-    # horizon, the per-round edge count runs every SECOND round — the
-    # edge set shrinks monotonically, so equality across two rounds
-    # proves both removed nothing (converged), and an extra identity
-    # peel changes no row. On skipped rounds the broadcast gate uses the
-    # previous (larger) count — a conservative bound, it can only
-    # UNDER-broadcast. The last allowed round always counts, keeping the
-    # convergence-honesty warning exact.
-    _CHECK_HORIZON = 2
+    # per-round edge counts follow _checks_convergence; on skipped
+    # rounds the broadcast gate uses the previous (larger) count — a
+    # conservative bound, it can only UNDER-broadcast
     for rnd in range(max_rounds):
         if n_edges == 0:
             converged = True
@@ -905,12 +918,7 @@ def k_core(
             .localCheckpoint(eager=False)
         )
         cur = nxt
-        check = (
-            rnd < _CHECK_HORIZON
-            or (rnd - _CHECK_HORIZON) % 2 == 1
-            or rnd == max_rounds - 1
-        )
-        if not check:
+        if not _checks_convergence(rnd, max_rounds):
             continue
         n_next = nxt.count()
         if n_next == n_edges:
@@ -985,40 +993,14 @@ def hits(
     Returns (node, hub, auth) with fixed/SCALE as double (exact: both
     fit 2^53 and SCALE is a power of ten).
 
-    EXECUTION NOTE: this builder is EAGER, not a lazy plan — the final
+    EXECUTION NOTE: this builder is EAGER, not a lazy plan — its final
     round's localCheckpoint(eager=True) runs all ``n_iter`` rounds at
-    call time (required so the edge caches can be released before
-    returning), same contract as :func:`pagerank` /
-    :func:`label_propagation`.
+    call time (why: :func:`_edge_cache`). Callers composing plans should
+    expect the work to happen here, not at the first action.
     """
     if n_iter < 1:
         raise ValueError("hits: n_iter must be >= 1")
     scale = HITS_SCALE
-    # r15: the first cache doubles as THE edge materialization (no
-    # intermediate localCheckpoint — the checkpoint stored |edges| rows
-    # deserialized for the loop's lifetime and cost one extra
-    # materialization layer; same cache-first shape as pagerank /
-    # label_propagation, measured there 3/3 sf1 pairs); nodes and the
-    # second cache both read it.
-    e_by_dst = edges.select(
-        F.col(src).alias("e_src"), F.col(dst).alias("e_dst")
-    ).repartition("e_dst").persist(_EDGE_CACHE_LEVEL)
-    nodes = (
-        e_by_dst.select(F.col("e_src").alias("node"))
-        .unionByName(e_by_dst.select(F.col("e_dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        e_by_dst.unpersist()
-        return nodes.select(
-            "node",
-            F.lit(None).cast("double").alias("hub"),
-            F.lit(None).cast("double").alias("auth"),
-        )
-    hint = n_nodes <= DROP_LIST_BROADCAST_ROWS
-
     # r15 (VERDICT r14 #1): TWO-SIDED pre-partitioned edge caches. The
     # r14 SINGLE-key cache was reverted 6/6 pairs because HITS
     # alternates its grouping key per half-round, so one key served only
@@ -1041,68 +1023,71 @@ def hits(
     # on a uniform-degree graph buys nothing) and dropped; the gate
     # bounds the exchange-free-regime graph at DROP_LIST_BROADCAST_ROWS
     # nodes, which caps how bad one hot partition can get.
-    # (e_by_dst is the build materialization above; the src-keyed twin
-    # fills from it — a columnar read + one exchange, never a second
-    # run of the raw edge build.)
-    e_by_src = e_by_dst.repartition("e_src").persist(_EDGE_CACHE_LEVEL)
-
-    def _half(
-        frontier: DataFrame,
-        score: str,
-        out_key: str,
-        in_key: str,
-        checkpoint: bool,
-        eager: bool = False,
+    with _edge_cache(edges, src, dst, "e_dst") as (
+        e_by_dst, nodes, n_nodes, hint, rekey
     ):
-        """One half-round: push `score` along edges from `out_key` to
-        `in_key`, L1-normalize onto the full node set. Only the HUB
-        half checkpoints: the auth frame is consumed exactly once (by
-        the hub half that follows), so truncating lineage there would
-        double the checkpoint jobs for a fixed depth-2 plan chain."""
-        f = F.broadcast(frontier) if hint else frontier
-        # gated: pick the cache partitioned by this half's GROUPING
-        # key (broadcast joins preserve it -> groupBy exchange-free);
-        # ungated: by this half's JOIN key (SMJ exchanges only the
-        # O(nodes) frontier side)
-        pick = in_key if hint else out_key
-        edge = e_by_dst if pick == "e_dst" else e_by_src
-        raw = (
-            f.join(edge, F.col("node") == F.col(out_key))
-            .groupBy(F.col(in_key).alias("node"))
-            .agg(F.sum(score).alias("raw"))
-        )
-        norm = raw.agg(
-            F.coalesce(F.sum("raw"), F.lit(0)).cast("long").alias("l1")
-        )
-        out = (
-            # raw is <= |nodes| rows of (node, sum): under the same gate
-            # as the frontier broadcast, build it as the hash side so the
-            # checkpointed node table never re-shuffles per half-round
-            nodes.join(F.broadcast(raw) if hint else raw, "node", "left")
-            .crossJoin(F.broadcast(norm))
-            .select(
+        if n_nodes == 0:
+            return nodes.select(
                 "node",
-                F.expr(
-                    f"CAST(CASE WHEN l1 = 0 THEN 0 "
-                    f"ELSE (coalesce(raw, 0) * {scale}) div l1 END AS BIGINT)"
-                ).alias(score),
+                F.lit(None).cast("double").alias("hub"),
+                F.lit(None).cast("double").alias("auth"),
             )
-        )
-        return out.localCheckpoint(eager=eager) if checkpoint else out
+        # the src-keyed twin fills lazily, in the first half that reads it
+        e_by_src = rekey(e_by_dst, "e_src")
 
-    hubs = nodes.select(
-        "node", F.lit(scale // n_nodes).cast("long").alias("h")
-    ).localCheckpoint(eager=False)
-    auths = None
-    try:
+        def _half(
+            frontier: DataFrame,
+            score: str,
+            out_key: str,
+            in_key: str,
+            checkpoint: bool,
+            eager: bool = False,
+        ):
+            """One half-round: push `score` along edges from `out_key` to
+            `in_key`, L1-normalize onto the full node set. Only the HUB
+            half checkpoints: the auth frame is consumed exactly once (by
+            the hub half that follows), so truncating lineage there would
+            double the checkpoint jobs for a fixed depth-2 plan chain."""
+            f = F.broadcast(frontier) if hint else frontier
+            # gated: pick the cache partitioned by this half's GROUPING
+            # key (broadcast joins preserve it -> groupBy exchange-free);
+            # ungated: by this half's JOIN key (SMJ exchanges only the
+            # O(nodes) frontier side)
+            pick = in_key if hint else out_key
+            edge = e_by_dst if pick == "e_dst" else e_by_src
+            raw = (
+                f.join(edge, F.col("node") == F.col(out_key))
+                .groupBy(F.col(in_key).alias("node"))
+                .agg(F.sum(score).alias("raw"))
+            )
+            norm = raw.agg(
+                F.coalesce(F.sum("raw"), F.lit(0)).cast("long").alias("l1")
+            )
+            out = (
+                # raw is <= |nodes| rows of (node, sum): under the same
+                # gate as the frontier broadcast, build it as the hash
+                # side so the checkpointed node table never re-shuffles
+                # per half-round
+                nodes.join(F.broadcast(raw) if hint else raw, "node", "left")
+                .crossJoin(F.broadcast(norm))
+                .select(
+                    "node",
+                    F.expr(
+                        f"CAST(CASE WHEN l1 = 0 THEN 0 "
+                        f"ELSE (coalesce(raw, 0) * {scale}) div l1 END AS BIGINT)"
+                    ).alias(score),
+                )
+            )
+            return out.localCheckpoint(eager=eager) if checkpoint else out
+
+        hubs = nodes.select(
+            "node", F.lit(scale // n_nodes).cast("long").alias("h")
+        ).localCheckpoint(eager=False)
         for i in range(n_iter):
             last = i == n_iter - 1
-            # the final round's auth frame feeds the returned join, so
-            # it gets the lineage truncation the intermediate ones skip;
-            # the final halves are EAGER so the edge caches can be
-            # released before returning (an exchange-free half's last
-            # stage otherwise runs at consume time, after the unpersist,
-            # and recomputes the cache)
+            # the final round's auth frame feeds the returned join, so it
+            # gets the lineage truncation the intermediate ones skip; the
+            # final halves are EAGER, inside the cache scope (_edge_cache)
             auths = _half(
                 hubs, "h", "e_src", "e_dst",
                 checkpoint=last, eager=last,
@@ -1111,11 +1096,6 @@ def hits(
                 auths, "a", "e_dst", "e_src",
                 checkpoint=True, eager=last,
             ).withColumnRenamed("a", "h")
-    finally:
-        # exception-safe release (the r14 ADVICE pattern): a throw
-        # mid-loop must not leak the |edges| caches
-        e_by_dst.unpersist()
-        e_by_src.unpersist()
     return (
         hubs.join(auths, "node")
         .select(
@@ -1162,67 +1142,30 @@ def label_propagation(
 
     Returns (node, community) — community = the propagated label.
 
-    EXECUTION NOTE: this builder is EAGER, not a lazy plan — the
-    final round's localCheckpoint(eager=True) runs all ``n_iter``
-    rounds at call time (required so the pre-partitioned edge cache
-    can be released before returning). Callers composing plans should
+    EXECUTION NOTE: this builder is EAGER, not a lazy plan — its final
+    round's localCheckpoint(eager=True) runs all ``n_iter`` rounds at
+    call time (why: :func:`_edge_cache`). Callers composing plans should
     expect the work to happen here, not at the first action.
     """
     if n_iter < 1:
         raise ValueError("label_propagation: n_iter must be >= 1")
-    # r15: fill the pre-partitioned per-round cache DIRECTLY from the
-    # raw edge build (optimistically keyed for the gated regime; re-
-    # keyed below if the gate fails), and derive nodes/count from the
-    # cache — drops the intermediate localCheckpoint, which stored
-    # |edges| rows DESERIALIZED for the loop's lifetime (the §5 memory
-    # term: an 8 GB-heap sf1 run OOM'd in exactly this unroll) and cost
-    # one extra full materialization layer. A/B alternating fresh
-    # processes: sf0.1 4/5 pairs (medians 3.42 -> 3.32), 10x sf1 3/3
-    # pairs (medians 22.0 -> 15.3).
-    e = edges.select(
-        F.col(src).alias("e_src"), F.col(dst).alias("e_dst")
-    ).repartition("e_src").persist(_EDGE_CACHE_LEVEL)
-    nodes = (
-        e.select(F.col("e_src").alias("node"))
-        .unionByName(e.select(F.col("e_dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        # cast matches the non-empty path (labels init as long): the
-        # output schema must not depend on whether the input was empty
-        e.unpersist()
-        return nodes.select(
-            "node", F.col("node").cast("long").alias("community")
-        )
-    hint = n_nodes <= DROP_LIST_BROADCAST_ROWS
-    # r14: pre-partition the edge cache by the key every round GROUPS on
-    # (gated: the broadcast join preserves partitioning, so both
-    # per-round aggregates — (e_src, label) counts and the per-node
-    # winner — reuse it and the rounds run EXCHANGE-FREE) or, above the
-    # gate, by the key every round JOINS on (the labels join then
-    # exchanges only the O(nodes) side). One |edges| exchange paid once
-    # replaces one-to-two per round (guide §2.4: operations keyed the
-    # same way share one exchange). persist — NOT localCheckpoint —
-    # because LogicalRDD under AQE reports UnknownPartitioning
-    # (AdaptiveSparkPlanExec never overrides outputPartitioning), while
-    # InMemoryRelation preserves the cached plan's partitioning;
-    # verified empirically on this build (plan: zero Exchange above the
-    # InMemoryTableScan in the gated round).
-    # r15: the gated key IS the build cache above; the ungated fallback
-    # re-keys from the in-memory cache (columnar read + one exchange,
-    # cheaper than re-running the raw edge build) and releases the
-    # mis-keyed one eagerly.
-    if not hint:
-        e2 = e.repartition("e_dst").persist(_EDGE_CACHE_LEVEL)
-        e2.count()
-        e.unpersist()
-        e = e2
-    labels = nodes.select(
-        "node", F.col("node").cast("long").alias("label")
-    ).localCheckpoint(eager=False)
-    try:
+    # keyed on the key every round groups on (the gated regime)
+    with _edge_cache(edges, src, dst, "e_src") as (e, nodes, n_nodes, hint, rekey):
+        if n_nodes == 0:
+            # cast matches the non-empty path (labels init as long): the
+            # output schema must not depend on whether the input was empty
+            return nodes.select(
+                "node", F.col("node").cast("long").alias("community")
+            )
+        if not hint:
+            # re-key on the join key, then drop the mis-keyed cache
+            e2 = rekey(e, "e_dst")
+            e2.count()
+            e.unpersist()
+            e = e2
+        labels = nodes.select(
+            "node", F.col("node").cast("long").alias("label")
+        ).localCheckpoint(eager=False)
         for it in range(n_iter):
             f = F.broadcast(labels) if hint else labels
             counts = (
@@ -1234,9 +1177,9 @@ def label_propagation(
             # count, ties toward the SMALLEST label == max of (cnt, -label)
             # — identical winner (labels are non-null bigints), but the
             # aggregate partially combines map-side and skips the window's
-            # per-partition sort, so the second exchange carries one row per
-            # node instead of one per (node, label) (guide §2.3: aggregate
-            # before you shuffle).
+            # per-partition sort, so the second exchange carries one row
+            # per node instead of one per (node, label) (guide §2.3:
+            # aggregate before you shuffle).
             winner = (
                 counts.groupBy("e_src")
                 .agg(
@@ -1249,8 +1192,8 @@ def label_propagation(
                     (-F.col("m.nl")).alias("new_label"),
                 )
             )
-            # broadcast the winner under the same gate as the frontier: the
-            # label table (a checkpointed RDD) then never re-shuffles
+            # broadcast the winner under the same gate as the frontier:
+            # the label table (a checkpointed RDD) then never re-shuffles
             labels = (
                 labels.join(
                     F.broadcast(winner) if hint else winner, "node", "left"
@@ -1259,15 +1202,7 @@ def label_propagation(
                     "node",
                     F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
                 )
-                # final round EAGER so the edge cache can be released below
-                # (an exchange-free round's last stage otherwise runs at
-                # consume time, after the unpersist, and recomputes e);
-                # intermediate rounds stay lazy as before
+                # final round EAGER, inside the cache scope (_edge_cache)
                 .localCheckpoint(eager=(it == n_iter - 1))
             )
-    finally:
-        # exception-safe release (r14 ADVICE): a throw mid-loop or in
-        # the eager final checkpoint must not leak the |edges| cache for
-        # the life of the SparkSession
-        e.unpersist()
     return labels.select("node", F.col("label").alias("community"))

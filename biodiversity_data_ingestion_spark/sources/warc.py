@@ -117,14 +117,16 @@ def parse_warc_features(
             record = gzmod.decompress(bytes(buf))
             head, _, rest = record.partition(_CRLF + _CRLF)
             lines = head.split(_CRLF)
-            assert lines[0].startswith(b"WARC/"), "not a WARC record"
+            if not lines[0].startswith(b"WARC/"):
+                raise ValueError("not a WARC record")
             headers = {}
             for line in lines[1:]:
                 k, _, v = line.partition(b":")
                 headers[k.strip().lower()] = v.strip()
             clen = int(headers[b"content-length"])
             content = rest[:clen]
-            assert rest[clen : clen + 4] == _CRLF + _CRLF, "bad record end"
+            if rest[clen : clen + 4] != _CRLF + _CRLF:
+                raise ValueError("bad record end")
             text = content.decode("utf-8")
             n_words = len([w for w in text.lower().split() if w])
             return (

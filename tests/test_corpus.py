@@ -4,6 +4,7 @@ hash sampling) beyond the oracle-parity gate."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -978,13 +979,11 @@ def test_label_propagation_empty_graph(spark):
 
 
 def test_graph_iteratives_gate_regimes_identical(spark, monkeypatch):
-    # r14: label_propagation / pagerank pre-partition the per-round
+    # r14: label_propagation / pagerank / hits pre-partition the per-round
     # edge cache by a REGIME-DEPENDENT key (gated: the round's groupBy
     # key, so rounds run exchange-free; ungated: the round's join key).
     # Pin that both regimes walk the identical integer trajectory — the
     # partitioning choice must never leak into results.
-    from biodiversity_data_ingestion_spark.operators import corpus
-
     half = [
         (1, 2), (2, 3), (1, 3),
         (5, 6), (6, 7), (5, 7),
@@ -993,22 +992,30 @@ def test_graph_iteratives_gate_regimes_identical(spark, monkeypatch):
     sym = half + [(b, a) for a, b in half]
     edges = spark.createDataFrame(sym, "src long, dst long")
 
-    gated_lpa = sorted(
-        (r["node"], r["community"])
-        for r in corpus.label_propagation(edges, n_iter=3).collect()
-    )
-    gated_pr = sorted(
-        (r["node"], r["rank"])
-        for r in corpus.pagerank(edges, n_iter=3).collect()
-    )
+    def run_all():
+        return [
+            sorted(tuple(r) for r in op(edges, n_iter=3).collect())
+            for op in (corpus.label_propagation, corpus.pagerank, corpus.hits)
+        ]
+
+    gated = run_all()
     monkeypatch.setattr(corpus, "DROP_LIST_BROADCAST_ROWS", 0)
-    ungated_lpa = sorted(
-        (r["node"], r["community"])
-        for r in corpus.label_propagation(edges, n_iter=3).collect()
+    assert run_all() == gated
+
+
+@pytest.mark.parametrize(
+    "op", ["pagerank", "hits", "label_propagation", "connected_components"]
+)
+def test_graph_iteratives_release_caches_when_a_job_throws(spark, op):
+    # the edge caches must not outlive a call whose first job (the node
+    # build, the seed fold) throws on a bad input row
+    spark.catalog.clearCache()
+    bad = spark.range(10).select(
+        F.col("id").alias("src"),
+        F.when(F.col("id") == 7, F.raise_error(F.lit("bad edge row")))
+        .otherwise(F.col("id") + 1)
+        .alias("dst"),
     )
-    ungated_pr = sorted(
-        (r["node"], r["rank"])
-        for r in corpus.pagerank(edges, n_iter=3).collect()
-    )
-    assert gated_lpa == ungated_lpa
-    assert gated_pr == ungated_pr
+    with pytest.raises(Exception, match="bad edge row"):
+        getattr(corpus, op)(bad, src="src", dst="dst")
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -1272,6 +1272,9 @@ def test_cms_heavy_hitters_bounds_and_recovery(spark):
     for t, e in est.items():
         assert e >= true[t]  # never undercounts
         assert e <= true[t] + len(vals) * 4 / 512  # eps*N slack
+    # md5 carries four 32-bit slices: a fifth depth row is an error
+    with pytest.raises(ValueError, match="depth"):
+        cms_heavy_hitters(df, "term", width=512, depth=5, k=5)
 
 
 def test_cms_heavy_hitters_external_candidates(spark):

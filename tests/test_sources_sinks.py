@@ -526,11 +526,25 @@ def test_warc_roundtrip_and_dead_letter(spark):
     p2 = {r["doc_id"]: bytes(r["payload"])
           for r in warc.synth_warc_payload(df, "doc_id", "text").collect()}
     assert p1 == p2
-    # malformed payload -> dead-letter nulls
-    bad = spark.createDataFrame([(9, bytearray(b"\x1f\x8bGARBAGE"))],
-                                "doc_id long, payload binary")
-    row = warc.parse_warc_features(bad, "doc_id", on_error="null").collect()[0]
-    assert row["warc_type"] is None and row["n_words"] is None
+    # malformed payloads -> dead-letter nulls: not gzip, gzip but not a
+    # WARC version line, and a record whose end is not CRLFCRLF
+    import gzip
+
+    def gz(b):
+        return bytearray(gzip.compress(b, mtime=0))
+
+    head = b"WARC-Type: response\r\nContent-Length: 2\r\n\r\n"
+    bad = spark.createDataFrame(
+        [
+            (9, bytearray(b"\x1f\x8bGARBAGE")),
+            (10, gz(b"HTTP/1.1\r\n" + head + b"hi\r\n\r\n")),
+            (11, gz(b"WARC/1.0\r\n" + head + b"hi--\r\n")),
+        ],
+        "doc_id long, payload binary",
+    )
+    rows = warc.parse_warc_features(bad, "doc_id", on_error="null").collect()
+    assert len(rows) == 3
+    assert all(r["warc_type"] is None and r["n_words"] is None for r in rows)
 
 
 def test_webdataset_shards_roundtrip_and_determinism(spark, tmp_path):
