@@ -21,16 +21,23 @@ features:
 - compressed image: GIF — from-scratch variable-width LZW (the
   dictionary coder itself is hand-rolled, both directions)
   (`decode_gif_features`)
-- compressed image: baseline JPEG, grayscale — the Huffman ENTROPY
-  CODER hand-rolled both directions, plus zigzag/dequantize/IDCT
-  (`decode_jpeg_features`)
+- compressed image: baseline JPEG, grayscale and YCbCr 4:4:4 color —
+  the Huffman ENTROPY CODER hand-rolled both directions, plus
+  zigzag/dequantize/IDCT (`decode_jpeg_features`,
+  `decode_jpeg444_features`), and progressive spectral-selection JPEG
+  (`decode_jpeg_progressive_features`)
 
-Only full-color/progressive JPEG and stream codecs (H.264/Opus-class)
-remain a clearly-marked stub (`decode_media` raises
-NotImplementedError) — those need PIL / ffmpeg, which this container
-does not ship. The codec-free feature
+Only stream codecs (H.264/Opus-class) and progressive JPEG's
+successive-approximation refinement remain a clearly-marked stub
+(`decode_media` raises NotImplementedError) — those need PIL / ffmpeg,
+which this container does not ship. The codec-free feature
 kernel (`binary_features`: exact byte length + md5 over raw bytes,
 portable to DuckDB's md5(blob)) covers the payload-agnostic plumbing.
+
+Every decoder is one plain ``_<codec>_features(buf)`` function run by
+`_decode_kernel`, and every synth twin one ``_<codec>_payload(doc_id)``
+function run by `_synth_kernel`; the two wrappers own the schemas, the
+batch loops and the dead-letter contract.
 
 Scale notes: kernels are column-in/column-out over Arrow batches — no
 shuffle, no driver I/O; binary payloads never pass through the Python
@@ -42,14 +49,23 @@ Arrow batches stay within executor memory
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
+import io
+import math
+import struct
+import wave
+import zlib
+from typing import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.partitioning import fan_out
 from pyspark.sql.types import (
+    BinaryType,
+    DataType,
+    DoubleType,
     LongType,
     StringType,
     StructField,
@@ -139,6 +155,102 @@ def decode_media(df: DataFrame, payload_col: str = "payload"):
     )
 
 
+# --- the two kernel wrappers ----------------------------------------------
+
+_LONG, _DOUBLE, _STRING = LongType(), DoubleType(), StringType()
+# pandas dtype per Spark field type: nullable ints, NaN-as-null doubles
+_PANDAS_DTYPE = {"long": "Int64", "double": "float64", "string": "string"}
+_IMAGE_DIMS = [("width", _LONG), ("height", _LONG), ("n_pixels", _LONG)]
+_RGB_MEANS = _IMAGE_DIMS + [
+    ("mean_r", _DOUBLE), ("mean_g", _DOUBLE), ("mean_b", _DOUBLE),
+]
+
+
+def _decode_kernel(
+    df: DataFrame, id_col: str, payload_col: str,
+    fields: list[tuple[str, DataType]],
+    decode: Callable[[bytes], tuple], on_error: str,
+) -> DataFrame:
+    """Run ``decode(payload_bytes) -> tuple`` (one value per ``fields``
+    entry) over ``payload_col`` in an Arrow-batched mapInPandas kernel;
+    the output is ``id_col`` plus ``fields``. Column-in/column-out: no
+    shuffle, payloads never touch the driver.
+
+    The dead-letter contract of every decoder: a NULL payload is an
+    all-null row. Under ``on_error='raise'`` (the default) a malformed
+    payload fails the task; under ``on_error='null'`` any exception
+    ``decode`` raises (a failed guard, or the ``IndexError`` /
+    ``struct.error`` of a truncated payload) routes that row to an
+    all-null feature row instead, mirroring the JSONL corrupt-record
+    channel — filter on a NULL feature downstream to quarantine. Any
+    other ``on_error`` value raises ``ValueError`` here, on the
+    driver."""
+    if on_error not in ("raise", "null"):
+        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
+    out_schema = StructType(
+        [df.schema[id_col]] + [StructField(n, t, True) for n, t in fields]
+    )
+    dtypes = [_PANDAS_DTYPE[t.typeName()] for _, t in fields]
+    null_row = (None,) * len(fields)
+
+    def decode_row(b) -> tuple:
+        if b is None:
+            return null_row
+        try:
+            return decode(bytes(b))
+        except Exception:
+            if on_error == "raise":
+                raise
+            return null_row
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [decode_row(b) for b in pdf[payload_col]]
+            cols = list(zip(*rows)) if rows else [()] * len(fields)
+            frame = {id_col: pdf[id_col]}
+            for (name, _), col, dtype in zip(fields, cols, dtypes):
+                frame[name] = pd.array(col, dtype=dtype)
+            yield pd.DataFrame(frame)
+
+    return df.select(id_col, payload_col).mapInPandas(kernel, schema=out_schema)
+
+
+def _synth_kernel(df: DataFrame, id_col: str, build: Callable[[int], bytes]) -> DataFrame:
+    """One synthesized ``payload`` per id, ``build(doc_id) -> bytes``,
+    in an Arrow-batched kernel; the ids fan out first so the synthesis
+    runs on every core."""
+    out_schema = StructType(
+        [df.schema[id_col], StructField("payload", BinaryType(), True)]
+    )
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col],
+                    "payload": [build(int(d)) for d in pdf[id_col]],
+                }
+            )
+
+    return fan_out(df.select(id_col)).mapInPandas(kernel, schema=out_schema)
+
+
+# --- WAV ------------------------------------------------------------------
+
+def _wav_payload(doc_id: int, sample_rate: int) -> bytes:
+    n_frames = 160 + (doc_id % 41) * 40
+    amp = 1000 + (doc_id % 100) * 100
+    i = np.arange(n_frames)
+    samples = np.where(i % 8 < 4, amp, -amp).astype("<i2")
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(sample_rate)
+        w.writeframes(samples.tobytes())
+    return buf.getvalue()
+
+
 def synth_wav_payload(df: DataFrame, id_col: str, sample_rate: int = 8000) -> DataFrame:
     """Deterministic PCM WAV synthesis (16-bit mono square wave) as an
     Arrow-batched kernel — the test-data generator for the REAL audio
@@ -147,37 +259,26 @@ def synth_wav_payload(df: DataFrame, id_col: str, sample_rate: int = 8000) -> Da
     multiples that keep every sample at exactly +/-amp, so downstream
     features have closed forms an SQL oracle can state without parsing
     bytes. Container-WAV via stdlib ``wave`` — no external codec."""
-    from pyspark.sql.types import BinaryType
+    return _synth_kernel(df, id_col, lambda d: _wav_payload(d, sample_rate))
 
-    out_schema = StructType(
-        [df.schema[id_col], StructField("payload", BinaryType(), True)]
-    )
-    id_name = id_col
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave as wavmod
-
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf[id_name]:
-                did = int(did)
-                n_frames = 160 + (did % 41) * 40
-                amp = 1000 + (did % 100) * 100
-                i = np.arange(n_frames)
-                samples = np.where(i % 8 < 4, amp, -amp).astype("<i2")
-                buf = io.BytesIO()
-                with wavmod.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(2)
-                    w.setframerate(sample_rate)
-                    w.writeframes(samples.tobytes())
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame({id_name: pdf[id_name], "payload": payloads})
-
-    return fan_out(df.select(id_name)).mapInPandas(kernel, schema=out_schema)
+def _wav_features(buf: bytes) -> tuple:
+    with wave.open(io.BytesIO(buf), "rb") as w:
+        ch, width, rate, nf = (
+            w.getnchannels(), w.getsampwidth(), w.getframerate(), w.getnframes(),
+        )
+        raw = w.readframes(nf)
+    # stdlib wave trusts the header frame count and returns
+    # whatever bytes exist: a TRUNCATED payload would otherwise
+    # produce a self-inconsistent row (n_frames from the header,
+    # rms/peak over fewer actual samples). Treat short data as
+    # malformed -> quarantined under on_error='null'.
+    if len(raw) != nf * width * ch:
+        raise ValueError("truncated PCM data")
+    a = np.frombuffer(raw, dtype="<i2" if width == 2 else "u1").astype(np.float64)
+    rms = math.sqrt(float(np.mean(a * a))) if a.size else 0.0
+    peak = int(np.max(np.abs(a))) if a.size else 0
+    return ch, rate, nf, nf * 1000 // rate, rms, peak
 
 
 def decode_wav_features(
@@ -190,77 +291,45 @@ def decode_wav_features(
     int16 sample array -> RMS amplitude and peak. This is the actual
     decode stage of the audio pipeline, not plumbing. Same scale shape
     as `binary_features`: column-in/column-out, no shuffle, payloads
-    never touch the driver. ``on_error='null'`` (here and in the BMP /
-    y4m decoders) routes malformed payloads to all-null feature rows
-    instead of failing the task — the media dead-letter pattern,
-    mirroring the JSONL corrupt-record channel; filter
-    ``n_frames IS NULL`` downstream to quarantine."""
-    from pyspark.sql.types import DoubleType
+    never touch the driver. ``on_error='null'`` routes malformed
+    payloads to all-null feature rows, like every decoder here
+    (`_decode_kernel`); filter ``n_frames IS NULL`` downstream to
+    quarantine."""
+    fields = [
+        ("n_channels", _LONG), ("sample_rate", _LONG), ("n_frames", _LONG),
+        ("duration_ms", _LONG), ("rms", _DOUBLE), ("peak", _LONG),
+    ]
+    return _decode_kernel(df, id_col, payload_col, fields, _wav_features, on_error)
 
-    out_schema = StructType(
-        [
-            df.schema[id_col],
-            StructField("n_channels", LongType(), True),
-            StructField("sample_rate", LongType(), True),
-            StructField("n_frames", LongType(), True),
-            StructField("duration_ms", LongType(), True),
-            StructField("rms", DoubleType(), True),
-            StructField("peak", LongType(), True),
-        ]
+
+# --- BMP ------------------------------------------------------------------
+
+def _synth_gradient(doc_id: int) -> np.ndarray:
+    """The BMP/PNG twins' (h, w, 3) RGB image: w = 8 + id%8,
+    h = 4 + id%4; R = id%100 + row, G = id%50 + col, B = id%200."""
+    w, h = 8 + doc_id % 8, 4 + doc_id % 4
+    rows = np.arange(h).reshape(h, 1)
+    cols = np.arange(w).reshape(1, w)
+    r = (doc_id % 100 + rows + np.zeros_like(cols)).astype(np.uint8)
+    g = (doc_id % 50 + cols + np.zeros_like(rows)).astype(np.uint8)
+    b = np.full((h, w), doc_id % 200, dtype=np.uint8)
+    return np.stack([r, g, b], axis=-1)
+
+
+def _bmp_payload(doc_id: int) -> bytes:
+    bgr = _synth_gradient(doc_id)[..., ::-1]  # BMP stores BGR
+    h, w = bgr.shape[:2]
+    stride = (w * 3 + 3) // 4 * 4
+    body = bytearray()
+    for row in range(h - 1, -1, -1):  # bottom-up
+        line = bgr[row].tobytes()
+        body += line + b"\x00" * (stride - len(line))
+    pix_off = 14 + 40
+    info = struct.pack(
+        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0
     )
-    id_name = id_col
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import math
-        import wave as wavmod
-
-        import numpy as np
-
-        def decode(b):
-            if b is None:
-                return (None,) * 6
-            with wavmod.open(io.BytesIO(bytes(b)), "rb") as w:
-                ch, width, rate, nf = (
-                    w.getnchannels(), w.getsampwidth(), w.getframerate(), w.getnframes(),
-                )
-                raw = w.readframes(nf)
-            # stdlib wave trusts the header frame count and returns
-            # whatever bytes exist: a TRUNCATED payload would otherwise
-            # produce a self-inconsistent row (n_frames from the header,
-            # rms/peak over fewer actual samples). Treat short data as
-            # malformed -> quarantined under on_error='null'.
-            if len(raw) != nf * width * ch:
-                raise ValueError("truncated PCM data")
-            a = np.frombuffer(raw, dtype="<i2" if width == 2 else "u1").astype(np.float64)
-            rms = math.sqrt(float(np.mean(a * a))) if a.size else 0.0
-            peak = int(np.max(np.abs(a))) if a.size else 0
-            return ch, rate, nf, nf * 1000 // rate, rms, peak
-
-        def _safe(b):
-            try:
-                return decode(b)
-            except Exception:
-                if on_error == "raise":
-                    raise
-                return (None,) * 6
-
-        for pdf in batches:
-            rows = [_safe(b) for b in pdf[payload_col]]
-            cols = list(zip(*rows)) if rows else [[]] * 6
-            yield pd.DataFrame(
-                {
-                    id_name: pdf[id_name],
-                    "n_channels": cols[0],
-                    "sample_rate": cols[1],
-                    "n_frames": cols[2],
-                    "duration_ms": cols[3],
-                    "rms": cols[4],
-                    "peak": cols[5],
-                }
-            )
-
-    return df.select(id_name, payload_col).mapInPandas(kernel, schema=out_schema)
+    head = struct.pack("<2sIHHI", b"BM", pix_off + len(body), 0, 0, pix_off)
+    return bytes(head + info + body)
 
 
 def synth_bmp_payload(df: DataFrame, id_col: str) -> DataFrame:
@@ -272,47 +341,36 @@ def synth_bmp_payload(df: DataFrame, id_col: str) -> DataFrame:
     SQL oracle can state without parsing bytes. Real BMP container:
     14-byte file header + BITMAPINFOHEADER, bottom-up BGR rows padded
     to 4-byte stride — written with struct/numpy, no codec library."""
-    import struct
+    return _synth_kernel(df, id_col, _bmp_payload)
 
-    from pyspark.sql.types import BinaryType
 
-    out_schema = StructType(
-        [df.schema[id_col], StructField("payload", BinaryType(), True)]
-    )
-    id_name = id_col
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def build(did: int) -> bytes:
-            w, h = 8 + did % 8, 4 + did % 4
-            rows = np.arange(h).reshape(h, 1)
-            cols = np.arange(w).reshape(1, w)
-            r = (did % 100 + rows + np.zeros_like(cols)).astype(np.uint8)
-            g = (did % 50 + cols + np.zeros_like(rows)).astype(np.uint8)
-            b = np.full((h, w), did % 200, dtype=np.uint8)
-            bgr = np.stack([b, g, r], axis=-1)  # BMP stores BGR
-            stride = (w * 3 + 3) // 4 * 4
-            body = bytearray()
-            for row in range(h - 1, -1, -1):  # bottom-up
-                line = bgr[row].tobytes()
-                body += line + b"\x00" * (stride - len(line))
-            pix_off = 14 + 40
-            info = struct.pack(
-                "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0
-            )
-            head = struct.pack("<2sIHHI", b"BM", pix_off + len(body), 0, 0, pix_off)
-            return bytes(head + info + body)
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_name: pdf[id_name],
-                    "payload": [build(int(d)) for d in pdf[id_name]],
-                }
-            )
-
-    return fan_out(df.select(id_name)).mapInPandas(kernel, schema=out_schema)
+def _bmp_features(buf: bytes) -> tuple:
+    magic, _size, _r1, _r2, pix_off = struct.unpack_from("<2sIHHI", buf, 0)
+    if magic != b"BM":
+        raise ValueError("not a BMP payload")
+    _hs, w, h, _planes, bpp = struct.unpack_from("<IiiHH", buf, 14)
+    if bpp != 24:
+        raise ValueError(f"unsupported bpp {bpp}")
+    # corrupt-header quarantine: zero/negative width would mean
+    # empty pixel rows downstream (NaN means — a garbage row,
+    # not an error), and a SHRUNK width/height still "decodes"
+    # over a subset of the real pixels — plausible-looking but
+    # wrong. Dims must be positive and exactly fill the file.
+    if not (w > 0 and h != 0):
+        raise ValueError(f"bad BMP dims {w}x{h}")
+    flipped = h > 0  # positive height = bottom-up rows
+    h = abs(h)
+    stride = (w * 3 + 3) // 4 * 4
+    if pix_off + stride * h != len(buf):
+        raise ValueError("pixel data size mismatch")
+    rows = np.frombuffer(
+        buf, dtype=np.uint8, count=stride * h, offset=pix_off
+    ).reshape(h, stride)[:, : w * 3]
+    img = rows.reshape(h, w, 3)
+    if flipped:
+        img = img[::-1]
+    means = img.reshape(-1, 3).mean(axis=0)  # B, G, R
+    return w, h, w * h, float(means[2]), float(means[1]), float(means[0])
 
 
 def decode_bmp_features(
@@ -323,82 +381,24 @@ def decode_bmp_features(
     struct/numpy inside an Arrow-batched kernel (no codec library):
     file + info header fields, then the padded bottom-up BGR pixel rows
     to a (h, w, 3) array, reporting dimensions and exact per-channel
-    means. Together with `decode_wav_features` this makes two of the
-    three modalities' decode paths real; only compressed codecs
-    (JPEG/PNG/H.264) still need external libraries (`decode_media`
-    stub). Same scale shape: column-in/column-out, no shuffle, no
+    means. Same scale shape and dead-letter option as every decoder
+    here (`_decode_kernel`): column-in/column-out, no shuffle, no
     driver I/O."""
-    import struct
+    return _decode_kernel(df, id_col, payload_col, _RGB_MEANS, _bmp_features, on_error)
 
-    from pyspark.sql.types import DoubleType
 
-    out_schema = StructType(
-        [
-            df.schema[id_col],
-            StructField("width", LongType(), True),
-            StructField("height", LongType(), True),
-            StructField("n_pixels", LongType(), True),
-            StructField("mean_r", DoubleType(), True),
-            StructField("mean_g", DoubleType(), True),
-            StructField("mean_b", DoubleType(), True),
-        ]
-    )
-    id_name = id_col
+# --- y4m ------------------------------------------------------------------
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def decode(buf):
-            if buf is None:
-                return (None,) * 6
-            buf = bytes(buf)
-            magic, _size, _r1, _r2, pix_off = struct.unpack_from("<2sIHHI", buf, 0)
-            assert magic == b"BM", "not a BMP payload"
-            _hs, w, h, _planes, bpp = struct.unpack_from("<IiiHH", buf, 14)
-            assert bpp == 24, f"unsupported bpp {bpp}"
-            # corrupt-header quarantine: zero/negative width would mean
-            # empty pixel rows downstream (NaN means — a garbage row,
-            # not an error), and a SHRUNK width/height still "decodes"
-            # over a subset of the real pixels — plausible-looking but
-            # wrong. Dims must be positive and exactly fill the file.
-            assert w > 0 and h != 0, f"bad BMP dims {w}x{h}"
-            flipped = h > 0  # positive height = bottom-up rows
-            h = abs(h)
-            stride = (w * 3 + 3) // 4 * 4
-            assert pix_off + stride * h == len(buf), "pixel data size mismatch"
-            rows = np.frombuffer(
-                buf, dtype=np.uint8, count=stride * h, offset=pix_off
-            ).reshape(h, stride)[:, : w * 3]
-            img = rows.reshape(h, w, 3)
-            if flipped:
-                img = img[::-1]
-            means = img.reshape(-1, 3).mean(axis=0)  # B, G, R
-            return w, h, w * h, float(means[2]), float(means[1]), float(means[0])
-
-        def _safe(b):
-            try:
-                return decode(b)
-            except Exception:
-                if on_error == "raise":
-                    raise
-                return (None,) * 6
-
-        for pdf in batches:
-            out = [_safe(b) for b in pdf[payload_col]]
-            cols = list(zip(*out)) if out else [[]] * 6
-            yield pd.DataFrame(
-                {
-                    id_name: pdf[id_name],
-                    "width": cols[0],
-                    "height": cols[1],
-                    "n_pixels": cols[2],
-                    "mean_r": cols[3],
-                    "mean_g": cols[4],
-                    "mean_b": cols[5],
-                }
-            )
-
-    return df.select(id_name, payload_col).mapInPandas(kernel, schema=out_schema)
+def _y4m_payload(doc_id: int) -> bytes:
+    w, h = 8 + (doc_id % 4) * 2, 4 + (doc_id % 2) * 2
+    nf = 2 + doc_id % 5
+    out = bytearray(f"YUV4MPEG2 W{w} H{h} F25:1 Ip A1:1 C420jpeg\n".encode())
+    chroma = bytes([128]) * ((w // 2) * (h // 2))
+    for f in range(nf):
+        out += b"FRAME\n"
+        out += bytes([doc_id % 200 + f]) * (w * h)  # Y plane
+        out += chroma + chroma  # U, V planes
+    return bytes(out)
 
 
 def synth_y4m_payload(df: DataFrame, id_col: str) -> DataFrame:
@@ -410,34 +410,46 @@ def synth_y4m_payload(df: DataFrame, id_col: str) -> DataFrame:
     no wrap) and chroma is constant 128, so the decoded global luma mean
     has the closed form id%200 + (n_frames-1)/2 — a dyadic rational the
     SQL oracle states exactly. No codec library involved."""
-    from pyspark.sql.types import BinaryType
+    return _synth_kernel(df, id_col, _y4m_payload)
 
-    out_schema = StructType(
-        [df.schema[id_col], StructField("payload", BinaryType(), True)]
-    )
-    id_name = id_col
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def build(did: int) -> bytes:
-            w, h = 8 + (did % 4) * 2, 4 + (did % 2) * 2
-            nf = 2 + did % 5
-            out = bytearray(f"YUV4MPEG2 W{w} H{h} F25:1 Ip A1:1 C420jpeg\n".encode())
-            chroma = bytes([128]) * ((w // 2) * (h // 2))
-            for f in range(nf):
-                out += b"FRAME\n"
-                out += bytes([did % 200 + f]) * (w * h)  # Y plane
-                out += chroma + chroma  # U, V planes
-            return bytes(out)
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_name: pdf[id_name],
-                    "payload": [build(int(d)) for d in pdf[id_name]],
-                }
-            )
-
-    return fan_out(df.select(id_name)).mapInPandas(kernel, schema=out_schema)
+def _y4m_features(buf: bytes) -> tuple:
+    nl = buf.index(b"\n")
+    header = buf[:nl].decode("ascii").split(" ")
+    if header[0] != "YUV4MPEG2":
+        raise ValueError("not a y4m payload")
+    w = h = None
+    fps = None
+    cs = "420"
+    for tok in header[1:]:
+        if tok.startswith("W"):
+            w = int(tok[1:])
+        elif tok.startswith("H"):
+            h = int(tok[1:])
+        elif tok.startswith("F"):
+            num, den = tok[1:].split(":")
+            fps = int(num) / int(den)
+        elif tok.startswith("C"):
+            cs = tok[1:]
+    # w/h must be POSITIVE ints: "W-4" parses to a truthy -4 and
+    # frombuffer(count=w*h) would happily read 16 garbage bytes
+    if not (
+        w is not None and h is not None and w > 0 and h > 0
+        and cs.startswith("420")
+    ):
+        raise ValueError(f"unsupported y4m {header}")
+    frame_bytes = w * h + 2 * ((w // 2) * (h // 2))
+    pos, nf, y_sum = nl + 1, 0, 0
+    while pos < len(buf):
+        fnl = buf.index(b"\n", pos)
+        if buf[pos:fnl].split(b" ")[0] != b"FRAME":
+            raise ValueError("FRAME marker expected")
+        y = np.frombuffer(buf, dtype=np.uint8, count=w * h, offset=fnl + 1)
+        y_sum += int(y.sum(dtype=np.int64))
+        nf += 1
+        pos = fnl + 1 + frame_bytes
+    mean_y = y_sum / (w * h * nf) if nf else None
+    return w, h, nf, fps, mean_y
 
 
 def decode_y4m_features(
@@ -448,87 +460,13 @@ def decode_y4m_features(
     kernel (no codec library): stream header tokens (W/H/F/C), then a
     frame loop reading each FRAME marker + raw 4:2:0 planes, reporting
     frame count, dimensions, frame rate and the global luma mean over
-    all frames. Completes the modality set: WAV audio and BMP image
-    decode are real too; only compressed codecs (JPEG/H.264/Opus)
-    still require external libraries (`decode_media` stub)."""
-    from pyspark.sql.types import DoubleType
-
-    out_schema = StructType(
-        [
-            df.schema[id_col],
-            StructField("width", LongType(), True),
-            StructField("height", LongType(), True),
-            StructField("n_frames", LongType(), True),
-            StructField("fps", DoubleType(), True),
-            StructField("mean_y", DoubleType(), True),
-        ]
-    )
-    id_name = id_col
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def decode(buf):
-            if buf is None:
-                return (None,) * 5
-            buf = bytes(buf)
-            nl = buf.index(b"\n")
-            header = buf[:nl].decode("ascii").split(" ")
-            assert header[0] == "YUV4MPEG2", "not a y4m payload"
-            w = h = None
-            fps = None
-            cs = "420"
-            for tok in header[1:]:
-                if tok.startswith("W"):
-                    w = int(tok[1:])
-                elif tok.startswith("H"):
-                    h = int(tok[1:])
-                elif tok.startswith("F"):
-                    num, den = tok[1:].split(":")
-                    fps = int(num) / int(den)
-                elif tok.startswith("C"):
-                    cs = tok[1:]
-            # w/h must be POSITIVE ints: "W-4" parses to a truthy -4 and
-            # frombuffer(count=w*h) would happily read 16 garbage bytes
-            assert (
-                w is not None and h is not None and w > 0 and h > 0
-                and cs.startswith("420")
-            ), f"unsupported y4m {header}"
-            frame_bytes = w * h + 2 * ((w // 2) * (h // 2))
-            pos, nf, y_sum = nl + 1, 0, 0
-            while pos < len(buf):
-                fnl = buf.index(b"\n", pos)
-                assert buf[pos:fnl].split(b" ")[0] == b"FRAME"
-                y = np.frombuffer(buf, dtype=np.uint8, count=w * h, offset=fnl + 1)
-                y_sum += int(y.sum(dtype=np.int64))
-                nf += 1
-                pos = fnl + 1 + frame_bytes
-            mean_y = y_sum / (w * h * nf) if nf else None
-            return w, h, nf, fps, mean_y
-
-        def _safe(b):
-            try:
-                return decode(b)
-            except Exception:
-                if on_error == "raise":
-                    raise
-                return (None,) * 5
-
-        for pdf in batches:
-            out = [_safe(b) for b in pdf[payload_col]]
-            cols = list(zip(*out)) if out else [[]] * 5
-            yield pd.DataFrame(
-                {
-                    id_name: pdf[id_name],
-                    "width": cols[0],
-                    "height": cols[1],
-                    "n_frames": cols[2],
-                    "fps": cols[3],
-                    "mean_y": cols[4],
-                }
-            )
-
-    return df.select(id_name, payload_col).mapInPandas(kernel, schema=out_schema)
+    all frames. Completes the modality set with the WAV audio and BMP
+    image decoders."""
+    fields = [
+        ("width", _LONG), ("height", _LONG), ("n_frames", _LONG),
+        ("fps", _DOUBLE), ("mean_y", _DOUBLE),
+    ]
+    return _decode_kernel(df, id_col, payload_col, fields, _y4m_features, on_error)
 
 
 # --- PNG (the one COMPRESSED codec the stdlib can handle: DEFLATE via
@@ -588,14 +526,30 @@ def _png_unfilter_row(ftype: int, filt: bytes, prior: bytes, bpp: int = 3) -> by
 
 
 def _png_chunk(ctype: bytes, data: bytes) -> bytes:
-    import struct
-    import zlib
-
     return (
         struct.pack(">I", len(data))
         + ctype
         + data
         + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
+    )
+
+
+def _png_payload(doc_id: int) -> bytes:
+    img = _synth_gradient(doc_id)  # PNG stores RGB
+    h, w = img.shape[:2]
+    scan = bytearray()
+    prior = bytes(w * 3)
+    for row in range(h):
+        raw = img[row].tobytes()
+        ftype = row % 5
+        scan += bytes([ftype]) + _png_filter_row(ftype, raw, prior)
+        prior = raw
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + _png_chunk(b"IHDR", ihdr)
+        + _png_chunk(b"IDAT", zlib.compress(bytes(scan)))
+        + _png_chunk(b"IEND", b"")
     )
 
 
@@ -607,51 +561,45 @@ def synth_png_payload(df: DataFrame, id_col: str) -> DataFrame:
     closed forms THROUGH the compression: rows cycle all five PNG
     filter types (row % 5) before zlib DEFLATE, so the decoder's
     defilter paths are all exercised on real data."""
-    import struct
-    import zlib
+    return _synth_kernel(df, id_col, _png_payload)
 
-    from pyspark.sql.types import BinaryType
 
-    out_schema = StructType(
-        [df.schema[id_col], StructField("payload", BinaryType(), True)]
-    )
-    id_name = id_col
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def build(did: int) -> bytes:
-            w, h = 8 + did % 8, 4 + did % 4
-            rows = np.arange(h).reshape(h, 1)
-            cols = np.arange(w).reshape(1, w)
-            r = (did % 100 + rows + np.zeros_like(cols)).astype(np.uint8)
-            g = (did % 50 + cols + np.zeros_like(rows)).astype(np.uint8)
-            b = np.full((h, w), did % 200, dtype=np.uint8)
-            img = np.stack([r, g, b], axis=-1)  # PNG stores RGB
-            scan = bytearray()
-            prior = bytes(w * 3)
-            for row in range(h):
-                raw = img[row].tobytes()
-                ftype = row % 5
-                scan += bytes([ftype]) + _png_filter_row(ftype, raw, prior)
-                prior = raw
-            ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-            return (
-                b"\x89PNG\r\n\x1a\n"
-                + _png_chunk(b"IHDR", ihdr)
-                + _png_chunk(b"IDAT", zlib.compress(bytes(scan)))
-                + _png_chunk(b"IEND", b"")
-            )
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_name: pdf[id_name],
-                    "payload": [build(int(d)) for d in pdf[id_name]],
-                }
-            )
-
-    return fan_out(df.select(id_name)).mapInPandas(kernel, schema=out_schema)
+def _png_features(buf: bytes) -> tuple:
+    if buf[:8] != b"\x89PNG\r\n\x1a\n":
+        raise ValueError("not a PNG payload")
+    pos, w = 8, None
+    idat = bytearray()
+    while pos < len(buf):
+        (ln,) = struct.unpack_from(">I", buf, pos)
+        ctype = buf[pos + 4 : pos + 8]
+        data = buf[pos + 8 : pos + 8 + ln]
+        if ctype == b"IHDR":
+            w, h, depth, ctyp = struct.unpack_from(">IIBB", data, 0)
+            if (depth, ctyp) != (8, 2):
+                raise ValueError("only 8-bit truecolor")
+        elif ctype == b"IDAT":
+            idat += data
+        elif ctype == b"IEND":
+            break
+        pos += 12 + ln
+    if w is None:
+        raise ValueError("missing IHDR")
+    scan = zlib.decompress(bytes(idat))
+    stride = w * 3
+    if len(scan) != h * (1 + stride):
+        raise ValueError("bad scanline length")
+    prior = bytes(stride)
+    rows = []
+    for row in range(h):
+        off = row * (1 + stride)
+        raw = _png_unfilter_row(
+            scan[off], scan[off + 1 : off + 1 + stride], prior
+        )
+        rows.append(np.frombuffer(raw, dtype=np.uint8))
+        prior = raw
+    img = np.stack(rows).reshape(h, w, 3)
+    means = img.reshape(-1, 3).mean(axis=0)  # R, G, B
+    return w, h, w * h, float(means[0]), float(means[1]), float(means[2])
 
 
 def decode_png_features(
@@ -662,90 +610,9 @@ def decode_png_features(
     the stdlib: signature + chunk walk (IHDR dims/type, IDAT
     concatenation), zlib INFLATE, then per-row defiltering (all five
     PNG filter types: None/Sub/Up/Average/Paeth) to the (h, w, 3)
-    pixel array and per-channel means. This shrinks the codec stub to
-    formats whose entropy coders the stdlib lacks (JPEG/H.264/Opus).
-    Same batch contract and dead-letter option as the other decoders."""
-    import struct
-    import zlib
-
-    from pyspark.sql.types import DoubleType
-
-    out_schema = StructType(
-        [
-            df.schema[id_col],
-            StructField("width", LongType(), True),
-            StructField("height", LongType(), True),
-            StructField("n_pixels", LongType(), True),
-            StructField("mean_r", DoubleType(), True),
-            StructField("mean_g", DoubleType(), True),
-            StructField("mean_b", DoubleType(), True),
-        ]
-    )
-    id_name = id_col
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def decode(buf):
-            if buf is None:
-                return (None,) * 6
-            buf = bytes(buf)
-            assert buf[:8] == b"\x89PNG\r\n\x1a\n", "not a PNG payload"
-            pos, w = 8, None
-            idat = bytearray()
-            while pos < len(buf):
-                (ln,) = struct.unpack_from(">I", buf, pos)
-                ctype = buf[pos + 4 : pos + 8]
-                data = buf[pos + 8 : pos + 8 + ln]
-                if ctype == b"IHDR":
-                    w, h, depth, ctyp = struct.unpack_from(">IIBB", data, 0)
-                    assert (depth, ctyp) == (8, 2), "only 8-bit truecolor"
-                elif ctype == b"IDAT":
-                    idat += data
-                elif ctype == b"IEND":
-                    break
-                pos += 12 + ln
-            assert w is not None, "missing IHDR"
-            scan = zlib.decompress(bytes(idat))
-            stride = w * 3
-            assert len(scan) == h * (1 + stride), "bad scanline length"
-            prior = bytes(stride)
-            rows = []
-            for row in range(h):
-                off = row * (1 + stride)
-                raw = _png_unfilter_row(
-                    scan[off], scan[off + 1 : off + 1 + stride], prior
-                )
-                rows.append(np.frombuffer(raw, dtype=np.uint8))
-                prior = raw
-            img = np.stack(rows).reshape(h, w, 3)
-            means = img.reshape(-1, 3).mean(axis=0)  # R, G, B
-            return w, h, w * h, float(means[0]), float(means[1]), float(means[2])
-
-        def _safe(b):
-            try:
-                return decode(b)
-            except Exception:
-                if on_error == "raise":
-                    raise
-                return (None,) * 6
-
-        for pdf in batches:
-            out = [_safe(b) for b in pdf[payload_col]]
-            cols = list(zip(*out)) if out else [[]] * 6
-            yield pd.DataFrame(
-                {
-                    id_name: pdf[id_name],
-                    "width": cols[0],
-                    "height": cols[1],
-                    "n_pixels": cols[2],
-                    "mean_r": cols[3],
-                    "mean_g": cols[4],
-                    "mean_b": cols[5],
-                }
-            )
-
-    return df.select(id_name, payload_col).mapInPandas(kernel, schema=out_schema)
+    pixel array and per-channel means. Same batch contract and
+    dead-letter option as the other decoders."""
+    return _decode_kernel(df, id_col, payload_col, _RGB_MEANS, _png_features, on_error)
 
 
 def resize_dims_plan(
@@ -898,6 +765,27 @@ _GIF_SYNTH_PALETTE = bytes(
 )
 
 
+def _gif_payload(doc_id: int) -> bytes:
+    w, h = 8 + doc_id % 8, 4 + doc_id % 4
+    idx = bytes(
+        doc_id % 40 + r + c for r in range(h) for c in range(w)
+    )
+    lzw = _lzw_encode(idx, 8)
+    blocks = bytearray()
+    for off in range(0, len(lzw), 255):
+        chunk = lzw[off : off + 255]
+        blocks += bytes([len(chunk)]) + chunk
+    return (
+        b"GIF89a"
+        + struct.pack("<HHBBB", w, h, 0xF7, 0, 0)  # GCT, 256 entries
+        + _GIF_SYNTH_PALETTE
+        + b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
+        + bytes([8])  # LZW min code size
+        + bytes(blocks)
+        + b"\x00\x3b"
+    )
+
+
 def synth_gif_payload(df: DataFrame, id_col: str) -> DataFrame:
     """Deterministic GIF89a synthesis — the test-data twin for the GIF
     decode. 8-bit palette image, palette entry i = (i, 2i, 3i); pixel
@@ -909,45 +797,51 @@ def synth_gif_payload(df: DataFrame, id_col: str) -> DataFrame:
     mean_idx = id%40 + (h-1)/2 + (w-1)/2, channel means
     = (1x, 2x, 3x) mean_idx. Same gradient geometry as the BMP/PNG
     twins (w = 8 + id%8, h = 4 + id%4)."""
-    import struct
+    return _synth_kernel(df, id_col, _gif_payload)
 
-    from pyspark.sql.types import BinaryType
 
-    out_schema = StructType(
-        [df.schema[id_col], StructField("payload", BinaryType(), True)]
-    )
-    id_name = id_col
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def build(did: int) -> bytes:
-            w, h = 8 + did % 8, 4 + did % 4
-            idx = bytes(
-                did % 40 + r + c for r in range(h) for c in range(w)
-            )
-            lzw = _lzw_encode(idx, 8)
-            blocks = bytearray()
-            for off in range(0, len(lzw), 255):
-                chunk = lzw[off : off + 255]
-                blocks += bytes([len(chunk)]) + chunk
-            return (
-                b"GIF89a"
-                + struct.pack("<HHBBB", w, h, 0xF7, 0, 0)  # GCT, 256 entries
-                + _GIF_SYNTH_PALETTE
-                + b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
-                + bytes([8])  # LZW min code size
-                + bytes(blocks)
-                + b"\x00\x3b"
-            )
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_name: pdf[id_name],
-                    "payload": [build(int(d)) for d in pdf[id_name]],
-                }
-            )
-
-    return fan_out(df.select(id_name)).mapInPandas(kernel, schema=out_schema)
+def _gif_features(buf: bytes) -> tuple:
+    if buf[:6] not in (b"GIF89a", b"GIF87a"):
+        raise ValueError("not a GIF payload")
+    sw, sh, packed, _bg, _ar = struct.unpack_from("<HHBBB", buf, 6)
+    pos = 13
+    if not packed & 0x80:
+        raise ValueError("global color table required")
+    gct_len = 2 << (packed & 0x07)
+    palette = np.frombuffer(
+        buf[pos : pos + 3 * gct_len], dtype=np.uint8
+    ).reshape(gct_len, 3)
+    pos += 3 * gct_len
+    while True:
+        marker = buf[pos]
+        if marker == 0x21:  # extension: label + sub-blocks
+            pos += 2
+            while buf[pos] != 0:
+                pos += 1 + buf[pos]
+            pos += 1
+        elif marker == 0x2C:
+            break
+        else:
+            raise ValueError("unexpected GIF block")
+    _l, _t, w, h, ipacked = struct.unpack_from("<HHHHB", buf, pos + 1)
+    if ipacked & 0x80:
+        raise ValueError("local color tables unsupported")
+    if ipacked & 0x40:
+        raise ValueError("interlace unsupported")
+    pos += 10
+    min_code = buf[pos]
+    pos += 1
+    lzw = bytearray()
+    while buf[pos] != 0:
+        ln = buf[pos]
+        lzw += buf[pos + 1 : pos + 1 + ln]
+        pos += 1 + ln
+    idx = _lzw_decode(bytes(lzw), min_code)
+    if len(idx) != w * h:
+        raise ValueError("decoded pixel count mismatch")
+    rgb = palette[np.frombuffer(idx, dtype=np.uint8)]
+    means = rgb.astype(np.float64).mean(axis=0)
+    return w, h, w * h, float(means[0]), float(means[1]), float(means[2])
 
 
 def decode_gif_features(
@@ -961,104 +855,25 @@ def decode_gif_features(
     dead-letter option as the other decoders. (Single-image,
     non-interlaced, global-palette GIFs — the synth twin's envelope;
     extension blocks are skipped per spec.)"""
-    import struct
-
-    from pyspark.sql.types import DoubleType
-
-    out_schema = StructType(
-        [
-            df.schema[id_col],
-            StructField("width", LongType(), True),
-            StructField("height", LongType(), True),
-            StructField("n_pixels", LongType(), True),
-            StructField("mean_r", DoubleType(), True),
-            StructField("mean_g", DoubleType(), True),
-            StructField("mean_b", DoubleType(), True),
-        ]
-    )
-    id_name = id_col
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def decode(buf):
-            if buf is None:
-                return (None,) * 6
-            buf = bytes(buf)
-            assert buf[:6] in (b"GIF89a", b"GIF87a"), "not a GIF payload"
-            sw, sh, packed, _bg, _ar = struct.unpack_from("<HHBBB", buf, 6)
-            pos = 13
-            assert packed & 0x80, "global color table required"
-            gct_len = 2 << (packed & 0x07)
-            palette = np.frombuffer(
-                buf[pos : pos + 3 * gct_len], dtype=np.uint8
-            ).reshape(gct_len, 3)
-            pos += 3 * gct_len
-            while True:
-                marker = buf[pos]
-                if marker == 0x21:  # extension: label + sub-blocks
-                    pos += 2
-                    while buf[pos] != 0:
-                        pos += 1 + buf[pos]
-                    pos += 1
-                elif marker == 0x2C:
-                    break
-                else:
-                    raise ValueError("unexpected GIF block")
-            _l, _t, w, h, ipacked = struct.unpack_from("<HHHHB", buf, pos + 1)
-            assert not (ipacked & 0x80), "local color tables unsupported"
-            assert not (ipacked & 0x40), "interlace unsupported"
-            pos += 10
-            min_code = buf[pos]
-            pos += 1
-            lzw = bytearray()
-            while buf[pos] != 0:
-                ln = buf[pos]
-                lzw += buf[pos + 1 : pos + 1 + ln]
-                pos += 1 + ln
-            idx = _lzw_decode(bytes(lzw), min_code)
-            assert len(idx) == w * h, "decoded pixel count mismatch"
-            rgb = palette[np.frombuffer(idx, dtype=np.uint8)]
-            means = rgb.astype(np.float64).mean(axis=0)
-            return w, h, w * h, float(means[0]), float(means[1]), float(means[2])
-
-        def _safe(b):
-            try:
-                return decode(b)
-            except Exception:
-                if on_error == "raise":
-                    raise
-                return (None,) * 6
-
-        for pdf in batches:
-            feats = [_safe(b) for b in pdf[payload_col]]
-            cols = list(zip(*feats)) if feats else [[]] * 6
-            yield pd.DataFrame(
-                {
-                    id_name: pdf[id_name],
-                    "width": pd.array(cols[0], dtype="Int64"),
-                    "height": pd.array(cols[1], dtype="Int64"),
-                    "n_pixels": pd.array(cols[2], dtype="Int64"),
-                    "mean_r": pd.array(cols[3], dtype="float64"),
-                    "mean_g": pd.array(cols[4], dtype="float64"),
-                    "mean_b": pd.array(cols[5], dtype="float64"),
-                }
-            )
-
-    return df.mapInPandas(kernel, schema=out_schema)
+    return _decode_kernel(df, id_col, payload_col, _RGB_MEANS, _gif_features, on_error)
 
 
-# --- JPEG (baseline, grayscale) -------------------------------------------
+# --- JPEG (baseline) --------------------------------------------------------
 # The THIRD real compressed codec, with the ENTROPY CODER written from
 # scratch: JFIF marker parse, DQT/SOF0/DHT/SOS, canonical Huffman
 # decode of the MSB-first bitstream (0xFF byte-unstuffing), DC
 # difference coding, run/size AC symbols with EOB, de-zigzag,
-# dequantize, full 2D IDCT (numpy cosine basis), level shift. The
-# synth twin restricts CONTENT (each 8x8 block uniform, quant table
-# all ones) so the lossy pipeline is exactly invertible — every AC
-# coefficient quantizes to zero and a DC-only IDCT is DC/8 exactly —
-# giving the oracle closed forms while the decoder logic stays general
-# (any quant table, any DHT set, any run/size stream).
+# dequantize, full 2D IDCT (numpy cosine basis), level shift. One
+# parser (`_jpeg_baseline_planes`) serves grayscale and YCbCr 4:4:4
+# color: interleaved MCUs (one block per component per MCU position),
+# one DC difference predictor PER COMPONENT, per-component DHT/DQT
+# selectors honored from the file. The synth twins restrict CONTENT
+# (each 8x8 block uniform, quant table all ones) so the lossy pipeline
+# is exactly invertible — every AC coefficient quantizes to zero and a
+# DC-only IDCT is DC/8 exactly — giving the oracle closed forms while
+# the decoder logic stays general (any quant table, any DHT set, any
+# run/size stream). Color features stay in YCbCr space — no colorspace
+# conversion — so the roundtrip stays exact per channel.
 
 _JPEG_ZIGZAG = [
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
@@ -1073,6 +888,13 @@ _JPEG_DC_BITS = [0, 0, 0, 12, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
 _JPEG_DC_VALS = list(range(12))
 _JPEG_AC_BITS = [1] + [0] * 15
 _JPEG_AC_VALS = [0x00]  # EOB
+
+# orthonormal DCT-II basis; IDCT = C.T @ block @ C
+_k = np.arange(8)
+_JPEG_IDCT_C = np.cos((2 * _k[None, :] + 1) * _k[:, None] * np.pi / 16) * np.where(
+    _k[:, None] == 0, np.sqrt(1 / 8), np.sqrt(2 / 8)
+)
+del _k
 
 
 def _jpeg_canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
@@ -1089,6 +911,31 @@ def _jpeg_canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[i
     return out
 
 
+def _jpeg_read_dht(body: bytes, huff: dict) -> None:
+    """Add each table of one DHT segment to ``huff``:
+    (class, id) -> {(code, length): symbol}."""
+    off = 0
+    while off < len(body):
+        cls_id = body[off]
+        bits = list(body[off + 1 : off + 17])
+        nv = sum(bits)
+        vals = list(body[off + 17 : off + 17 + nv])
+        codes = _jpeg_canonical_codes(bits, vals)
+        huff[(cls_id >> 4, cls_id & 0x0F)] = {
+            (c, l): s for s, (c, l) in codes.items()
+        }
+        off += 17 + nv
+
+
+def _jpeg_idct_block(zz: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """De-zigzag and dequantize 64 coefficients, 2D IDCT, level shift
+    and clamp: one 8x8 block of uint8 pixels."""
+    coef = np.zeros(64, dtype=np.float64)
+    coef[_JPEG_ZIGZAG] = zz * q
+    block = _JPEG_IDCT_C.T @ coef.reshape(8, 8) @ _JPEG_IDCT_C
+    return np.clip(np.round(block + 128), 0, 255).astype(np.uint8)
+
+
 class _JpegBitWriter:
     def __init__(self) -> None:
         self.out = bytearray()
@@ -1099,7 +946,8 @@ class _JpegBitWriter:
         # an over-wide code here means a BROKEN Huffman table (canonical
         # assignment spilled past the length's code space — a Kraft-sum
         # bug); silently masking it would emit an undecodable stream
-        assert 0 <= code < (1 << length), f"code {code} overflows {length} bits"
+        if not 0 <= code < (1 << length):
+            raise ValueError(f"code {code} overflows {length} bits")
         self.acc = (self.acc << length) | (code & ((1 << length) - 1))
         self.n += length
         while self.n >= 8:
@@ -1170,6 +1018,74 @@ def _jpeg_extend(bits: int, t: int) -> int:
     return bits if bits >= (1 << (t - 1)) else bits - (1 << t) + 1
 
 
+# --- JPEG synthesis: shared segments and symbol writers ---------------------
+
+_JPEG_DC_CODES = _jpeg_canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
+_JPEG_AC_CODES = _jpeg_canonical_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
+
+
+def _jpeg_seg(marker: int, payload: bytes) -> bytes:
+    return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
+
+
+_JPEG_SYNTH_DQT = _jpeg_seg(0xDB, bytes([0x00]) + bytes([1] * 64))
+_JPEG_SYNTH_DHT_DC = _jpeg_seg(
+    0xC4, bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
+)
+
+
+def _jpeg_put_dc(wr: _JpegBitWriter, diff: int) -> None:
+    """One DC difference: its category's code, then the amplitude bits."""
+    t, amp = _jpeg_amplitude(diff)
+    wr.put(*_JPEG_DC_CODES[t])
+    if t:
+        wr.put(amp, t)
+
+
+def _jpeg_baseline_payload(w: int, h: int, block_values) -> bytes:
+    """A baseline JFIF of uniform 8x8 blocks (q = all ones):
+    ``block_values(bi, bj)`` gives each component's value in block
+    (bi, bj); one value makes a grayscale file, three a 4:4:4 one."""
+    ncomp = len(block_values(0, 0))
+    wr = _JpegBitWriter()
+    prev = [0] * ncomp
+    for bi in range(h // 8):
+        for bj in range(w // 8):
+            for ci, v in enumerate(block_values(bi, bj)):
+                dc = 8 * (v - 128)  # DC of a uniform block, q=1
+                _jpeg_put_dc(wr, dc - prev[ci])
+                prev[ci] = dc
+                wr.put(*_JPEG_AC_CODES[0x00])  # EOB: all AC zero
+    scan = wr.flush()
+    cids = range(1, ncomp + 1)
+    return (
+        b"\xff\xd8"
+        + _JPEG_SYNTH_DQT
+        + _jpeg_seg(
+            0xC0,
+            struct.pack(">BHHB", 8, h, w, ncomp)
+            + b"".join(bytes([cid, 0x11, 0]) for cid in cids),
+        )
+        + _JPEG_SYNTH_DHT_DC
+        + _jpeg_seg(0xC4, bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS))
+        + _jpeg_seg(
+            0xDA,
+            bytes([ncomp])
+            + b"".join(bytes([cid, 0x00]) for cid in cids)
+            + bytes([0, 63, 0]),
+        )
+        + scan
+        + b"\xff\xd9"
+    )
+
+
+def _jpeg_payload(doc_id: int) -> bytes:
+    return _jpeg_baseline_payload(
+        8 * (1 + doc_id % 3), 8 * (1 + doc_id % 2),
+        lambda bi, bj: (100 + doc_id % 64 + 2 * bi + 3 * bj,),
+    )
+
+
 def synth_jpeg_payload(df: DataFrame, id_col: str) -> DataFrame:
     """Deterministic baseline-JFIF grayscale synthesis — the twin for
     the JPEG decode. Dimensions are block multiples (w = 8*(1 + id%3),
@@ -1177,60 +1093,119 @@ def synth_jpeg_payload(df: DataFrame, id_col: str) -> DataFrame:
     100 + id%64 + 2*block_row + 3*block_col, so all AC coefficients
     quantize to zero (q = all ones) and the roundtrip is exact:
     mean_gray = 100 + id%64 + (h/8 - 1) + 1.5*(w/8 - 1)."""
-    import struct
+    return _synth_kernel(df, id_col, _jpeg_payload)
 
-    from pyspark.sql.types import BinaryType
 
-    out_schema = StructType(
-        [df.schema[id_col], StructField("payload", BinaryType(), True)]
-    )
-    id_name = id_col
-    dc_codes = _jpeg_canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_canonical_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
+def _jpeg_baseline_planes(buf: bytes):
+    """THE baseline (SOF0) JPEG parser: marker walk (DQT/SOF0/DHT/SOS,
+    others skipped by length), canonical Huffman tables rebuilt FROM
+    THE FILE, MSB-first bit reader with 0xFF unstuffing, DC difference
+    + run/size AC decode, de-zigzag, dequantize, exact 2D IDCT via the
+    cosine basis matrix, level shift and clamp. One or three
+    components, no subsampling, no restart markers — raises otherwise.
+    Returns ``(w, h, ncomp, comp_order, planes)``: the SOF's component
+    count, the scan's component ids in order, and each component's
+    (h, w) uint8 plane by id."""
+    if buf[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG payload")
+    pos = 2
+    qts: dict[int, np.ndarray] = {}
+    w = h = None
+    comp_q: dict[int, int] = {}
+    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
+    comp_tabs: dict[int, tuple[int, int]] = {}
+    comp_order: list[int] = []
+    scan_start = None
+    while pos < len(buf):
+        if buf[pos] != 0xFF:
+            raise ValueError("marker expected")
+        marker = buf[pos + 1]
+        if marker == 0xD9:
+            break
+        (ln,) = struct.unpack_from(">H", buf, pos + 2)
+        body = buf[pos + 4 : pos + 2 + ln]
+        if marker == 0xDB:
+            if body[0] & 0xF0 != 0:
+                raise ValueError("8-bit quant table only")
+            qts[body[0] & 0x0F] = np.array(list(body[1:65]), dtype=np.int64)
+        elif marker == 0xC0:
+            prec, h, w, ncomp = struct.unpack_from(">BHHB", body, 0)
+            if not (prec == 8 and ncomp in (1, 3)):
+                raise ValueError("baseline 1/3-comp")
+            # per-component spec: id, sampling, qtable id
+            for ci in range(ncomp):
+                cid, samp, qid = body[6 + 3 * ci : 9 + 3 * ci]
+                if samp != 0x11:
+                    raise ValueError("no subsampling (4:4:4 only)")
+                comp_q[cid] = qid
+        elif marker == 0xC4:
+            _jpeg_read_dht(body, huff)
+        elif marker == 0xDA:
+            ns = body[0]
+            for ci in range(ns):
+                cid = body[1 + 2 * ci]
+                sel = body[2 + 2 * ci]
+                comp_tabs[cid] = (sel >> 4, sel & 0x0F)
+                comp_order.append(cid)
+            scan_start = pos + 2 + ln
+            break
+        pos += 2 + ln
+    if scan_start is None or w is None:
+        raise ValueError("no SOF0 frame or no scan")
+    end = buf.rindex(b"\xff\xd9")
+    rd = _JpegBitReader(buf[scan_start:end])
+    # per spec the scan carries ceil(w/8) x ceil(h/8) MCUs — decode
+    # into the padded grid, crop to (h, w) at the end, so
+    # non-multiple-of-8 images (the common case) decode exactly
+    # instead of silently truncating planes
+    nbw, nbh = (w + 7) // 8, (h + 7) // 8
+    # corrupt-SOF quarantine: zero dims would yield a NaN-mean
+    # garbage row; HUGE declared dims (e.g. 0xFFFF x 0xFFFF)
+    # would allocate a multi-GiB block grid BEFORE the bit
+    # reader could fail — an allocation bomb per corrupt row at
+    # scale. Each 8x8 block consumes >= 2 bits (DC code + EOB),
+    # so the entropy stream bounds the legal block count.
+    if not (w > 0 and h > 0):
+        raise ValueError(f"bad JPEG dims {w}x{h}")
+    if not nbw * nbh * max(1, len(comp_order)) <= 4 * (end - scan_start) + 64:
+        raise ValueError("declared dims exceed entropy stream capacity")
+    planes = {
+        cid: np.zeros((nbh * 8, nbw * 8), dtype=np.uint8)
+        for cid in comp_order
+    }
+    prev_dc = {cid: 0 for cid in comp_order}
+    for bi in range(nbh):
+        for bj in range(nbw):
+            for cid in comp_order:
+                dc_tab = huff[(0, comp_tabs[cid][0])]
+                ac_tab = huff[(1, comp_tabs[cid][1])]
+                zz = np.zeros(64, dtype=np.int64)
+                t = rd.huff(dc_tab)
+                prev_dc[cid] += _jpeg_extend(rd.bits(t), t)
+                zz[0] = prev_dc[cid]
+                i = 1
+                while i < 64:
+                    sym = rd.huff(ac_tab)
+                    if sym == 0x00:  # EOB
+                        break
+                    if sym == 0xF0:  # ZRL
+                        i += 16
+                        continue
+                    run, size = sym >> 4, sym & 0x0F
+                    i += run
+                    zz[i] = _jpeg_extend(rd.bits(size), size)
+                    i += 1
+                planes[cid][bi * 8 : bi * 8 + 8, bj * 8 : bj * 8 + 8] = (
+                    _jpeg_idct_block(zz, qts[comp_q[cid]])
+                )
+    return w, h, ncomp, comp_order, {cid: p[:h, :w] for cid, p in planes.items()}
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def build(did: int) -> bytes:
-            w, h = 8 * (1 + did % 3), 8 * (1 + did % 2)
-            nbw, nbh = w // 8, h // 8
-            wr = _JpegBitWriter()
-            prev_dc = 0
-            for bi in range(nbh):
-                for bj in range(nbw):
-                    v = 100 + did % 64 + 2 * bi + 3 * bj
-                    dc = 8 * (v - 128)  # DC of a uniform block, q=1
-                    t, amp = _jpeg_amplitude(dc - prev_dc)
-                    code, ln = dc_codes[t]
-                    wr.put(code, ln)
-                    if t:
-                        wr.put(amp, t)
-                    prev_dc = dc
-                    code, ln = ac_codes[0x00]  # EOB: all AC zero
-                    wr.put(code, ln)
-            scan = wr.flush()
 
-            def seg(marker: int, payload: bytes) -> bytes:
-                return bytes([0xFF, marker]) + struct.pack(
-                    ">H", len(payload) + 2
-                ) + payload
-
-            dqt = seg(0xDB, bytes([0x00]) + bytes([1] * 64))
-            sof = seg(0xC0, struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0]))
-            dht_dc = seg(0xC4, bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS))
-            dht_ac = seg(0xC4, bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS))
-            sos = seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-            return (
-                b"\xff\xd8" + dqt + sof + dht_dc + dht_ac + sos + scan + b"\xff\xd9"
-            )
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_name: pdf[id_name],
-                    "payload": [build(int(d)) for d in pdf[id_name]],
-                }
-            )
-
-    return fan_out(df.select(id_name)).mapInPandas(kernel, schema=out_schema)
+def _jpeg_features(buf: bytes) -> tuple:
+    w, h, ncomp, comp_order, planes = _jpeg_baseline_planes(buf)
+    if ncomp != 1:
+        raise ValueError("grayscale baseline only")
+    return w, h, w * h, float(planes[comp_order[0]].astype(np.float64).mean())
 
 
 def decode_jpeg_features(
@@ -1243,152 +1218,22 @@ def decode_jpeg_features(
     reader with 0xFF unstuffing, DC difference + run/size AC decode,
     de-zigzag, dequantize, exact 2D IDCT via the cosine basis matrix,
     level shift and clamp. Grayscale baseline (1 component, no
-    subsampling, no restart markers) — asserts otherwise. Features:
+    subsampling, no restart markers) — raises otherwise. Features:
     (width, height, n_pixels, mean_gray)."""
-    import struct
+    fields = _IMAGE_DIMS + [("mean_gray", _DOUBLE)]
+    return _decode_kernel(df, id_col, payload_col, fields, _jpeg_features, on_error)
 
-    from pyspark.sql.types import DoubleType
 
-    out_schema = StructType(
-        [
-            df.schema[id_col],
-            StructField("width", LongType(), True),
-            StructField("height", LongType(), True),
-            StructField("n_pixels", LongType(), True),
-            StructField("mean_gray", DoubleType(), True),
-        ]
+def _jpeg444_payload(doc_id: int) -> bytes:
+    return _jpeg_baseline_payload(
+        8 * (1 + doc_id % 3), 8 * (1 + doc_id % 2),
+        lambda bi, bj: (
+            90 + doc_id % 60 + 2 * bi + 3 * bj,
+            60 + doc_id % 40 + bi,
+            40 + doc_id % 30 + bj,
+        ),
     )
-    id_name = id_col
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        # orthonormal DCT-II basis; IDCT = C.T @ block @ C
-        k = np.arange(8)
-        C = np.cos((2 * k[None, :] + 1) * k[:, None] * np.pi / 16) * np.where(
-            k[:, None] == 0, np.sqrt(1 / 8), np.sqrt(2 / 8)
-        )
-
-        def decode(buf):
-            if buf is None:
-                return (None,) * 4
-            buf = bytes(buf)
-            assert buf[:2] == b"\xff\xd8", "not a JPEG payload"
-            pos = 2
-            qt = None
-            w = h = None
-            huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-            scan_start = None
-            while pos < len(buf):
-                assert buf[pos] == 0xFF, "marker expected"
-                marker = buf[pos + 1]
-                if marker == 0xD9:
-                    break
-                (ln,) = struct.unpack_from(">H", buf, pos + 2)
-                body = buf[pos + 4 : pos + 2 + ln]
-                if marker == 0xDB:
-                    assert body[0] & 0xF0 == 0, "8-bit quant table only"
-                    qt = np.array(list(body[1:65]), dtype=np.int64)
-                elif marker == 0xC0:
-                    prec, h, w, ncomp = struct.unpack_from(">BHHB", body, 0)
-                    assert (prec, ncomp) == (8, 1), "grayscale baseline only"
-                    # per-component spec follows: id, sampling, qtable id
-                    assert body[7] == 0x11, "no subsampling"
-                elif marker == 0xC4:
-                    off = 0
-                    while off < len(body):
-                        cls_id = body[off]
-                        bits = list(body[off + 1 : off + 17])
-                        nv = sum(bits)
-                        vals = list(body[off + 17 : off + 17 + nv])
-                        codes = _jpeg_canonical_codes(bits, vals)
-                        huff[(cls_id >> 4, cls_id & 0x0F)] = {
-                            (c, l): s for s, (c, l) in codes.items()
-                        }
-                        off += 17 + nv
-                elif marker == 0xDA:
-                    ndc, nac = body[2] >> 4, body[2] & 0x0F
-                    scan_start = pos + 2 + ln
-                    break
-                pos += 2 + ln
-            assert scan_start is not None and qt is not None and w is not None
-            end = buf.rindex(b"\xff\xd9")
-            rd = _JpegBitReader(buf[scan_start:end])
-            dc_tab, ac_tab = huff[(0, ndc)], huff[(1, nac)]
-            # per spec the scan carries ceil(w/8) x ceil(h/8) blocks —
-            # decode into the padded grid, crop to (h, w) at the end, so
-            # non-multiple-of-8 images (the common case) decode exactly
-            # instead of silently truncating planes
-            nbw, nbh = (w + 7) // 8, (h + 7) // 8
-            # corrupt-SOF quarantine: zero dims would yield a NaN-mean
-            # garbage row; HUGE declared dims (e.g. 0xFFFF x 0xFFFF)
-            # would allocate a multi-GiB block grid BEFORE the bit
-            # reader could fail — an allocation bomb per corrupt row at
-            # scale. Each 8x8 block consumes >= 2 bits (DC code + EOB),
-            # so the entropy stream bounds the legal block count.
-            assert w > 0 and h > 0, f"bad JPEG dims {w}x{h}"
-            assert nbw * nbh <= 4 * (end - scan_start) + 64, (
-                "declared dims exceed entropy stream capacity"
-            )
-            img = np.zeros((nbh * 8, nbw * 8), dtype=np.uint8)
-            prev_dc = 0
-            for bi in range(nbh):
-                for bj in range(nbw):
-                    zz = np.zeros(64, dtype=np.int64)
-                    t = rd.huff(dc_tab)
-                    prev_dc += _jpeg_extend(rd.bits(t), t)
-                    zz[0] = prev_dc
-                    i = 1
-                    while i < 64:
-                        sym = rd.huff(ac_tab)
-                        if sym == 0x00:  # EOB
-                            break
-                        if sym == 0xF0:  # ZRL
-                            i += 16
-                            continue
-                        run, size = sym >> 4, sym & 0x0F
-                        i += run
-                        zz[i] = _jpeg_extend(rd.bits(size), size)
-                        i += 1
-                    coef = np.zeros(64, dtype=np.float64)
-                    coef[_JPEG_ZIGZAG] = zz * qt
-                    block = C.T @ coef.reshape(8, 8) @ C
-                    px = np.clip(np.round(block + 128), 0, 255).astype(np.uint8)
-                    img[bi * 8 : bi * 8 + 8, bj * 8 : bj * 8 + 8] = px
-            img = img[:h, :w]
-            return w, h, w * h, float(img.astype(np.float64).mean())
-
-        def _safe(b):
-            try:
-                return decode(b)
-            except Exception:
-                if on_error == "raise":
-                    raise
-                return (None,) * 4
-
-        for pdf in batches:
-            feats = [_safe(b) for b in pdf[payload_col]]
-            cols = list(zip(*feats)) if feats else [[]] * 4
-            yield pd.DataFrame(
-                {
-                    id_name: pdf[id_name],
-                    "width": pd.array(cols[0], dtype="Int64"),
-                    "height": pd.array(cols[1], dtype="Int64"),
-                    "n_pixels": pd.array(cols[2], dtype="Int64"),
-                    "mean_gray": pd.array(cols[3], dtype="float64"),
-                }
-            )
-
-    return df.mapInPandas(kernel, schema=out_schema)
-
-
-# --- JPEG (baseline, YCbCr 4:4:4 color) -----------------------------------
-# Full-color extension of the grayscale baseline: three components with
-# no subsampling, interleaved MCUs (Y, Cb, Cr block per MCU position),
-# one DC difference predictor PER COMPONENT, per-component DHT/DQT
-# selectors honored from the file. Features stay in YCbCr space — no
-# colorspace conversion — so the uniform-block synth envelope keeps the
-# roundtrip exactly invertible per channel.
 
 def synth_jpeg444_payload(df: DataFrame, id_col: str) -> DataFrame:
     """Deterministic baseline-JFIF 4:4:4 color synthesis. Per-block
@@ -1398,69 +1243,18 @@ def synth_jpeg444_payload(df: DataFrame, id_col: str) -> DataFrame:
     mean_y = 90 + id%60 + (h/8-1) + 1.5*(w/8-1),
     mean_cb = 60 + id%40 + 0.5*(h/8-1), mean_cr = 40 + id%30 +
     0.5*(w/8-1)."""
-    import struct
+    return _synth_kernel(df, id_col, _jpeg444_payload)
 
-    from pyspark.sql.types import BinaryType
 
-    out_schema = StructType(
-        [df.schema[id_col], StructField("payload", BinaryType(), True)]
-    )
-    id_name = id_col
-    dc_codes = _jpeg_canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_canonical_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def build(did: int) -> bytes:
-            w, h = 8 * (1 + did % 3), 8 * (1 + did % 2)
-            nbw, nbh = w // 8, h // 8
-            wr = _JpegBitWriter()
-            prev = [0, 0, 0]
-            for bi in range(nbh):
-                for bj in range(nbw):
-                    chans = (
-                        90 + did % 60 + 2 * bi + 3 * bj,
-                        60 + did % 40 + bi,
-                        40 + did % 30 + bj,
-                    )
-                    for ci, v in enumerate(chans):
-                        dc = 8 * (v - 128)
-                        t, amp = _jpeg_amplitude(dc - prev[ci])
-                        code, ln = dc_codes[t]
-                        wr.put(code, ln)
-                        if t:
-                            wr.put(amp, t)
-                        prev[ci] = dc
-                        code, ln = ac_codes[0x00]
-                        wr.put(code, ln)
-            scan = wr.flush()
-
-            def seg(marker: int, payload: bytes) -> bytes:
-                return bytes([0xFF, marker]) + struct.pack(
-                    ">H", len(payload) + 2
-                ) + payload
-
-            comps = b"".join(bytes([cid, 0x11, 0]) for cid in (1, 2, 3))
-            sos_comps = b"".join(bytes([cid, 0x00]) for cid in (1, 2, 3))
-            return (
-                b"\xff\xd8"
-                + seg(0xDB, bytes([0x00]) + bytes([1] * 64))
-                + seg(0xC0, struct.pack(">BHHB", 8, h, w, 3) + comps)
-                + seg(0xC4, bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS))
-                + seg(0xC4, bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS))
-                + seg(0xDA, bytes([3]) + sos_comps + bytes([0, 63, 0]))
-                + scan
-                + b"\xff\xd9"
-            )
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_name: pdf[id_name],
-                    "payload": [build(int(d)) for d in pdf[id_name]],
-                }
-            )
-
-    return fan_out(df.select(id_name)).mapInPandas(kernel, schema=out_schema)
+def _jpeg444_features(buf: bytes) -> tuple:
+    w, h, _, comp_order, planes = _jpeg_baseline_planes(buf)
+    means = [
+        float(planes[cid].astype(np.float64).mean()) if cid in planes else None
+        for cid in (1, 2, 3)
+    ]
+    if len(comp_order) == 1:
+        means = [means[0], None, None]
+    return w, h, w * h, means[0], means[1], means[2]
 
 
 def decode_jpeg444_features(
@@ -1473,166 +1267,10 @@ def decode_jpeg444_features(
     exact cosine-basis IDCT per block. Features are per-channel means
     in YCbCr space (no colorspace conversion — the lossless part of
     the pipeline)."""
-    import struct
-
-    from pyspark.sql.types import DoubleType
-
-    out_schema = StructType(
-        [
-            df.schema[id_col],
-            StructField("width", LongType(), True),
-            StructField("height", LongType(), True),
-            StructField("n_pixels", LongType(), True),
-            StructField("mean_y", DoubleType(), True),
-            StructField("mean_cb", DoubleType(), True),
-            StructField("mean_cr", DoubleType(), True),
-        ]
-    )
-    id_name = id_col
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        k = np.arange(8)
-        C = np.cos((2 * k[None, :] + 1) * k[:, None] * np.pi / 16) * np.where(
-            k[:, None] == 0, np.sqrt(1 / 8), np.sqrt(2 / 8)
-        )
-
-        def decode(buf):
-            if buf is None:
-                return (None,) * 6
-            buf = bytes(buf)
-            assert buf[:2] == b"\xff\xd8", "not a JPEG payload"
-            pos = 2
-            qts: dict[int, "np.ndarray"] = {}
-            w = h = None
-            comp_q: dict[int, int] = {}
-            huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-            comp_tabs: dict[int, tuple[int, int]] = {}
-            comp_order: list[int] = []
-            scan_start = None
-            while pos < len(buf):
-                assert buf[pos] == 0xFF, "marker expected"
-                marker = buf[pos + 1]
-                if marker == 0xD9:
-                    break
-                (ln,) = struct.unpack_from(">H", buf, pos + 2)
-                body = buf[pos + 4 : pos + 2 + ln]
-                if marker == 0xDB:
-                    assert body[0] & 0xF0 == 0, "8-bit quant table only"
-                    qts[body[0] & 0x0F] = np.array(
-                        list(body[1:65]), dtype=np.int64
-                    )
-                elif marker == 0xC0:
-                    prec, h, w, ncomp = struct.unpack_from(">BHHB", body, 0)
-                    assert prec == 8 and ncomp in (1, 3), "baseline 1/3-comp"
-                    for ci in range(ncomp):
-                        cid, samp, qid = body[6 + 3 * ci : 9 + 3 * ci]
-                        assert samp == 0x11, "no subsampling (4:4:4 only)"
-                        comp_q[cid] = qid
-                elif marker == 0xC4:
-                    off = 0
-                    while off < len(body):
-                        cls_id = body[off]
-                        bits = list(body[off + 1 : off + 17])
-                        nv = sum(bits)
-                        vals = list(body[off + 17 : off + 17 + nv])
-                        codes = _jpeg_canonical_codes(bits, vals)
-                        huff[(cls_id >> 4, cls_id & 0x0F)] = {
-                            (c, l): s for s, (c, l) in codes.items()
-                        }
-                        off += 17 + nv
-                elif marker == 0xDA:
-                    ns = body[0]
-                    for ci in range(ns):
-                        cid = body[1 + 2 * ci]
-                        sel = body[2 + 2 * ci]
-                        comp_tabs[cid] = (sel >> 4, sel & 0x0F)
-                        comp_order.append(cid)
-                    scan_start = pos + 2 + ln
-                    break
-                pos += 2 + ln
-            assert scan_start is not None and w is not None
-            end = buf.rindex(b"\xff\xd9")
-            rd = _JpegBitReader(buf[scan_start:end])
-            # ceil-padded MCU grid per spec; planes cropped to (h, w)
-            # after the scan so non-block-multiple dims decode exactly
-            nbw, nbh = (w + 7) // 8, (h + 7) // 8
-            # same corrupt-SOF guards as the grayscale kernel (zero-dim
-            # NaN rows; huge-dim allocation bomb), scaled by blocks/MCU
-            assert w > 0 and h > 0, f"bad JPEG dims {w}x{h}"
-            assert nbw * nbh * max(1, len(comp_order)) <= 4 * (
-                end - scan_start
-            ) + 64, "declared dims exceed entropy stream capacity"
-            planes = {
-                cid: np.zeros((nbh * 8, nbw * 8), dtype=np.uint8)
-                for cid in comp_order
-            }
-            prev_dc = {cid: 0 for cid in comp_order}
-            for bi in range(nbh):
-                for bj in range(nbw):
-                    for cid in comp_order:
-                        dc_tab = huff[(0, comp_tabs[cid][0])]
-                        ac_tab = huff[(1, comp_tabs[cid][1])]
-                        zz = np.zeros(64, dtype=np.int64)
-                        t = rd.huff(dc_tab)
-                        prev_dc[cid] += _jpeg_extend(rd.bits(t), t)
-                        zz[0] = prev_dc[cid]
-                        i = 1
-                        while i < 64:
-                            sym = rd.huff(ac_tab)
-                            if sym == 0x00:
-                                break
-                            if sym == 0xF0:
-                                i += 16
-                                continue
-                            run, size = sym >> 4, sym & 0x0F
-                            i += run
-                            zz[i] = _jpeg_extend(rd.bits(size), size)
-                            i += 1
-                        coef = np.zeros(64, dtype=np.float64)
-                        coef[_JPEG_ZIGZAG] = zz * qts[comp_q[cid]]
-                        block = C.T @ coef.reshape(8, 8) @ C
-                        px = np.clip(np.round(block + 128), 0, 255).astype(
-                            np.uint8
-                        )
-                        planes[cid][
-                            bi * 8 : bi * 8 + 8, bj * 8 : bj * 8 + 8
-                        ] = px
-            means = [
-                float(planes[cid][:h, :w].astype(np.float64).mean())
-                if cid in planes
-                else None
-                for cid in (1, 2, 3)
-            ]
-            if len(comp_order) == 1:
-                means = [means[0], None, None]
-            return w, h, w * h, means[0], means[1], means[2]
-
-        def _safe(b):
-            try:
-                return decode(b)
-            except Exception:
-                if on_error == "raise":
-                    raise
-                return (None,) * 6
-
-        for pdf in batches:
-            feats = [_safe(b) for b in pdf[payload_col]]
-            cols = list(zip(*feats)) if feats else [[]] * 6
-            yield pd.DataFrame(
-                {
-                    id_name: pdf[id_name],
-                    "width": pd.array(cols[0], dtype="Int64"),
-                    "height": pd.array(cols[1], dtype="Int64"),
-                    "n_pixels": pd.array(cols[2], dtype="Int64"),
-                    "mean_y": pd.array(cols[3], dtype="float64"),
-                    "mean_cb": pd.array(cols[4], dtype="float64"),
-                    "mean_cr": pd.array(cols[5], dtype="float64"),
-                }
-            )
-
-    return df.mapInPandas(kernel, schema=out_schema)
+    fields = _IMAGE_DIMS + [
+        ("mean_y", _DOUBLE), ("mean_cb", _DOUBLE), ("mean_cr", _DOUBLE),
+    ]
+    return _decode_kernel(df, id_col, payload_col, fields, _jpeg444_features, on_error)
 
 
 # --- progressive JPEG (spectral selection) ---------------------------------
@@ -1646,7 +1284,7 @@ def decode_jpeg444_features(
 # and this narrows the decode_media stub to H.264/Opus + successive-
 # approximation refinement only.
 #
-# Envelope (documented, asserted): grayscale (1 component), 8-bit,
+# Envelope (documented, enforced): grayscale (1 component), 8-bit,
 # Ah = 0 per scan (spectral selection WITHOUT successive-approximation
 # refinement; Al >= 0 point transforms honored), no restart intervals.
 # The entropy coder is general: EOBn run coding (the progressive-only
@@ -1659,13 +1297,54 @@ def decode_jpeg444_features(
 # The distribution is a COMPLETE canonical code (Kraft sum 5/8 + 4/16
 # + 4/32 = 1.0): an over-full bits table makes canonical assignment
 # spill past the length's code space and the writer would emit
-# truncated codes (the bug _JpegBitWriter.put now asserts against).
+# truncated codes (the bug `_JpegBitWriter.put` raises on).
 _JPEG_PROG_AC_BITS = [0, 0, 5, 4, 4] + [0] * 11
 _JPEG_PROG_AC_VALS = [
     0x00, 0x10, 0x20, 0x30, 0x40,  # EOB1..EOB16 (3-bit)
     0x50, 0x60, 0x70, 0xF0,        # EOB32/64/128, ZRL (4-bit)
     0x01, 0x02, 0x11, 0x21,        # (run, size) coefficients (5-bit)
 ]
+_JPEG_PROG_AC_CODES = _jpeg_canonical_codes(_JPEG_PROG_AC_BITS, _JPEG_PROG_AC_VALS)
+
+
+def _jpeg_progressive_payload(doc_id: int) -> bytes:
+    w, h = 8 * (1 + doc_id % 3), 8 * (1 + doc_id % 2)
+    nbw, nbh = w // 8, h // 8
+    nblocks = nbw * nbh
+    # scan 1: every block's DC diff (no AC symbols in DC scans)
+    wr = _JpegBitWriter()
+    prev_dc = 0
+    for bi in range(nbh):
+        for bj in range(nbw):
+            v = 100 + doc_id % 64 + 2 * bi + 3 * bj
+            dc = 8 * (v - 128)  # DC of a uniform block, q=1
+            _jpeg_put_dc(wr, dc - prev_dc)
+            prev_dc = dc
+    dc_scan = wr.flush()
+    # scan 2: the whole AC band is zero -> ONE EOBn run of
+    # exactly nblocks: largest r with 2^r <= nblocks, the
+    # remainder in r appended bits
+    wr = _JpegBitWriter()
+    r = nblocks.bit_length() - 1
+    wr.put(*_JPEG_PROG_AC_CODES[r << 4])
+    if r:
+        wr.put(nblocks - (1 << r), r)
+    ac_scan = wr.flush()
+    dht_ac = _jpeg_seg(
+        0xC4,
+        bytes([0x10]) + bytes(_JPEG_PROG_AC_BITS) + bytes(_JPEG_PROG_AC_VALS),
+    )
+    # SOS: ncomp, (comp id, DC<<4|AC table sel), Ss, Se, Ah<<4|Al
+    sos1 = _jpeg_seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0x00]))
+    sos2 = _jpeg_seg(0xDA, bytes([1, 1, 0x00, 1, 63, 0x00]))
+    return (
+        b"\xff\xd8" + _JPEG_SYNTH_DQT
+        + _jpeg_seg(0xC2, struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0]))
+        + _JPEG_SYNTH_DHT_DC
+        + sos1 + dc_scan
+        + dht_ac + sos2 + ac_scan
+        + b"\xff\xd9"
+    )
 
 
 def synth_jpeg_progressive_payload(df: DataFrame, id_col: str) -> DataFrame:
@@ -1679,78 +1358,136 @@ def synth_jpeg_progressive_payload(df: DataFrame, id_col: str) -> DataFrame:
     single EOBn run — all ACs quantize to zero, so one EOBn symbol
     (+ its length bits) covers the whole image, exercising the
     progressive-only run coding end-to-end."""
-    import struct
+    return _synth_kernel(df, id_col, _jpeg_progressive_payload)
 
-    from pyspark.sql.types import BinaryType
 
-    out_schema = StructType(
-        [df.schema[id_col], StructField("payload", BinaryType(), True)]
-    )
-    id_name = id_col
-    dc_codes = _jpeg_canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_canonical_codes(_JPEG_PROG_AC_BITS, _JPEG_PROG_AC_VALS)
+def _jpeg_entropy_end(buf: bytes, start: int) -> int:
+    # entropy data runs to the next real marker (FF followed by
+    # anything but the 00 stuffing byte)
+    i = start
+    while i + 1 < len(buf):
+        if buf[i] == 0xFF and buf[i + 1] != 0x00:
+            return i
+        i += 1
+    raise ValueError("unterminated entropy segment")
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def build(did: int) -> bytes:
-            w, h = 8 * (1 + did % 3), 8 * (1 + did % 2)
-            nbw, nbh = w // 8, h // 8
-            nblocks = nbw * nbh
-            # scan 1: every block's DC diff (no AC symbols in DC scans)
-            wr = _JpegBitWriter()
-            prev_dc = 0
-            for bi in range(nbh):
-                for bj in range(nbw):
-                    v = 100 + did % 64 + 2 * bi + 3 * bj
-                    dc = 8 * (v - 128)  # DC of a uniform block, q=1
-                    t, amp = _jpeg_amplitude(dc - prev_dc)
-                    code, ln = dc_codes[t]
-                    wr.put(code, ln)
-                    if t:
-                        wr.put(amp, t)
-                    prev_dc = dc
-            dc_scan = wr.flush()
-            # scan 2: the whole AC band is zero -> ONE EOBn run of
-            # exactly nblocks: largest r with 2^r <= nblocks, the
-            # remainder in r appended bits
-            wr = _JpegBitWriter()
-            r = nblocks.bit_length() - 1
-            code, ln = ac_codes[r << 4]
-            wr.put(code, ln)
-            if r:
-                wr.put(nblocks - (1 << r), r)
-            ac_scan = wr.flush()
 
-            def seg(marker: int, payload: bytes) -> bytes:
-                return bytes([0xFF, marker]) + struct.pack(
-                    ">H", len(payload) + 2
-                ) + payload
-
-            dqt = seg(0xDB, bytes([0x00]) + bytes([1] * 64))
-            sof = seg(0xC2, struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0]))
-            dht_dc = seg(0xC4, bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS))
-            dht_ac = seg(
-                0xC4,
-                bytes([0x10]) + bytes(_JPEG_PROG_AC_BITS) + bytes(_JPEG_PROG_AC_VALS),
-            )
-            # SOS: ncomp, (comp id, DC<<4|AC table sel), Ss, Se, Ah<<4|Al
-            sos1 = seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0x00]))
-            sos2 = seg(0xDA, bytes([1, 1, 0x00, 1, 63, 0x00]))
-            return (
-                b"\xff\xd8" + dqt + sof + dht_dc
-                + sos1 + dc_scan
-                + dht_ac + sos2 + ac_scan
-                + b"\xff\xd9"
-            )
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_name: pdf[id_name],
-                    "payload": [build(int(d)) for d in pdf[id_name]],
-                }
-            )
-
-    return fan_out(df.select(id_name)).mapInPandas(kernel, schema=out_schema)
+def _jpeg_progressive_features(buf: bytes) -> tuple:
+    if buf[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG payload")
+    pos = 2
+    qt = None
+    w = h = None
+    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
+    zz = None  # (nblocks, 64) coefficient grid, int64
+    nbw = nbh = 0
+    prev_dc = 0
+    n_scans = 0
+    while pos + 1 < len(buf):
+        if buf[pos] != 0xFF:
+            raise ValueError("marker expected")
+        marker = buf[pos + 1]
+        if marker == 0xFF:  # fill byte before a marker
+            pos += 1
+            continue
+        if marker == 0xD9:
+            break
+        (ln,) = struct.unpack_from(">H", buf, pos + 2)
+        body = buf[pos + 4 : pos + 2 + ln]
+        if marker == 0xDB:
+            if body[0] & 0xF0 != 0:
+                raise ValueError("8-bit quant table only")
+            qt = np.array(list(body[1:65]), dtype=np.int64)
+        elif marker == 0xC2:
+            prec, h, w, ncomp = struct.unpack_from(">BHHB", body, 0)
+            if (prec, ncomp) != (8, 1):
+                raise ValueError("grayscale progressive only")
+            if body[7] != 0x11:
+                raise ValueError("no subsampling")
+        elif marker == 0xC0:
+            raise ValueError("baseline SOF0 — use decode_jpeg_features")
+        elif marker == 0xDD:
+            raise ValueError("restart intervals unsupported")
+        elif marker == 0xC4:
+            _jpeg_read_dht(body, huff)
+        elif marker == 0xDA:
+            if w is None:
+                raise ValueError("SOS before SOF2")
+            ns = body[0]
+            if ns != 1:
+                raise ValueError("one component per scan (grayscale)")
+            sel = body[2]
+            ss, se, ahal = body[3], body[4], body[5]
+            ah, al = ahal >> 4, ahal & 0x0F
+            if ah != 0:
+                raise ValueError(
+                    "successive-approximation refinement unsupported "
+                    "(spectral selection only)"
+                )
+            if not 0 <= ss <= se <= 63:
+                raise ValueError(f"bad spectral band {ss}..{se}")
+            seg_start = pos + 2 + ln
+            seg_end = _jpeg_entropy_end(buf, seg_start)
+            rd = _JpegBitReader(buf[seg_start:seg_end])
+            if zz is None:
+                # the first scan must be the DC scan (spec:
+                # every block's DC precedes any AC band) — its
+                # entropy capacity bounds the grid allocation
+                # (>= 1 bit per block), closing the corrupt-SOF
+                # allocation bomb exactly as in the baseline
+                # kernel
+                if ss != 0:
+                    raise ValueError("first progressive scan must be DC")
+                if not (w > 0 and h > 0):
+                    raise ValueError(f"bad JPEG dims {w}x{h}")
+                nbw, nbh = (w + 7) // 8, (h + 7) // 8
+                if not nbw * nbh <= 8 * (seg_end - seg_start) + 64:
+                    raise ValueError("declared dims exceed entropy stream capacity")
+                zz = np.zeros((nbw * nbh, 64), dtype=np.int64)
+            nblocks = zz.shape[0]
+            if ss == 0:
+                dc_tab = huff[(0, sel >> 4)]
+                for b in range(nblocks):
+                    t = rd.huff(dc_tab)
+                    prev_dc += _jpeg_extend(rd.bits(t), t)
+                    zz[b, 0] = prev_dc << al
+            else:
+                ac_tab = huff[(1, sel & 0x0F)]
+                eob_run = 0
+                for b in range(nblocks):
+                    if eob_run:
+                        eob_run -= 1
+                        continue
+                    kk = ss
+                    while kk <= se:
+                        sym = rd.huff(ac_tab)
+                        r, s = sym >> 4, sym & 0x0F
+                        if s == 0:
+                            if r == 15:  # ZRL: 16 zeros
+                                kk += 16
+                                continue
+                            # EOBn: this block's band ends and
+                            # the next (run - 1) blocks' bands
+                            # are all zero
+                            eob_run = (1 << r) + rd.bits(r) - 1
+                            break
+                        kk += r
+                        if kk > se:
+                            raise ValueError("coefficient run past band")
+                        zz[b, kk] = _jpeg_extend(rd.bits(s), s) << al
+                        kk += 1
+            n_scans += 1
+            pos = seg_end
+            continue
+        pos += 2 + ln
+    if zz is None or qt is None:
+        raise ValueError("no scan decoded")
+    img = np.zeros((nbh * 8, nbw * 8), dtype=np.uint8)
+    for b in range(zz.shape[0]):
+        bi, bj = divmod(b, nbw)
+        img[bi * 8 : bi * 8 + 8, bj * 8 : bj * 8 + 8] = _jpeg_idct_block(zz[b], qt)
+    img = img[:h, :w]
+    return w, h, w * h, n_scans, float(img.astype(np.float64).mean())
 
 
 def decode_jpeg_progressive_features(
@@ -1764,188 +1501,14 @@ def decode_jpeg_progressive_features(
     [Ss, Se] with EOBn run symbols / ZRL / (run, size) coefficients —
     then a single dequantize + 2D IDCT + crop pass. Same Arrow
     mapInPandas batch contract and on_error='null' dead letter as every
-    other decoder. Envelope asserted in-kernel: grayscale, 8-bit,
-    Ah = 0 (no successive-approximation refinement scans), no restart
-    intervals. Corrupt-SOF guards match the baseline kernel: positive
-    dims, and the block grid is allocated only after the (mandatory
-    first) DC scan's entropy capacity bounds it — a corrupt SOF
-    declaring 0xFFFF x 0xFFFF must quarantine, not allocate."""
-    import struct
-
-    from pyspark.sql.types import DoubleType
-
-    out_schema = StructType(
-        [
-            df.schema[id_col],
-            StructField("width", LongType(), True),
-            StructField("height", LongType(), True),
-            StructField("n_pixels", LongType(), True),
-            StructField("n_scans", LongType(), True),
-            StructField("mean_gray", DoubleType(), True),
-        ]
+    other decoder. Envelope enforced in-kernel (raises otherwise):
+    grayscale, 8-bit, Ah = 0 (no successive-approximation refinement
+    scans), no restart intervals. Corrupt-SOF guards match the baseline
+    kernel: positive dims, and the block grid is allocated only after
+    the (mandatory first) DC scan's entropy capacity bounds it — a
+    corrupt SOF declaring 0xFFFF x 0xFFFF must quarantine, not
+    allocate."""
+    fields = _IMAGE_DIMS + [("n_scans", _LONG), ("mean_gray", _DOUBLE)]
+    return _decode_kernel(
+        df, id_col, payload_col, fields, _jpeg_progressive_features, on_error
     )
-    id_name = id_col
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        k = np.arange(8)
-        C = np.cos((2 * k[None, :] + 1) * k[:, None] * np.pi / 16) * np.where(
-            k[:, None] == 0, np.sqrt(1 / 8), np.sqrt(2 / 8)
-        )
-
-        def _entropy_end(buf: bytes, start: int) -> int:
-            # entropy data runs to the next real marker (FF followed by
-            # anything but the 00 stuffing byte)
-            i = start
-            while i + 1 < len(buf):
-                if buf[i] == 0xFF and buf[i + 1] != 0x00:
-                    return i
-                i += 1
-            raise ValueError("unterminated entropy segment")
-
-        def decode(buf):
-            if buf is None:
-                return (None,) * 5
-            buf = bytes(buf)
-            assert buf[:2] == b"\xff\xd8", "not a JPEG payload"
-            pos = 2
-            qt = None
-            w = h = None
-            huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-            zz = None  # (nblocks, 64) coefficient grid, int64
-            nbw = nbh = 0
-            prev_dc = 0
-            n_scans = 0
-            while pos + 1 < len(buf):
-                assert buf[pos] == 0xFF, "marker expected"
-                marker = buf[pos + 1]
-                if marker == 0xFF:  # fill byte before a marker
-                    pos += 1
-                    continue
-                if marker == 0xD9:
-                    break
-                (ln,) = struct.unpack_from(">H", buf, pos + 2)
-                body = buf[pos + 4 : pos + 2 + ln]
-                if marker == 0xDB:
-                    assert body[0] & 0xF0 == 0, "8-bit quant table only"
-                    qt = np.array(list(body[1:65]), dtype=np.int64)
-                elif marker == 0xC2:
-                    prec, h, w, ncomp = struct.unpack_from(">BHHB", body, 0)
-                    assert (prec, ncomp) == (8, 1), "grayscale progressive only"
-                    assert body[7] == 0x11, "no subsampling"
-                elif marker == 0xC0:
-                    raise ValueError("baseline SOF0 — use decode_jpeg_features")
-                elif marker == 0xDD:
-                    raise ValueError("restart intervals unsupported")
-                elif marker == 0xC4:
-                    off = 0
-                    while off < len(body):
-                        cls_id = body[off]
-                        bits = list(body[off + 1 : off + 17])
-                        nv = sum(bits)
-                        vals = list(body[off + 17 : off + 17 + nv])
-                        codes = _jpeg_canonical_codes(bits, vals)
-                        huff[(cls_id >> 4, cls_id & 0x0F)] = {
-                            (c, l): s for s, (c, l) in codes.items()
-                        }
-                        off += 17 + nv
-                elif marker == 0xDA:
-                    assert w is not None, "SOS before SOF2"
-                    ns = body[0]
-                    assert ns == 1, "one component per scan (grayscale)"
-                    sel = body[2]
-                    ss, se, ahal = body[3], body[4], body[5]
-                    ah, al = ahal >> 4, ahal & 0x0F
-                    assert ah == 0, (
-                        "successive-approximation refinement unsupported "
-                        "(spectral selection only)"
-                    )
-                    assert 0 <= ss <= se <= 63, f"bad spectral band {ss}..{se}"
-                    seg_start = pos + 2 + ln
-                    seg_end = _entropy_end(buf, seg_start)
-                    rd = _JpegBitReader(buf[seg_start:seg_end])
-                    if zz is None:
-                        # the first scan must be the DC scan (spec:
-                        # every block's DC precedes any AC band) — its
-                        # entropy capacity bounds the grid allocation
-                        # (>= 1 bit per block), closing the corrupt-SOF
-                        # allocation bomb exactly as in the baseline
-                        # kernel
-                        assert ss == 0, "first progressive scan must be DC"
-                        assert w > 0 and h > 0, f"bad JPEG dims {w}x{h}"
-                        nbw, nbh = (w + 7) // 8, (h + 7) // 8
-                        assert nbw * nbh <= 8 * (seg_end - seg_start) + 64, (
-                            "declared dims exceed entropy stream capacity"
-                        )
-                        zz = np.zeros((nbw * nbh, 64), dtype=np.int64)
-                    nblocks = zz.shape[0]
-                    if ss == 0:
-                        dc_tab = huff[(0, sel >> 4)]
-                        for b in range(nblocks):
-                            t = rd.huff(dc_tab)
-                            prev_dc += _jpeg_extend(rd.bits(t), t)
-                            zz[b, 0] = prev_dc << al
-                    else:
-                        ac_tab = huff[(1, sel & 0x0F)]
-                        eob_run = 0
-                        for b in range(nblocks):
-                            if eob_run:
-                                eob_run -= 1
-                                continue
-                            kk = ss
-                            while kk <= se:
-                                sym = rd.huff(ac_tab)
-                                r, s = sym >> 4, sym & 0x0F
-                                if s == 0:
-                                    if r == 15:  # ZRL: 16 zeros
-                                        kk += 16
-                                        continue
-                                    # EOBn: this block's band ends and
-                                    # the next (run - 1) blocks' bands
-                                    # are all zero
-                                    eob_run = (1 << r) + rd.bits(r) - 1
-                                    break
-                                kk += r
-                                assert kk <= se, "coefficient run past band"
-                                zz[b, kk] = _jpeg_extend(rd.bits(s), s) << al
-                                kk += 1
-                    n_scans += 1
-                    pos = seg_end
-                    continue
-                pos += 2 + ln
-            assert zz is not None and qt is not None, "no scan decoded"
-            img = np.zeros((nbh * 8, nbw * 8), dtype=np.uint8)
-            for b in range(zz.shape[0]):
-                bi, bj = divmod(b, nbw)
-                coef = np.zeros(64, dtype=np.float64)
-                coef[_JPEG_ZIGZAG] = zz[b] * qt
-                block = C.T @ coef.reshape(8, 8) @ C
-                px = np.clip(np.round(block + 128), 0, 255).astype(np.uint8)
-                img[bi * 8 : bi * 8 + 8, bj * 8 : bj * 8 + 8] = px
-            img = img[:h, :w]
-            return w, h, w * h, n_scans, float(img.astype(np.float64).mean())
-
-        def _safe(b):
-            try:
-                return decode(b)
-            except Exception:
-                if on_error == "raise":
-                    raise
-                return (None,) * 5
-
-        for pdf in batches:
-            feats = [_safe(b) for b in pdf[payload_col]]
-            cols = list(zip(*feats)) if feats else [[]] * 5
-            yield pd.DataFrame(
-                {
-                    id_name: pdf[id_name],
-                    "width": pd.array(cols[0], dtype="Int64"),
-                    "height": pd.array(cols[1], dtype="Int64"),
-                    "n_pixels": pd.array(cols[2], dtype="Int64"),
-                    "n_scans": pd.array(cols[3], dtype="Int64"),
-                    "mean_gray": pd.array(cols[4], dtype="float64"),
-                }
-            )
-
-    return df.mapInPandas(kernel, schema=out_schema)

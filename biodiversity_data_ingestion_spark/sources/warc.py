@@ -20,12 +20,14 @@ kernel here is the per-record stage of that pipeline.
 
 from __future__ import annotations
 
+import gzip
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..functions.partitioning import fan_out
+from ..operators.multimodal import _decode_kernel
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 _CRLF = b"\r\n"
@@ -36,7 +38,6 @@ def synth_warc_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     text as the content block. Deterministic: fixed WARC-Date, record
     id derived from the row id, gzip with mtime=0 so identical inputs
     give identical bytes."""
-    import gzip as gzmod
     import io
 
     from pyspark.sql.types import BinaryType
@@ -67,7 +68,7 @@ def synth_warc_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             )
             record = headers + body + _CRLF + _CRLF
             buf = io.BytesIO()
-            with gzmod.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
+            with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
                 gz.write(record)
             return buf.getvalue()
 
@@ -87,6 +88,30 @@ def synth_warc_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def _warc_features(buf: bytes) -> tuple:
+    record = gzip.decompress(buf)
+    head, _, rest = record.partition(_CRLF + _CRLF)
+    lines = head.split(_CRLF)
+    if not lines[0].startswith(b"WARC/"):
+        raise ValueError("not a WARC record")
+    headers = {}
+    for line in lines[1:]:
+        k, _, v = line.partition(b":")
+        headers[k.strip().lower()] = v.strip()
+    clen = int(headers[b"content-length"])
+    content = rest[:clen]
+    if rest[clen : clen + 4] != _CRLF + _CRLF:
+        raise ValueError("bad record end")
+    text = content.decode("utf-8")
+    n_words = len([w for w in text.lower().split() if w])
+    return (
+        headers[b"warc-type"].decode("ascii"),
+        headers[b"warc-target-uri"].decode("ascii"),
+        clen,
+        n_words,
+    )
+
+
 def parse_warc_features(
     df: DataFrame, id_col: str, payload_col: str = "payload",
     on_error: str = "raise",
@@ -96,65 +121,9 @@ def parse_warc_features(
     headers, take exactly Content-Length bytes of content. Features:
     (warc_type, target_uri, content_length, n_words) — the fields a
     crawl-ingestion pipeline keys on before text extraction. Same
-    dead-letter option as the media decoders."""
-    import gzip as gzmod
-
-    out_schema = StructType(
-        [
-            df.schema[id_col],
-            StructField("warc_type", StringType(), True),
-            StructField("target_uri", StringType(), True),
-            StructField("content_length", LongType(), True),
-            StructField("n_words", LongType(), True),
-        ]
-    )
-    id_name = id_col
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def parse(buf):
-            if buf is None:
-                return (None,) * 4
-            record = gzmod.decompress(bytes(buf))
-            head, _, rest = record.partition(_CRLF + _CRLF)
-            lines = head.split(_CRLF)
-            if not lines[0].startswith(b"WARC/"):
-                raise ValueError("not a WARC record")
-            headers = {}
-            for line in lines[1:]:
-                k, _, v = line.partition(b":")
-                headers[k.strip().lower()] = v.strip()
-            clen = int(headers[b"content-length"])
-            content = rest[:clen]
-            if rest[clen : clen + 4] != _CRLF + _CRLF:
-                raise ValueError("bad record end")
-            text = content.decode("utf-8")
-            n_words = len([w for w in text.lower().split() if w])
-            return (
-                headers[b"warc-type"].decode("ascii"),
-                headers[b"warc-target-uri"].decode("ascii"),
-                clen,
-                n_words,
-            )
-
-        def _safe(b):
-            try:
-                return parse(b)
-            except Exception:
-                if on_error == "raise":
-                    raise
-                return (None,) * 4
-
-        for pdf in batches:
-            feats = [_safe(b) for b in pdf[payload_col]]
-            cols = list(zip(*feats)) if feats else [[]] * 4
-            yield pd.DataFrame(
-                {
-                    id_name: pdf[id_name],
-                    "warc_type": pd.array(cols[0], dtype="string"),
-                    "target_uri": pd.array(cols[1], dtype="string"),
-                    "content_length": pd.array(cols[2], dtype="Int64"),
-                    "n_words": pd.array(cols[3], dtype="Int64"),
-                }
-            )
-
-    return df.mapInPandas(kernel, schema=out_schema)
+    kernel wrapper and dead-letter option as the media decoders."""
+    fields = [
+        ("warc_type", StringType()), ("target_uri", StringType()),
+        ("content_length", LongType()), ("n_words", LongType()),
+    ]
+    return _decode_kernel(df, id_col, payload_col, fields, _warc_features, on_error)

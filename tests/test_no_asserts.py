@@ -9,9 +9,7 @@ from pathlib import Path
 
 import biodiversity_data_ingestion_spark as pkg
 
-# The codec decoders' guards are still asserts; replacing them is its
-# own change (one reject exception for the whole decoder family).
-ALLOWED = {"operators/multimodal.py"}
+ALLOWED: set[str] = set()
 
 
 def test_no_assert_statements_outside_the_decoders():

@@ -540,6 +540,12 @@ def test_decode_on_error_null_quarantines_malformed_payloads(spark):
         r.id: r.n_frames
         for r in multimodal.decode_y4m_features(df, "id", on_error="null").collect()
     } == {1: None, 2: None}
+    # any other on_error value is refused on the driver, at call time,
+    # instead of silently quarantining (a typo must not turn the strict
+    # default into a dead letter)
+    for bad_mode in ("RAISE", "nul", "drop"):
+        with _pytest.raises(ValueError, match="on_error"):
+            multimodal.decode_wav_features(df, "id", on_error=bad_mode)
 
 
 def test_png_filter_math_matches_spec_hand_computed():

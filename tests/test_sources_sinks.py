@@ -530,6 +530,8 @@ def test_warc_roundtrip_and_dead_letter(spark):
     # WARC version line, and a record whose end is not CRLFCRLF
     import gzip
 
+    import pytest
+
     def gz(b):
         return bytearray(gzip.compress(b, mtime=0))
 
@@ -545,6 +547,8 @@ def test_warc_roundtrip_and_dead_letter(spark):
     rows = warc.parse_warc_features(bad, "doc_id", on_error="null").collect()
     assert len(rows) == 3
     assert all(r["warc_type"] is None and r["n_words"] is None for r in rows)
+    with pytest.raises(ValueError, match="on_error"):
+        warc.parse_warc_features(bad, "doc_id", on_error="Null")
 
 
 def test_webdataset_shards_roundtrip_and_determinism(spark, tmp_path):
