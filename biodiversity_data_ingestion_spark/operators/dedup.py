@@ -34,6 +34,7 @@ from ..functions.hashing import (
     shingle_hash64,
     word_shingles,
 )
+from ..functions.pairs import ordered_pairs
 from ..functions.partitioning import fan_out
 from ..functions.textfn import tokenize
 
@@ -102,24 +103,6 @@ def _explode_computed(df: DataFrame, keep: list[str], arr, alias: str) -> DataFr
     )
 
 
-def _ordered_pairs(docs) -> Column:
-    """All ordered pairs (i < j) from a sorted array column of structs,
-    as an array of {a, b} structs. The pair-explosion step of the
-    join-free bucket-list candidate generators: grouping a (bucket ->
-    members) inverted index and exploding pairs inside each bucket costs
-    ONE shuffle and evaluates the upstream (shingling / fingerprinting)
-    exactly once, where a bucket self-join evaluates it once per side."""
-    return F.flatten(
-        F.transform(
-            docs,
-            lambda d, i: F.transform(
-                F.slice(docs, i + F.lit(2), F.size(docs)),
-                lambda e: F.struct(d.alias("a"), e.alias("b")),
-            ),
-        )
-    )
-
-
 def _chunked_bucket_pairs(
     member_lists: DataFrame, docs_col: str, extra_cols: list[str], chunk_size: int
 ) -> DataFrame:
@@ -164,7 +147,7 @@ def _chunked_bucket_pairs(
             da, lambda d: F.transform(db, lambda e: F.struct(d.alias("a"), e.alias("b")))
         )
     )
-    pairs = F.when(F.col("_c.i") == F.col("_c.j"), _ordered_pairs(da)).otherwise(cross)
+    pairs = F.when(F.col("_c.i") == F.col("_c.j"), ordered_pairs(da)).otherwise(cross)
     return exploded.select(*extra_cols, F.explode(pairs).alias("p"))
 
 
@@ -208,21 +191,13 @@ def ngram_jaccard_pairs(
     )
     if max_doc_freq is not None:
         buckets = buckets.where(F.size("docs") <= max_doc_freq)
-    docs = F.col("docs")
     # ordered pairs within a bucket (docs sorted by doc_id => doc_a < doc_b)
-    pair_arrays = F.transform(
-        docs,
-        lambda d, i: F.transform(
-            F.slice(docs, i + F.lit(2), F.size(docs)),
-            lambda e: F.struct(
-                d["doc_id"].alias("doc_a"),
-                e["doc_id"].alias("doc_b"),
-                d["n_sh"].alias("na"),
-                e["n_sh"].alias("nb"),
-            ),
-        ),
+    pairs = buckets.select(F.explode(ordered_pairs(F.col("docs"))).alias("p")).select(
+        F.col("p.a.doc_id").alias("doc_a"),
+        F.col("p.b.doc_id").alias("doc_b"),
+        F.col("p.a.n_sh").alias("na"),
+        F.col("p.b.n_sh").alias("nb"),
     )
-    pairs = buckets.select(F.explode(F.flatten(pair_arrays)).alias("p")).select("p.*")
     return (
         pairs.groupBy("doc_a", "doc_b", "na", "nb")
         .agg(F.count(F.lit(1)).alias("shared"))

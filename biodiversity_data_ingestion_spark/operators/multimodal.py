@@ -275,7 +275,12 @@ def _wav_features(buf: bytes) -> tuple:
     # malformed -> quarantined under on_error='null'.
     if len(raw) != nf * width * ch:
         raise ValueError("truncated PCM data")
-    a = np.frombuffer(raw, dtype="<i2" if width == 2 else "u1").astype(np.float64)
+    if width == 2:
+        a = np.frombuffer(raw, dtype="<i2").astype(np.float64)
+    elif width == 1:  # 8-bit PCM is unsigned, centred on 128
+        a = np.frombuffer(raw, dtype="u1").astype(np.float64) - 128.0
+    else:
+        raise ValueError(f"unsupported PCM sample width {width}")
     rms = math.sqrt(float(np.mean(a * a))) if a.size else 0.0
     peak = int(np.max(np.abs(a))) if a.size else 0
     return ch, rate, nf, nf * 1000 // rate, rms, peak
@@ -1248,12 +1253,13 @@ def synth_jpeg444_payload(df: DataFrame, id_col: str) -> DataFrame:
 
 def _jpeg444_features(buf: bytes) -> tuple:
     w, h, _, comp_order, planes = _jpeg_baseline_planes(buf)
+    if len(comp_order) == 1:  # grayscale: its one plane is Y, whatever its id
+        y = float(planes[comp_order[0]].astype(np.float64).mean())
+        return w, h, w * h, y, None, None
     means = [
         float(planes[cid].astype(np.float64).mean()) if cid in planes else None
         for cid in (1, 2, 3)
     ]
-    if len(comp_order) == 1:
-        means = [means[0], None, None]
     return w, h, w * h, means[0], means[1], means[2]
 
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.pairs import ordered_pairs
 from ..functions.partitioning import fan_out
 
 
@@ -207,15 +208,8 @@ def signlsh_dup_pairs(
         .agg(F.array_sort(F.collect_list("vid")).alias("vids"))
         .where(F.size("vids") > 1)
     )
-    pair_arrays = F.transform(
-        F.col("vids"),
-        lambda a, i: F.transform(
-            F.slice(F.col("vids"), i + F.lit(2), F.size(F.col("vids"))),
-            lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
-        ),
-    )
     cand = (
-        members.select(F.explode(F.flatten(pair_arrays)).alias("p"))
+        members.select(F.explode(ordered_pairs(F.col("vids"), "id_a", "id_b")).alias("p"))
         .select("p.id_a", "p.id_b")
         .distinct()
     )

@@ -31,6 +31,7 @@ from ..operators import (
     textops,
 )
 from ..functions.decimals import dec_mean, dec_sum
+from ..functions.pairs import ordered_pairs
 from ..operators.classify import classify
 from ..sources.tables import load_table
 
@@ -5777,21 +5778,10 @@ def _term_pair_pmi(spark, sf_dir):
     toks = F.slice(F.array_sort(F.array_distinct(tokenize(F.lower(F.trim(F.col("text")))))), 1, 16)
     d = docs.select("doc_id", toks.alias("toks"))
     n_docs = d.select(F.count(F.lit(1)).alias("n_docs"))
-    # distinct sorted tokens -> pairs (a < b) via index-offset self-zip
-    pairs = d.select(
-        "doc_id",
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("toks"),
-                    lambda a, i: F.transform(
-                        F.slice(F.col("toks"), i + 2, 16),
-                        lambda b: F.struct(a.alias("a"), b.alias("b")),
-                    ),
-                )
-            )
-        ).alias("p"),
-    ).select("doc_id", F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+    # distinct sorted tokens -> pairs (a < b) via `ordered_pairs`
+    pairs = d.select("doc_id", F.explode(ordered_pairs(F.col("toks"))).alias("p")).select(
+        "doc_id", F.col("p.a").alias("a"), F.col("p.b").alias("b")
+    )
     uni = (
         d.select(F.explode("toks").alias("t"))
         .groupBy("t")
@@ -6898,30 +6888,26 @@ _register(
 # ---------------------------------------------------------------------------
 # 140. part_copurchase_pairs — market-basket co-occurrence: part pairs
 # appearing in the same order, with support counts. JOIN-FREE: baskets
-# are collected per order and pairs exploded via the index-offset
-# pattern (same shape as the near-dup bucket lists / PMI pairs), so
-# lineitem shuffles once instead of self-joining on orderkey.
+# are collected per order and pairs exploded with `ordered_pairs`
+# (the near-dup bucket lists and PMI pairs use it too), so lineitem
+# shuffles once instead of self-joining on orderkey.
 
-def _part_copurchase_pairs(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    baskets = li.groupBy("l_orderkey").agg(
+def _baskets(items: DataFrame) -> DataFrame:
+    """One row per order: its sorted distinct ``parts``."""
+    return items.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("l_partkey")).alias("parts")
     )
-    pairs = baskets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("parts"),
-                    lambda a, i: F.transform(
-                        # slice length bounded by basket size (TPC-H <= 7
-                        # lineitems/order; cap generously)
-                        F.slice(F.col("parts"), i + 2, 64),
-                        lambda b: F.struct(a.alias("pa"), b.alias("pb")),
-                    ),
-                )
-            )
-        ).alias("pr")
-    ).select(F.col("pr.pa").alias("part_a"), F.col("pr.pb").alias("part_b"))
+
+
+def _basket_pairs(baskets: DataFrame, left: str, right: str) -> DataFrame:
+    """Every co-purchased part pair (left < right), once per basket."""
+    return baskets.select(
+        F.explode(ordered_pairs(F.col("parts"), left, right)).alias("p")
+    ).select(f"p.{left}", f"p.{right}")
+
+
+def _part_copurchase_pairs(spark, sf_dir):
+    pairs = _basket_pairs(_baskets(_t(spark, sf_dir, "lineitem")), "part_a", "part_b")
     return (
         pairs.groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).alias("support"))
@@ -8845,7 +8831,9 @@ _register(
 # max-degree (the standard distributed-triangle trick). The total is
 # orientation-invariant, so the oracle can count with plain id order.
 
-def _copurchase_triangles(spark, sf_dir):
+def _brand_copurchase_edges(spark, sf_dir):
+    """Distinct ``(u, v)`` co-purchase edges (u < v) between parts of
+    three brands, which bounds the graph's density."""
     li = _t(spark, sf_dir, "lineitem")
     p = _t(spark, sf_dir, "part").where(
         F.col("p_brand").isin("Brand#12", "Brand#23", "Brand#34")
@@ -8859,25 +8847,12 @@ def _copurchase_triangles(spark, sf_dir):
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
-    baskets = items.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("parts")
-    )
+    return _basket_pairs(_baskets(items), "u", "v").distinct()
+
+
+def _copurchase_triangles(spark, sf_dir):
     edges = (
-        baskets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("parts"),
-                        lambda a, i: F.transform(
-                            F.slice(F.col("parts"), i + 2, 64),
-                            lambda b: F.struct(a.alias("u"), b.alias("v")),
-                        ),
-                    )
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
-        .distinct()
+        _brand_copurchase_edges(spark, sf_dir)
         # edges feed deg, the oriented join (3x) and the edge count;
         # without a checkpoint every branch re-runs the basket collect
         # (the plan showed 46 exchanges vs 10 after)
@@ -8973,39 +8948,7 @@ _KCORE_K, _KCORE_ROUNDS = 3, 8
 
 
 def _copurchase_kcore(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").where(
-        F.col("p_brand").isin("Brand#12", "Brand#23", "Brand#34")
-    )
-    items = (
-        li.join(
-            F.broadcast(p.select("p_partkey")),
-            F.col("l_partkey") == F.col("p_partkey"),
-            "left_semi",
-        )
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    baskets = items.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("parts")
-    )
-    edges = (
-        baskets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("parts"),
-                        lambda a, i: F.transform(
-                            F.slice(F.col("parts"), i + 2, 64),
-                            lambda b: F.struct(a.alias("u"), b.alias("v")),
-                        ),
-                    )
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
-        .distinct()
-    )
+    edges = _brand_copurchase_edges(spark, sf_dir)
     return corpus.k_core(edges, k=_KCORE_K, max_rounds=_KCORE_ROUNDS)
 
 
@@ -10439,8 +10382,8 @@ _register(
 
 # ---------------------------------------------------------------------------
 # 194. copurchase_pagerank — deterministic PageRank over the
-# co-purchase part graph (join-free basket edges, same construction as
-# copurchase_triangles), 3 iterations with dangling-mass
+# co-purchase part graph (join-free basket edges from
+# `_copurchase_graph`), 3 iterations with dangling-mass
 # redistribution. ORACLE-EXACT since the operator moved to fixed-point
 # integer ranks (PAGERANK_SCALE-denominated bigints, floor division):
 # the trajectory is bit-exact in any engine, so a chained-CTE replay
@@ -10448,36 +10391,24 @@ _register(
 # left. The sequential-replay property is also unit-tested
 # (test_pagerank_matches_fixed_point_reference).
 
+def _copurchase_graph(spark, sf_dir):
+    """The symmetric co-purchase part graph as distinct ``(src, dst)``
+    edges over all orders. Only the ordered pairs (src < dst) are
+    exploded, which halves the explode volume AND the distinct
+    shuffle; the graph is symmetric, so the reversed half is a cheap
+    post-distinct union. The edge SET is identical to the all-pairs
+    x != y construction (which is what the oracles state)."""
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    half = _basket_pairs(_baskets(li), "src", "dst").distinct()
+    return half.unionByName(
+        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+
+
 def _copurchase_pagerank(spark, sf_dir):
     from ..operators import corpus as corpus_ops
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("parts")
-    )
-    # ordered pairs only (src < dst via the sorted array's suffix
-    # slices): halves the explode volume AND the distinct shuffle; the
-    # co-purchase graph is symmetric, so the reversed half is a cheap
-    # post-distinct union — the edge SET is identical to the all-pairs
-    # x != y construction (which is what the oracle states).
-    parts = F.col("parts")
-    pairs = F.flatten(
-        F.transform(
-            parts,
-            lambda x, i: F.transform(
-                F.slice(parts, i + F.lit(2), F.size(parts)),
-                lambda y: F.struct(x.alias("src"), y.alias("dst")),
-            ),
-        )
-    )
-    half = (
-        baskets.select(F.explode(pairs).alias("p"))
-        .select("p.src", "p.dst")
-        .distinct()
-    )
-    edges = half.unionByName(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    edges = _copurchase_graph(spark, sf_dir)
     return corpus_ops.pagerank(edges, "src", "dst", n_iter=3).orderBy("node")
 
 
@@ -11772,33 +11703,21 @@ _register(
 # (co-baskets / baskets), confidence (P(b|a)) and lift
 # (confidence / P(b)), top-20 by lift. Counts are integers and every
 # metric one rounded division over exact counts; the pair stream is
-# the bounded suffix-slice explode (same guard as copurchase_pagerank:
-# never the full a x b cross). The classic recommender precursor.
+# the ordered half from `ordered_pairs` (never the full a x b cross).
+# The classic recommender precursor.
 
 def _part_association_rules(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("parts")
-    )
+    baskets = _baskets(li)
     n_baskets = baskets.agg(F.count(F.lit(1)).alias("nb"))
     item = (
         baskets.select(F.explode("parts").alias("part"))
         .groupBy("part")
         .agg(F.count(F.lit(1)).alias("ic"))
     )
-    parts = F.col("parts")
-    pairs = F.flatten(
-        F.transform(
-            parts,
-            lambda x, i: F.transform(
-                F.slice(parts, i + F.lit(2), F.size(parts)),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
     half = (
-        baskets.select(F.explode(pairs).alias("p"))
-        .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+        _basket_pairs(baskets, "a", "b")
+        .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("pc"))
     )
     both = half.unionByName(
@@ -12890,35 +12809,14 @@ _register(
 # and the community-detection capability the suite lacked. Fixed
 # 3-round synchronous LPA with (max neighbor-label count, min label)
 # tie-breaking — all-integer state, so the chained-CTE oracle replays
-# the trajectory hash-exactly (the pagerank/HITS contract). Edge
-# construction = the proven basket suffix-slice explode (never a
-# lineitem self-join on the Spark side).
+# the trajectory hash-exactly (the pagerank/HITS contract). Edges come
+# from `_copurchase_graph`, the basket pair explode (never a lineitem
+# self-join on the Spark side).
 
 def _copurchase_communities(spark, sf_dir):
     from ..operators import corpus as corpus_ops
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("parts")
-    )
-    parts = F.col("parts")
-    pairs = F.flatten(
-        F.transform(
-            parts,
-            lambda x, i: F.transform(
-                F.slice(parts, i + F.lit(2), F.size(parts)),
-                lambda y: F.struct(x.alias("src"), y.alias("dst")),
-            ),
-        )
-    )
-    half = (
-        baskets.select(F.explode(pairs).alias("p"))
-        .select("p.src", "p.dst")
-        .distinct()
-    )
-    edges = half.unionByName(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    edges = _copurchase_graph(spark, sf_dir)
     return corpus_ops.label_propagation(edges, "src", "dst", n_iter=3).orderBy(
         "node"
     )

@@ -458,6 +458,30 @@ def test_wav_decode_golden_roundtrip(spark):
     assert abs(row.rms - expect_rms) < 1e-9
 
 
+def test_wav_pcm_sample_widths():
+    # 8-bit PCM is unsigned with silence at 128: silence must decode to
+    # rms 0 and peak 0, and +/-50 around 128 to peak 50. Widths other
+    # than 8 and 16 bits are rejected, not read byte by byte.
+    import io
+    import wave as wavmod
+
+    from biodiversity_data_ingestion_spark.operators import multimodal
+
+    def wav(width: int, frames: bytes) -> bytes:
+        buf = io.BytesIO()
+        with wavmod.open(buf, "wb") as w:
+            w.setnchannels(1)
+            w.setsampwidth(width)
+            w.setframerate(8000)
+            w.writeframes(frames)
+        return buf.getvalue()
+
+    assert multimodal._wav_features(wav(1, bytes([128] * 80))) == (1, 8000, 80, 10, 0.0, 0)
+    assert multimodal._wav_features(wav(1, bytes([178, 78] * 40)))[4:] == (50.0, 50)
+    with pytest.raises(ValueError, match="sample width 3"):
+        multimodal._wav_features(wav(3, bytes(3 * 80)))
+
+
 def test_bmp_decode_golden_including_topdown(spark):
     # decode_bmp_features must parse bottom-up AND top-down (negative
     # height) containers to the same image statistics, honoring the
@@ -1340,6 +1364,19 @@ def test_jpeg444_color_golden_and_grayscale_fallback(spark):
     w, h = 8 * (1 + 5 % 3), 8 * (1 + 5 % 2)
     assert row["mean_y"] == 100 + 5 % 64 + (h // 8 - 1) + 1.5 * (w // 8 - 1)
     assert row["mean_cb"] is None and row["mean_cr"] is None
+
+
+def test_jpeg444_grayscale_component_id_is_not_fixed():
+    # a one-component file is grayscale whatever its component id: the
+    # color decoder's mean_y must match the grayscale decoder's mean
+    from biodiversity_data_ingestion_spark.operators import multimodal
+
+    buf = bytearray(multimodal._jpeg_payload(5))
+    sof, sos = buf.index(b"\xff\xc0"), buf.index(b"\xff\xda")
+    assert buf[sof + 10] == buf[sos + 5] == 1  # Ci in SOF, Cs in SOS
+    buf[sof + 10] = buf[sos + 5] = 2
+    assert multimodal._jpeg_features(bytes(buf)) == (24, 16, 384, 109.0)
+    assert multimodal._jpeg444_features(bytes(buf)) == (24, 16, 384, 109.0, None, None)
 
 
 def test_pq_adc_recovers_exact_blobs(spark):

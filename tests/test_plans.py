@@ -4,6 +4,7 @@ codegen — so regressions in plan shape fail CI, not a 100 TB run."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from biodiversity_data_ingestion_spark.plans.queries import QUERIES
@@ -19,6 +20,21 @@ def _plan(spark, name: str, mode: str = "formatted") -> str:
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
     )
+
+
+@pytest.fixture(scope="module")
+def registry_plans(spark) -> dict[str, str]:
+    """name -> executed plan text of every non-stream query at sf0.001,
+    built once for the registry-wide sweeps (stream builders execute
+    the stream; their result is a memory table)."""
+    return {
+        name: spec["builder"](spark, "/root/testdata/sf0.001")
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+        for name, spec in sorted(QUERIES.items())
+        if not name.startswith("stream_")
+    }
 
 
 def test_q1_filter_pushdown_and_column_pruning(spark):
@@ -159,20 +175,13 @@ def test_bm25_query_terms_and_stats_are_broadcast(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_no_accidental_cartesian_or_row_python_udfs(spark):
+def test_no_accidental_cartesian_or_row_python_udfs(registry_plans):
     # Engine-wide physical-plan sweep: no query may contain an accidental
     # cartesian product or a row-at-a-time Python UDF (BatchEvalPython).
     # Python kernels must be Arrow-batched (ArrowEvalPython / mapInPandas);
     # intentional tiny-side cross joins are broadcast nested-loop joins.
-    from biodiversity_data_ingestion_spark.plans.queries import QUERIES
-
-    skip = {n for n in QUERIES if n.startswith("stream_")}  # execute on build
     offenders = []
-    for name in sorted(QUERIES):
-        if name in skip:
-            continue
-        df = QUERIES[name]["builder"](spark, "/root/testdata/sf0.001")
-        plan = df._jdf.queryExecution().executedPlan().toString()
+    for name, plan in registry_plans.items():
         if "CartesianProduct" in plan:
             offenders.append((name, "CartesianProduct"))
         if "BatchEvalPython" in plan:
@@ -381,7 +390,7 @@ def test_embedding_dups_blocked_no_nested_loop(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_no_scale_killer_joins_anywhere(spark):
+def test_no_scale_killer_joins_anywhere(registry_plans):
     # repo-wide scale audit: NO CartesianProduct in any of the declared
     # query plans, and BroadcastNestedLoopJoin only where the build side
     # is an intentionally-broadcast scalar/tiny aggregate (the audited
@@ -440,18 +449,8 @@ def test_no_scale_killer_joins_anywhere(spark):
     MAX_EXCHANGES, MAX_SCANS = 16, 14  # fk_orphan_audit: 14/14 by design
     import re
 
-    from biodiversity_data_ingestion_spark.plans.queries import QUERIES
-
     cartesian, surprise_bnlj, runaway = [], [], []
-    for name, spec in sorted(QUERIES.items()):
-        if name.startswith("stream_"):
-            continue  # builders execute the stream; result is a memory table
-        p = (
-            spec["builder"](spark, "/root/testdata/sf0.001")
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
+    for name, p in registry_plans.items():
         if "CartesianProduct" in p:
             cartesian.append(name)
         if "BroadcastNestedLoopJoin" in p and name not in ALLOWED_BNLJ:

@@ -52,8 +52,12 @@ def main() -> None:
         n_ex = len(re.findall(r"Exchange (?:hash|range)partitioning", plan)) + len(
             re.findall(r"Exchange SinglePartition", plan)
         )
-        # strip per-run expression ids for a stable-ish diff surface
+        # strip per-run expression ids, exchange plan ids and
+        # lambda-variable counters (x_12 -> x_N) so a diff shows only
+        # real plan changes
         clean = re.sub(r"#\d+L?", "#_", plan)
+        clean = re.sub(r"plan_id=\d+", "plan_id=_", clean)
+        clean = re.sub(r"\b([xyz])_\d+\b", r"\1_N", clean)
         out += [
             f"## {name}  (exchanges: {n_ex})",
             "",
