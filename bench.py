@@ -242,6 +242,9 @@ def main() -> None:
     # regression against every prior BENCH_r{N}. Round-over-round
     # comparability wins; load brackets below + the A/B-in-one-process
     # rule (NOTES.md) remain the defense against ambient-load noise.
+    # The +15-25% was measured with Spark's 100-entry codegen cache, which
+    # one headline round (about 1,230 generated sources) overflows; session.py
+    # now sizes it to hold them (its module docstring has the figures).
     # r14: probe cadence 10 -> 5 queries (the r13 verdict's
     # between-probe blindspot: contention SHIFTED between probe points
     # in every r13 run). Each query additionally records which probe

@@ -453,8 +453,10 @@ def _y4m_features(buf: bytes) -> tuple:
         y_sum += int(y.sum(dtype=np.int64))
         nf += 1
         pos = fnl + 1 + frame_bytes
-    mean_y = y_sum / (w * h * nf) if nf else None
-    return w, h, nf, fps, mean_y
+    if nf == 0:
+        # a header cut off before its first frame: no luma to report
+        raise ValueError("y4m payload has no frames")
+    return w, h, nf, fps, y_sum / (w * h * nf)
 
 
 def decode_y4m_features(

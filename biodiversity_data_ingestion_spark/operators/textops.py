@@ -9,7 +9,6 @@ column pruning (only `text` + id are read).
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -101,13 +100,14 @@ def quality_score(df: DataFrame, id_col: str, text: str) -> DataFrame:
 
 
 def _has_column(df: DataFrame, name: str) -> bool:
-    """Whether Spark's analyzer resolves ``name`` against ``df`` (so it
-    follows spark.sql.caseSensitive, case-insensitive by default)."""
-    try:
-        df.select(F.col(name))
-    except AnalysisException:
-        return False
-    return True
+    """Whether ``name`` is one of ``df``'s columns, matched as Spark's
+    analyzer matches it: case-insensitively unless spark.sql.caseSensitive
+    is true (which Spark reads trimmed, in any letter case). Read from the
+    schema: a failing ``select`` would log an ERROR with a Java trace."""
+    flag = df.sparkSession.conf.get("spark.sql.caseSensitive", "false")
+    if flag.strip().lower() == "true":
+        return name in df.columns
+    return name.lower() in {c.lower() for c in df.columns}
 
 
 def text_features(

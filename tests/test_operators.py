@@ -639,6 +639,22 @@ def test_y4m_decode_golden(spark):
     assert row.mean_y == 20.0
 
 
+def test_y4m_header_without_frames_quarantines(spark):
+    # a stream cut just after its header line has dims and a frame rate
+    # but no luma: it must be refused whole (all-null under
+    # on_error='null'), not decoded to a half-filled row
+    import pytest
+
+    from biodiversity_data_ingestion_spark.operators import multimodal
+
+    header = b"YUV4MPEG2 W8 H4 F25:1 C420jpeg\n"
+    with pytest.raises(ValueError, match="no frames"):
+        multimodal._y4m_features(header)
+    df = spark.createDataFrame([(1, bytearray(header))], "id long, payload binary")
+    [row] = multimodal.decode_y4m_features(df, "id", on_error="null").collect()
+    assert tuple(row) == (1, None, None, None, None, None)
+
+
 def test_wav_synth_decode_inverse(spark):
     # synth -> decode is the identity on the declared feature contract
     # for arbitrary ids (including ones far outside the testdata range)
@@ -874,6 +890,41 @@ def test_text_features_resolves_text_column_case_insensitively(spark):
             textops.text_features(docs, "doc_id", "TEXT")
     finally:
         spark.conf.unset("spark.sql.caseSensitive")
+
+
+def test_text_features_absent_text_column_logs_no_error(spark, caplog):
+    # with the raw text absent and every derived input supplied,
+    # text_features takes its normal fallback path; deciding that the
+    # column is absent must not run a failing analysis, which pyspark
+    # logs as an ERROR with a full Java stack trace (on its own
+    # query-context loggers, which do not propagate to the root)
+    import logging
+
+    from pyspark.logger import PySparkLogger
+
+    from biodiversity_data_ingestion_spark.operators import textops
+
+    pre = spark.createDataFrame(
+        [(1, ["the", "cat"], 8, 1)],
+        "doc_id long, _words array<string>, _n_chars int, _n_punct int",
+    )
+    loggers = [
+        PySparkLogger.getLogger(n)
+        for n in ("DataFrameQueryContextLogger", "SQLQueryContextLogger")
+    ]
+    for lg in loggers:
+        lg.addHandler(caplog.handler)
+    try:
+        with caplog.at_level(logging.WARNING):
+            feats = textops.text_features(
+                pre, "doc_id", "text", words_col="_words",
+                n_chars_col="_n_chars", n_punct_col="_n_punct",
+            )
+    finally:
+        for lg in loggers:
+            lg.removeHandler(caplog.handler)
+    assert [r.getMessage()[:120] for r in caplog.records if r.levelno >= logging.ERROR] == []
+    assert feats.select("n_words").first()[0] == 2
 
 
 def test_st_within_matches_ray_cast_kernel(spark):
