@@ -664,11 +664,10 @@ def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
 # (1<<code_size)+1 — exercised across the 512/1024 boundaries by
 # test_lzw_roundtrip_crosses_width_boundaries.
 
-# The single-byte root codes per minimum code size (one byte per root
-# code, so 8 bits at most; a larger size raises KeyError, which the
-# decoder quarantines): each image copies its base table instead of
-# rebuilding it.
-_LZW_ENCODE_BASE = {m: {bytes([i]): i for i in range(1 << m)} for m in range(9)}
+# The decoder's single-byte root strings per minimum code size (one
+# byte per root code, so 8 bits at most; a larger size raises
+# KeyError, which the decoder quarantines): each image copies its base
+# table instead of rebuilding it.
 _LZW_DECODE_BASE = {m: {i: bytes([i]) for i in range(1 << m)} for m in range(9)}
 
 
@@ -676,7 +675,12 @@ def _lzw_encode(indices: bytes, min_code_size: int) -> bytes:
     clear = 1 << min_code_size
     eoi = clear + 1
     code_size = min_code_size + 1
-    table = dict(_LZW_ENCODE_BASE[min_code_size])
+    data = bytes(indices)
+    # root codes are the byte values themselves, one byte each
+    if min_code_size > 8 or max(data, default=0) >= clear:
+        raise ValueError(f"an index does not fit min code size {min_code_size}")
+    # a string's code keyed by (its prefix's code << 8) | its last byte
+    table: dict[int, int] = {}
     next_code = eoi + 1
     bitbuf = 0
     nbits = 0
@@ -692,21 +696,22 @@ def _lzw_encode(indices: bytes, min_code_size: int) -> bytes:
             nbits -= 8
 
     emit(clear)
-    cur = b""
-    for ch in bytes(indices):
-        nxt = cur + bytes([ch])
-        if nxt in table:
-            cur = nxt
-            continue
-        emit(table[cur])
-        if next_code < 4096:  # 12-bit cap: freeze the table, never CLEAR
-            table[nxt] = next_code
-            next_code += 1
-            if next_code == (1 << code_size) + 1 and code_size < 12:
-                code_size += 1
-        cur = bytes([ch])
-    if cur:
-        emit(table[cur])
+    if data:
+        cur = data[0]
+        for ch in data[1:]:
+            key = (cur << 8) | ch
+            code = table.get(key)
+            if code is not None:
+                cur = code
+                continue
+            emit(cur)
+            if next_code < 4096:  # 12-bit cap: freeze the table, never CLEAR
+                table[key] = next_code
+                next_code += 1
+                if next_code == (1 << code_size) + 1 and code_size < 12:
+                    code_size += 1
+            cur = ch
+        emit(cur)
     emit(eoi)
     if nbits:
         out.append(bitbuf & 0xFF)
@@ -725,9 +730,7 @@ def _lzw_decode(data: bytes, min_code_size: int) -> bytes:
     pos = 0
     out = bytearray()
     prev: bytes | None = None
-
-    def read() -> int:
-        nonlocal bitbuf, nbits, pos
+    while True:
         while nbits < code_size:
             if pos >= len(data):
                 raise ValueError("LZW stream truncated")
@@ -737,10 +740,6 @@ def _lzw_decode(data: bytes, min_code_size: int) -> bytes:
         code = bitbuf & ((1 << code_size) - 1)
         bitbuf >>= code_size
         nbits -= code_size
-        return code
-
-    while True:
-        code = read()
         if code == clear:
             table = dict(base)
             next_code = eoi + 1
@@ -870,7 +869,17 @@ def decode_gif_features(
 # scratch: JFIF marker parse, DQT/SOF0/DHT/SOS, canonical Huffman
 # decode of the MSB-first bitstream (0xFF byte-unstuffing), DC
 # difference coding, run/size AC symbols with EOB, de-zigzag,
-# dequantize, full 2D IDCT (numpy cosine basis), level shift. One
+# dequantize, full 2D IDCT (numpy cosine basis), level shift. The
+# entropy decode is the only per-block Python: the bit reader fills
+# a byte at a time and matches Huffman codes one code length at a
+# time. `_jpeg_idct_blocks` transforms many blocks per stacked numpy
+# pass, bitwise the one-block formula, for the baseline and the
+# progressive decoder alike. The baseline parser transforms a band
+# of whole block rows, about _JPEG_IDCT_CHUNK blocks per component,
+# whenever the band fills: one pass per file for small images, and
+# its int64 coefficients and float temporaries stay a few MiB beside
+# the uint8 planes whatever the image size. The progressive decoder
+# keeps its whole coefficient grid, which its scans fill in turn. One
 # parser (`_jpeg_baseline_planes`) serves grayscale and YCbCr 4:4:4
 # color: interleaved MCUs (one block per component per MCU position),
 # one DC difference predictor PER COMPONENT, per-component DHT/DQT
@@ -902,6 +911,11 @@ _JPEG_IDCT_C = np.cos((2 * _k[None, :] + 1) * _k[:, None] * np.pi / 16) * np.whe
     _k[:, None] == 0, np.sqrt(1 / 8), np.sqrt(2 / 8)
 )
 del _k
+# natural (row-major) position -> zigzag index: coef = zz[..., _JPEG_UNZIGZAG]
+_JPEG_UNZIGZAG = np.argsort(_JPEG_ZIGZAG)
+# blocks per float IDCT pass: its float64 temporaries stay a few MiB
+# whatever the image size
+_JPEG_IDCT_CHUNK = 1024
 
 
 def _jpeg_canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
@@ -918,29 +932,52 @@ def _jpeg_canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[i
     return out
 
 
-def _jpeg_read_dht(body: bytes, huff: dict) -> None:
-    """Add each table of one DHT segment to ``huff``:
-    (class, id) -> {(code, length): symbol}."""
+# one Huffman table: (length, {code: symbol}) per code length in use,
+# shortest first
+_HuffTable = tuple[tuple[int, dict[int, int]], ...]
+
+
+def _jpeg_read_dht(body: bytes, huff: dict[tuple[int, int], _HuffTable]) -> None:
+    """Add each table of one DHT segment to ``huff``, keyed (class, id)."""
     off = 0
     while off < len(body):
         cls_id = body[off]
         bits = list(body[off + 1 : off + 17])
         nv = sum(bits)
         vals = list(body[off + 17 : off + 17 + nv])
-        codes = _jpeg_canonical_codes(bits, vals)
-        huff[(cls_id >> 4, cls_id & 0x0F)] = {
-            (c, l): s for s, (c, l) in codes.items()
-        }
+        by_len: dict[int, dict[int, int]] = {}
+        for s, (c, l) in _jpeg_canonical_codes(bits, vals).items():
+            by_len.setdefault(l, {})[c] = s
+        huff[(cls_id >> 4, cls_id & 0x0F)] = tuple(sorted(by_len.items()))
         off += 17 + nv
 
 
-def _jpeg_idct_block(zz: np.ndarray, q: np.ndarray) -> np.ndarray:
-    """De-zigzag and dequantize 64 coefficients, 2D IDCT, level shift
-    and clamp: one 8x8 block of uint8 pixels."""
-    coef = np.zeros(64, dtype=np.float64)
-    coef[_JPEG_ZIGZAG] = zz * q
-    block = _JPEG_IDCT_C.T @ coef.reshape(8, 8) @ _JPEG_IDCT_C
-    return np.clip(np.round(block + 128), 0, 255).astype(np.uint8)
+def _jpeg_idct_blocks(zz: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """De-zigzag and dequantize int64 coefficient blocks ``zz`` of
+    shape (..., n, 64) by quant tables ``q`` that broadcast against
+    them, 2D IDCT, level shift and clamp: (..., n, 8, 8) uint8 pixels.
+    The float pass runs _JPEG_IDCT_CHUNK blocks at a time. Each stacked
+    matmul is one 8x8 gemm per block, the arithmetic of a lone block,
+    so every pixel is bitwise what the one-block formula gives."""
+    out = np.empty(zz.shape[:-1] + (8, 8), dtype=np.uint8)
+    for s in range(0, zz.shape[-2], _JPEG_IDCT_CHUNK):
+        part = zz[..., s : s + _JPEG_IDCT_CHUNK, :]
+        coef = (part * q)[..., _JPEG_UNZIGZAG].astype(np.float64)
+        block = _JPEG_IDCT_C.T @ coef.reshape(part.shape[:-1] + (8, 8)) @ _JPEG_IDCT_C
+        # rint is np.round's kernel, minimum/maximum np.clip's, without
+        # their Python wrappers
+        out[..., s : s + _JPEG_IDCT_CHUNK, :, :] = np.minimum(
+            np.maximum(np.rint(block + 128), 0), 255
+        )
+    return out
+
+
+def _jpeg_tile(blocks: np.ndarray, nbh: int, nbw: int) -> np.ndarray:
+    """(..., nbh * nbw, 8, 8) blocks in raster order -> (..., nbh * 8,
+    nbw * 8) planes."""
+    lead = blocks.shape[:-3]
+    grid = blocks.reshape(lead + (nbh, nbw, 8, 8)).swapaxes(-3, -2)
+    return grid.reshape(lead + (nbh * 8, nbw * 8))
 
 
 class _JpegBitWriter:
@@ -973,41 +1010,50 @@ class _JpegBitWriter:
 
 
 class _JpegBitReader:
+    """MSB-first bits of one entropy-coded segment, 0xFF00 unstuffed.
+    The accumulator fills a byte at a time and only when a bit is
+    needed, so a truncated stream or a marker inside it raises exactly
+    when a bit of the missing or bad byte is asked for."""
+
     def __init__(self, data: bytes) -> None:
         self.data = data
         self.pos = 0
-        self.acc = 0
+        self.acc = 0  # holds the n unread bits
         self.n = 0
 
-    def bit(self) -> int:
-        if self.n == 0:
-            if self.pos >= len(self.data):
+    def _fill(self, k: int) -> None:
+        data, pos, acc, n = self.data, self.pos, self.acc, self.n
+        while n < k:
+            if pos >= len(data):
                 raise ValueError("JPEG entropy stream truncated")
-            b = self.data[self.pos]
-            self.pos += 1
+            b = data[pos]
+            pos += 1
             if b == 0xFF:  # unstuff
-                if self.pos < len(self.data) and self.data[self.pos] == 0x00:
-                    self.pos += 1
+                if pos < len(data) and data[pos] == 0x00:
+                    pos += 1
                 else:
                     raise ValueError("unexpected marker in entropy data")
-            self.acc = b
-            self.n = 8
-        self.n -= 1
-        return (self.acc >> self.n) & 1
+            acc = (acc << 8) | b
+            n += 8
+        self.pos, self.acc, self.n = pos, acc, n
 
     def bits(self, k: int) -> int:
-        v = 0
-        for _ in range(k):
-            v = (v << 1) | self.bit()
+        if self.n < k:
+            self._fill(k)
+        self.n -= k
+        v = self.acc >> self.n
+        self.acc &= (1 << self.n) - 1
         return v
 
-    def huff(self, table: dict[tuple[int, int], int]) -> int:
-        code, length = 0, 0
-        while length <= 16:
-            code = (code << 1) | self.bit()
-            length += 1
-            if (code, length) in table:
-                return table[(code, length)]
+    def huff(self, table: _HuffTable) -> int:
+        for length, codes in table:
+            if self.n < length:
+                self._fill(length)
+            sym = codes.get(self.acc >> (self.n - length))
+            if sym is not None:
+                self.n -= length
+                self.acc &= (1 << self.n) - 1
+                return sym
         raise ValueError("bad Huffman code")
 
 
@@ -1108,7 +1154,9 @@ def _jpeg_baseline_planes(buf: bytes):
     others skipped by length), canonical Huffman tables rebuilt FROM
     THE FILE, MSB-first bit reader with 0xFF unstuffing, DC difference
     + run/size AC decode, de-zigzag, dequantize, exact 2D IDCT via the
-    cosine basis matrix, level shift and clamp. One or three
+    cosine basis matrix (one stacked pass per band of block rows, about
+    _JPEG_IDCT_CHUNK blocks of every component), level shift and
+    clamp. One or three
     components, no subsampling, no restart markers — raises otherwise.
     Returns ``(w, h, ncomp, comp_order, planes)``: the SOF's component
     count, the scan's component ids in order, and each component's
@@ -1119,7 +1167,7 @@ def _jpeg_baseline_planes(buf: bytes):
     qts: dict[int, np.ndarray] = {}
     w = h = None
     comp_q: dict[int, int] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
+    huff: dict[tuple[int, int], _HuffTable] = {}
     comp_tabs: dict[int, tuple[int, int]] = {}
     comp_order: list[int] = []
     scan_start = None
@@ -1176,20 +1224,30 @@ def _jpeg_baseline_planes(buf: bytes):
         raise ValueError(f"bad JPEG dims {w}x{h}")
     if not nbw * nbh * max(1, len(comp_order)) <= 4 * (end - scan_start) + 64:
         raise ValueError("declared dims exceed entropy stream capacity")
-    planes = {
-        cid: np.zeros((nbh * 8, nbw * 8), dtype=np.uint8)
-        for cid in comp_order
-    }
-    prev_dc = {cid: 0 for cid in comp_order}
+    ncs = len(comp_order)
+    # per scan component: its Huffman tables and quant table (a quant
+    # table of one entry scales every coefficient, as numpy broadcasts)
+    tabs = [
+        (huff[(0, comp_tabs[cid][0])], huff[(1, comp_tabs[cid][1])]) for cid in comp_order
+    ]
+    q = np.empty((ncs, 1, 64), dtype=np.int64)
+    for ci, cid in enumerate(comp_order):
+        q[ci, 0] = qts[comp_q[cid]]
+    # the MCUs decode into a band of whole block rows, transformed into
+    # the planes whenever it fills: the int64 coefficients never
+    # outgrow one band of about _JPEG_IDCT_CHUNK blocks per component
+    rows = max(1, _JPEG_IDCT_CHUNK // nbw)
+    img = np.empty((ncs, nbh * 8, nbw * 8), dtype=np.uint8)
+    zz = np.zeros((ncs, min(rows, nbh) * nbw, 64), dtype=np.int64)
+    prev_dc = dict.fromkeys(comp_order, 0)  # a repeated id shares its predictor
     for bi in range(nbh):
-        for bj in range(nbw):
-            for cid in comp_order:
-                dc_tab = huff[(0, comp_tabs[cid][0])]
-                ac_tab = huff[(1, comp_tabs[cid][1])]
-                zz = np.zeros(64, dtype=np.int64)
+        r = bi % rows
+        for k in range(r * nbw, (r + 1) * nbw):
+            for ci, cid in enumerate(comp_order):
+                dc_tab, ac_tab = tabs[ci]
                 t = rd.huff(dc_tab)
                 prev_dc[cid] += _jpeg_extend(rd.bits(t), t)
-                zz[0] = prev_dc[cid]
+                zz[ci, k, 0] = prev_dc[cid]
                 i = 1
                 while i < 64:
                     sym = rd.huff(ac_tab)
@@ -1200,19 +1258,29 @@ def _jpeg_baseline_planes(buf: bytes):
                         continue
                     run, size = sym >> 4, sym & 0x0F
                     i += run
-                    zz[i] = _jpeg_extend(rd.bits(size), size)
+                    zz[ci, k, i] = _jpeg_extend(rd.bits(size), size)
                     i += 1
-                planes[cid][bi * 8 : bi * 8 + 8, bj * 8 : bj * 8 + 8] = (
-                    _jpeg_idct_block(zz, qts[comp_q[cid]])
-                )
-    return w, h, ncomp, comp_order, {cid: p[:h, :w] for cid, p in planes.items()}
+        if r + 1 == rows or bi + 1 == nbh:
+            band = _jpeg_idct_blocks(zz[:, : (r + 1) * nbw], q)
+            img[:, (bi - r) * 8 : (bi + 1) * 8] = _jpeg_tile(band, r + 1, nbw)
+            zz[:] = 0
+    # a repeated component id keeps its last block, as in MCU order
+    planes = {cid: img[ci, :h, :w] for ci, cid in enumerate(comp_order)}
+    return w, h, ncomp, comp_order, planes
+
+
+def _jpeg_mean(plane: np.ndarray) -> float:
+    """Mean of a uint8 plane. Its sum is an integer below 2**53, exact
+    in any summation order, so this is bitwise the mean of a float64
+    copy, without allocating that copy (8 bytes a pixel)."""
+    return float(plane.mean(dtype=np.float64))
 
 
 def _jpeg_features(buf: bytes) -> tuple:
     w, h, ncomp, comp_order, planes = _jpeg_baseline_planes(buf)
     if ncomp != 1:
         raise ValueError("grayscale baseline only")
-    return w, h, w * h, float(planes[comp_order[0]].astype(np.float64).mean())
+    return w, h, w * h, _jpeg_mean(planes[comp_order[0]])
 
 
 def decode_jpeg_features(
@@ -1223,7 +1291,9 @@ def decode_jpeg_features(
     only: marker walk (DQT/SOF0/DHT/SOS, others skipped by length),
     canonical Huffman tables rebuilt FROM THE FILE, MSB-first bit
     reader with 0xFF unstuffing, DC difference + run/size AC decode,
-    de-zigzag, dequantize, exact 2D IDCT via the cosine basis matrix,
+    de-zigzag, dequantize, exact 2D IDCT via the cosine basis matrix
+    (batched: one pass per band of about _JPEG_IDCT_CHUNK blocks, so
+    one per file for small images and bounded memory for large ones),
     level shift and clamp. Grayscale baseline (1 component, no
     subsampling, no restart markers) — raises otherwise. Features:
     (width, height, n_pixels, mean_gray)."""
@@ -1256,12 +1326,9 @@ def synth_jpeg444_payload(df: DataFrame, id_col: str) -> DataFrame:
 def _jpeg444_features(buf: bytes) -> tuple:
     w, h, _, comp_order, planes = _jpeg_baseline_planes(buf)
     if len(comp_order) == 1:  # grayscale: its one plane is Y, whatever its id
-        y = float(planes[comp_order[0]].astype(np.float64).mean())
+        y = _jpeg_mean(planes[comp_order[0]])
         return w, h, w * h, y, None, None
-    means = [
-        float(planes[cid].astype(np.float64).mean()) if cid in planes else None
-        for cid in (1, 2, 3)
-    ]
+    means = [_jpeg_mean(planes[cid]) if cid in planes else None for cid in (1, 2, 3)]
     return w, h, w * h, means[0], means[1], means[2]
 
 
@@ -1272,7 +1339,9 @@ def decode_jpeg444_features(
     """REAL full-color baseline JPEG decode (YCbCr 4:4:4): interleaved
     MCU entropy decode with one DC predictor per component,
     per-component quant/Huffman table selectors honored from SOF/SOS,
-    exact cosine-basis IDCT per block. Features are per-channel means
+    exact cosine-basis IDCT, batched over every component's blocks as
+    in `decode_jpeg_features` (one pass per band of block rows, so its
+    memory stays bounded). Features are per-channel means
     in YCbCr space (no colorspace conversion — the lossless part of
     the pipeline)."""
     fields = _IMAGE_DIMS + [
@@ -1386,7 +1455,7 @@ def _jpeg_progressive_features(buf: bytes) -> tuple:
     pos = 2
     qt = None
     w = h = None
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
+    huff: dict[tuple[int, int], _HuffTable] = {}
     zz = None  # (nblocks, 64) coefficient grid, int64
     nbw = nbh = 0
     prev_dc = 0
@@ -1452,6 +1521,10 @@ def _jpeg_progressive_features(buf: bytes) -> tuple:
                 if not nbw * nbh <= 8 * (seg_end - seg_start) + 64:
                     raise ValueError("declared dims exceed entropy stream capacity")
                 zz = np.zeros((nbw * nbh, 64), dtype=np.int64)
+            elif ss == 0:
+                # one component has one DC scan: a second one would
+                # re-add every DC difference onto the first scan's
+                raise ValueError("second DC scan")
             nblocks = zz.shape[0]
             if ss == 0:
                 dc_tab = huff[(0, sel >> 4)]
@@ -1490,12 +1563,8 @@ def _jpeg_progressive_features(buf: bytes) -> tuple:
         pos += 2 + ln
     if zz is None or qt is None:
         raise ValueError("no scan decoded")
-    img = np.zeros((nbh * 8, nbw * 8), dtype=np.uint8)
-    for b in range(zz.shape[0]):
-        bi, bj = divmod(b, nbw)
-        img[bi * 8 : bi * 8 + 8, bj * 8 : bj * 8 + 8] = _jpeg_idct_block(zz[b], qt)
-    img = img[:h, :w]
-    return w, h, w * h, n_scans, float(img.astype(np.float64).mean())
+    img = _jpeg_tile(_jpeg_idct_blocks(zz, qt), nbh, nbw)[:h, :w]
+    return w, h, w * h, n_scans, _jpeg_mean(img)
 
 
 def decode_jpeg_progressive_features(
@@ -1507,11 +1576,13 @@ def decode_jpeg_progressive_features(
     entropy decode into ONE per-block coefficient grid — DC scans code
     every block's DC diff (<< Al), AC band scans code zigzag indices
     [Ss, Se] with EOBn run symbols / ZRL / (run, size) coefficients —
-    then a single dequantize + 2D IDCT + crop pass. Same Arrow
+    then a single batched dequantize + 2D IDCT + crop pass over the
+    grid (its float temporaries bounded by _JPEG_IDCT_CHUNK blocks).
+    Same Arrow
     mapInPandas batch contract and on_error='null' dead letter as every
     other decoder. Envelope enforced in-kernel (raises otherwise):
-    grayscale, 8-bit, Ah = 0 (no successive-approximation refinement
-    scans), no restart intervals. Corrupt-SOF guards match the baseline
+    grayscale, 8-bit, one DC scan, Ah = 0 (no successive-approximation
+    refinement scans), no restart intervals. Corrupt-SOF guards match the baseline
     kernel: positive dims, and the block grid is allocated only after
     the (mandatory first) DC scan's entropy capacity bounds it — a
     corrupt SOF declaring 0xFFFF x 0xFFFF must quarantine, not

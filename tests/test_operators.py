@@ -1648,6 +1648,71 @@ def test_jpeg_progressive_equals_baseline_decode(spark):
         assert p[did]["n_scans"] == 2
 
 
+def test_jpeg_idct_blocks_bitwise_equal_the_one_block_formula():
+    # The decoders transform many blocks per stacked IDCT pass; each
+    # pixel must be bitwise what the one-block formula below gives
+    # (de-zigzag, dequantize, C.T @ X @ C, level shift, round, clamp).
+    # A numpy or BLAS change that reorders the 8x8 sums fails here.
+    # Sparse and dense blocks with magnitudes from 3 to 2047, a random
+    # 1-255 quant table per component, and more blocks per component
+    # than one float chunk holds.
+    from biodiversity_data_ingestion_spark.operators import multimodal as M
+
+    rng = np.random.default_rng(20261019)
+    shape = (3, M._JPEG_IDCT_CHUNK + 700, 64)
+    mag = rng.choice([3, 31, 255, 2047], size=shape[:-1] + (1,))
+    density = rng.choice([0.0, 0.05, 0.3, 1.0], size=shape[:-1] + (1,))
+    keep = rng.random(shape) < density
+    keep[..., 0] = True  # every block has its DC
+    zz = rng.integers(-mag, mag + 1, size=shape) * keep
+    q = rng.integers(1, 256, size=(3, 1, 64))
+
+    k = np.arange(8)
+    C = np.cos((2 * k[None, :] + 1) * k[:, None] * np.pi / 16) * np.where(
+        k[:, None] == 0, np.sqrt(1 / 8), np.sqrt(2 / 8)
+    )
+
+    def one_block(block, table):
+        coef = np.zeros(64, dtype=np.float64)
+        coef[M._JPEG_ZIGZAG] = block * table
+        px = C.T @ coef.reshape(8, 8) @ C
+        return np.clip(np.round(px + 128), 0, 255).astype(np.uint8)
+
+    want = np.array([[one_block(b, q[ci, 0]) for b in comp] for ci, comp in enumerate(zz)])
+    assert 0.2 < np.mean((want > 0) & (want < 255))  # mostly unclamped pixels
+    assert np.array_equal(M._jpeg_idct_blocks(zz, q), want)
+    # one table for all blocks: the progressive decoder's call
+    assert np.array_equal(M._jpeg_idct_blocks(zz[1], q[1, 0]), want[1])
+
+
+def _repeat_dc_scan(m: bytearray) -> None:
+    """Insert a copy of a progressive JPEG's first scan (its DC scan,
+    SOS segment and entropy data) right after it."""
+    import struct
+
+    from biodiversity_data_ingestion_spark.operators import multimodal as M
+
+    sos = m.index(b"\xff\xda")
+    (ln,) = struct.unpack_from(">H", m, sos + 2)
+    end = M._jpeg_entropy_end(bytes(m), sos + 2 + ln)
+    m[end:end] = m[sos:end]
+
+
+def test_jpeg_progressive_repeated_dc_scan_raises():
+    # A grayscale image has one DC scan. A repeated one would add its
+    # DC differences onto the first scan's: doc 5 would decode to the
+    # plausible (24, 16, 384, 3, 94.0) instead of (24, 16, 384, 2,
+    # 109.0). The decoder refuses it; the dead-letter frame is checked
+    # in test_corrupt_headers_quarantine_across_all_codecs.
+    from biodiversity_data_ingestion_spark.operators import multimodal as M
+
+    buf = bytearray(M._jpeg_progressive_payload(5))
+    assert M._jpeg_progressive_features(bytes(buf)) == (24, 16, 384, 2, 109.0)
+    _repeat_dc_scan(buf)
+    with pytest.raises(ValueError, match="second DC scan"):
+        M._jpeg_progressive_features(bytes(buf))
+
+
 def test_variant_props_malformed_json_quarantines(spark, tmp_path):
     # the pathological tier, VARIANT edition: a real event stream always
     # carries some garbage props strings. Strict parse_json raises on
@@ -2239,6 +2304,7 @@ def test_corrupt_headers_quarantine_across_all_codecs(spark):
              "null"),
             ("SOF2 precision=12", lambda p: pack(
                 "<B", bytes(p).index(b"\xff\xc2") + 4, 12), "null"),
+            ("DC scan repeated", lambda p: _repeat_dc_scan, "null"),
         ]),
     ]
 
@@ -2268,3 +2334,51 @@ def test_corrupt_headers_quarantine_across_all_codecs(spark):
                 assert got[probe] is not None, (
                     f"{name}/{label}: expected a self-consistent decode"
                 )
+
+
+_FUZZ_CODECS = ("wav", "bmp", "y4m", "png", "gif", "jpeg", "jpeg444", "jpeg_progressive")
+
+
+def _header_fuzz_rows() -> list[str]:
+    """The header fuzz: per codec, its doc-0 synth payload and 120
+    copies with 1-4 random byte writes in the first 64 bytes (a fresh
+    random.Random(20260816) per codec), each decoded by a direct
+    ``_<codec>_features`` call; any exception gives the all-null row,
+    as under on_error='null'. One repr per row, 968 in all."""
+    import random
+
+    from biodiversity_data_ingestion_spark.operators import multimodal as M
+
+    out = []
+    for name in _FUZZ_CODECS:
+        payload = M._wav_payload(0, 8000) if name == "wav" else getattr(
+            M, f"_{name}_payload")(0)
+        decode = getattr(M, f"_{name}_features")
+        n, rng = len(payload), random.Random(20260816)
+        cases = [payload]
+        for _ in range(120):
+            m = bytearray(payload)
+            for _ in range(rng.randint(1, 4)):
+                m[rng.randrange(min(64, n))] = rng.randrange(256)
+            cases.append(bytes(m))
+        width = len(decode(payload))
+        for i, buf in enumerate(cases):
+            try:
+                row = tuple(decode(buf))
+            except Exception:
+                row = (None,) * width
+            out.append(repr((name, i) + row))
+    return out
+
+
+def test_decoder_header_fuzz_outcomes_are_pinned():
+    # Every decoded row and quarantine outcome of the header fuzz,
+    # pinned as one digest: a change to any decoder that moves one of
+    # the 968 rows fails here. To see which rows moved, diff
+    # _header_fuzz_rows() between two trees.
+    import hashlib
+
+    rows = _header_fuzz_rows()
+    assert len(rows) == 968
+    digest = hashlib.sha256("\n".join(rows).encode()).hexdigest()
+    assert digest == "b6af45841de676947a671577c58b4f2b6d4f416e639c4943a3e0ac94a5b1914a"
