@@ -216,6 +216,21 @@ def _calibrate(spark) -> float:
     return round(time.perf_counter() - t0, 3)
 
 
+def time_query(spark, name: str, sf_dir: str, repeats: int) -> list[float]:
+    """Run registry query ``name`` ``repeats`` times back to back, each a
+    fresh build written to the noop sink, and return each repeat's
+    seconds rounded to the millisecond. The timer wraps the builder
+    only for EAGER queries (see the set above)."""
+    reps = []
+    for _ in range(repeats):
+        t0 = time.perf_counter()
+        df = QUERIES[name]["builder"](spark, sf_dir)
+        t1 = time.perf_counter() if name not in EAGER else t0
+        df.write.format("noop").mode("overwrite").save()
+        reps.append(round(time.perf_counter() - t1, 3))
+    return reps
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -261,18 +276,10 @@ def main() -> None:
         if qi and qi % _CAL_EVERY == 0:
             cal_times.append(_calibrate(spark))
         block_of[name] = len(cal_times) - 1
-        best = None
-        reps = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            df = QUERIES[name]["builder"](spark, sf_dir)
-            t1 = time.perf_counter() if name not in EAGER else t0
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t1
-            reps.append(round(dt, 3))
-            best = dt if best is None else min(best, dt)
-        all_reps[name] = reps
-        timings[name] = round(best, 3)
+        all_reps[name] = time_query(spark, name, sf_dir, 3)
+        # rounding is monotone: the min of the rounded repeats is the
+        # rounded min
+        timings[name] = min(all_reps[name])
         print(f"  {name}: {timings[name]:.3f}s", file=sys.stderr)
     cal_times.append(_calibrate(spark))
     cal = statistics.median(cal_times)

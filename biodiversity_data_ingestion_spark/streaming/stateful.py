@@ -1,28 +1,54 @@
-"""Custom stateful streaming operators (engine extension, SURVEY §2.9).
+"""Stateful streaming operators and their bounded-replay runners
+(engine extension, SURVEY §2.9).
 
-The reference's incremental story is the batch gate anti-join (J2). Its
-streaming analogue is a FIRST-SEEN-WINS dedup across micro-batches:
-emit each key the first time it appears and remember it in state —
-implemented with ``applyInPandasWithState`` (per-key state, GroupState
-timeouts available for TTL eviction).
+The reference's incremental story is the batch gate anti-join (J2); its
+streaming analogues live here. This module owns the runners for:
 
-Scale: state is one tiny record per distinct key, partitioned by key
-hash across executors; at 100 TB of events the state size tracks key
-cardinality, not input volume. Pair with a state-store TTL (timeout)
-when keys are unbounded.
+- dedup: first-seen-wins via ``applyInPandasWithState``
+  (:func:`first_seen_dedup`), ``dropDuplicates`` under a watermark and
+  ``dropDuplicatesWithinWatermark``;
+- stream-stream joins of purchases to the same user's events in the
+  preceding hour (inner, left outer, full outer), sharing one
+  watermarked join side and one final-watermark cut;
+- custom sessionization (:func:`stateful_sessions`, fixed or per-key
+  gap), replayed by :func:`run_staged_sessions` over a sentinel-staged
+  copy of the events, and running totals via
+  ``transformWithStateInPandas``;
+- ``foreachBatch`` sinks: the CDC upsert into a versioned table and
+  the quality-gated write.
+
+The events source, the memory-sink drain and the await every runner
+ends on live in ``replay.py``.
+
+Scale: grouped-map state is one small record per key, partitioned by
+key hash across executors; at 100 TB of events the state size tracks
+key cardinality, not input volume. Pair with a state-store TTL
+(timeout) when keys are unbounded.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import warnings
 from typing import Any, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    DoubleType,
+    LongType,
+    StructField,
+    StructType,
+    TimestampType,
+)
+
+from ..sources.tables import load_table, normalize_event_ts
+from .replay import await_drained, drain, events_stream
 
 
 def first_seen_dedup(
@@ -64,10 +90,7 @@ def run_first_seen_over_events(spark, sf_dir: str, query_name: str = "bdi_first_
     """Execute the stateful dedup as a real streaming query over the
     events table (file source, memory sink) and return the drained
     result: the first event per user."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructField, LongType, TimestampType
-
-    keyed = _events_stream(spark, sf_dir).select("user_id", "ts", "event_id")
+    keyed = events_stream(spark, sf_dir).select("user_id", "ts", "event_id")
     out_schema = StructType(
         [
             StructField("user_id", LongType()),
@@ -76,95 +99,12 @@ def run_first_seen_over_events(spark, sf_dir: str, query_name: str = "bdi_first_
         ]
     )
     deduped = first_seen_dedup(keyed, "user_id", ["ts", "event_id"], out_schema)
-    return _drain(deduped, query_name).select(
+    drain(deduped, query_name)
+    return spark.table(query_name).select(
         "user_id",
         F.col("ts").alias("first_ts"),
         F.col("event_id").alias("first_event_id"),
     )
-
-
-def _events_stream(spark, sf_dir: str):
-    """Bounded file-stream over the events table (shared by the runners):
-    schema from the batch footer, ts normalized (nanos-long / NTZ /
-    TIMESTAMP) exactly like sources/tables.py does for batch."""
-    from ..sources.tables import normalize_event_ts
-
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    return normalize_event_ts(stream)
-
-
-def _scaled_state_partitions(
-    stage: str,
-    target_partition_bytes: int = 128 << 20,
-    floor: int = 8,
-) -> int:
-    """Data-scaled state/shuffle partition count for a bounded staged
-    replay: ceil(staged bytes / target) with a small floor.
-
-    The stateful runners previously inherited the session's global
-    ``spark.sql.shuffle.partitions`` (sized for the batch queries) into
-    the streaming state exchange, so a tiny staged replay paid the full
-    per-partition micro-batch machinery (N state-store instances x
-    Python state workers x batches) for data that fills a handful of
-    partitions. Deriving the count from the staged input size keeps the
-    at-scale shape honest — a 100 TB replay gets bytes/128 MB
-    partitions — while small replays stop paying fixed overhead
-    (guide §2.2: fewer, larger reduce partitions; measured 20-25 %
-    off the drain at sf0.1)."""
-    from ..functions.partitioning import scaled_shuffle_partitions
-
-    return scaled_shuffle_partitions(
-        [stage], target_partition_bytes=target_partition_bytes, floor=floor
-    )
-
-
-class _shuffle_partitions_override:
-    """Scoped ``spark.sql.shuffle.partitions`` override (streaming
-    queries capture the value at query start; restore on exit so the
-    session's batch queries keep their configured count).
-
-    CONCURRENCY NOTE (r14 verdict #4): ``spark.conf`` is SESSION-global,
-    not thread-local — inside the ``with`` block any OTHER query planned
-    on the same session picks up the overridden count. The bench/entry
-    drivers run queries serially, so this is safe there; callers running
-    queries concurrently in one session must serialize around this
-    scope (or plan concurrent work on ``spark.newSession()``, whose conf
-    is independent)."""
-
-    def __init__(self, spark, n: int):
-        self.spark, self.n = spark, int(n)
-
-    def __enter__(self):
-        self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
-        return False
-
-
-def _drain(df, query_name: str, mode: str = "append"):
-    spark = df.sparkSession
-    try:
-        spark.catalog.dropTempView(query_name)
-    except Exception:
-        pass
-    q = (
-        df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout=300)
-    return spark.table(query_name)
 
 
 def run_stream_distinct_over_events(
@@ -178,14 +118,62 @@ def run_stream_distinct_over_events(
     bounds state where the J2-style gate would grow forever). Projecting
     ONLY the key columns keeps the result deterministic (which physical
     row wins the dedup is arbitrary; the key set is not)."""
-    stream = _events_stream(spark, sf_dir)
+    stream = events_stream(spark, sf_dir)
     deduped = (
         stream.withWatermark("ts", "1 hour")
         .select("user_id", "event_type", "ts")
         .dropDuplicates(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    return _drain(deduped, query_name)
+    drain(deduped, query_name)
+    return spark.table(query_name)
+
+
+def _join_side(
+    spark, sf_dir: str, side: str, event_type: str | None
+) -> DataFrame:
+    """One watermarked side of the purchase joins: the events stream,
+    filtered to ``event_type`` when given, as ``{side}_event_id``,
+    ``{side}_user`` and ``{side}_ts`` with a one-hour watermark."""
+    src = events_stream(spark, sf_dir)
+    if event_type is not None:
+        src = src.where(F.col("event_type") == event_type)
+    return src.select(
+        F.col("event_id").alias(f"{side}_event_id"),
+        F.col("user_id").alias(f"{side}_user"),
+        F.col("ts").alias(f"{side}_ts"),
+    ).withWatermark(f"{side}_ts", "1 hour")
+
+
+def _purchase_join(
+    spark, sf_dir: str, e_type: str | None, how: str = "inner"
+) -> DataFrame:
+    """Purchases joined (``how``) to the same user's ``e_type`` events,
+    or every event when None, in the preceding hour."""
+    return _join_side(spark, sf_dir, "p", "purchase").join(
+        _join_side(spark, sf_dir, "e", e_type),
+        F.expr("p_user = e_user AND e_ts >= p_ts - INTERVAL 1 HOUR AND e_ts <= p_ts"),
+        how,
+    )
+
+
+def _with_cut(spark, sf_dir: str, drained: DataFrame) -> DataFrame:
+    """``drained`` with the bounded replay's final global watermark as
+    column ``cut``: min(max purchase ts, max click ts) minus the one-hour
+    delay, computed from the batch table. The outer-join runners keep
+    only the null-padded rows this watermark has decided."""
+    ev = load_table(spark, sf_dir, "events")
+    cut = (
+        ev.where(F.col("event_type") == "purchase")
+        .agg(F.max("ts").alias("mp"))
+        .crossJoin(
+            ev.where(F.col("event_type") == "click").agg(F.max("ts").alias("me"))
+        )
+        .select(
+            (F.least("mp", "me") - F.expr("INTERVAL 1 HOUR")).alias("cut")
+        )
+    )
+    return drained.crossJoin(F.broadcast(cut))
 
 
 def run_stream_interval_join_over_events(
@@ -199,34 +187,11 @@ def run_stream_interval_join_over_events(
     event can be dropped once the watermark passes ts + 1 hour. Returns
     (p_event_id, e_event_id) match pairs (append mode emits each exactly
     once)."""
-    from pyspark.sql import functions as F
-
-    p = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("p_event_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
+    joined = _purchase_join(spark, sf_dir, None).select(
+        "p_event_id", "e_event_id"
     )
-    e = (
-        _events_stream(spark, sf_dir)
-        .select(
-            F.col("event_id").alias("e_event_id"),
-            F.col("user_id").alias("e_user"),
-            F.col("ts").alias("e_ts"),
-        )
-        .withWatermark("e_ts", "1 hour")
-    )
-    joined = p.join(
-        e,
-        F.expr(
-            "p_user = e_user AND e_ts >= p_ts - INTERVAL 1 HOUR AND e_ts <= p_ts"
-        ),
-    ).select("p_event_id", "e_event_id")
-    return _drain(joined, query_name)
+    drain(joined, query_name)
+    return spark.table(query_name)
 
 
 def run_stream_cdc_upsert_over_events(
@@ -247,10 +212,7 @@ def run_stream_cdc_upsert_over_events(
 
     Returns the final state table (user_id, ts, event_type, value).
     """
-    import os
     import tempfile
-
-    from pyspark.sql import functions as F
 
     from ..operators.dedup import keep_min_by
     from ..sources import sinks
@@ -268,13 +230,12 @@ def run_stream_cdc_upsert_over_events(
             latest = keep_min_by(combined, ["user_id"], order)
         sinks.write_versioned(latest, base_dir, "state", version=f"b{batch_id:06d}")
 
-    stream = _events_stream(spark, sf_dir).select(*cols)
-    q = (
+    stream = events_stream(spark, sf_dir).select(*cols)
+    await_drained(
         stream.writeStream.foreachBatch(apply_batch)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout=300)
     return sinks.read_current(spark, base_dir).select(
         "user_id", "ts", "event_type", "value"
     )
@@ -303,50 +264,12 @@ def run_stream_left_join_over_events(
     stringified ('none') to keep dtypes exact under the strict
     comparator.
     """
-    from pyspark.sql import functions as F
-
-    from ..sources.tables import load_table
-
-    p = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("p_event_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
+    joined = _purchase_join(spark, sf_dir, "click", "left_outer").select(
+        "p_event_id", "p_ts", "e_event_id"
     )
-    e = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("e_event_id"),
-            F.col("user_id").alias("e_user"),
-            F.col("ts").alias("e_ts"),
-        )
-        .withWatermark("e_ts", "1 hour")
-    )
-    joined = p.join(
-        e,
-        F.expr("p_user = e_user AND e_ts >= p_ts - INTERVAL 1 HOUR AND e_ts <= p_ts"),
-        "left_outer",
-    ).select("p_event_id", "p_ts", "e_event_id")
-    drained = _drain(joined, query_name)
-
-    ev = load_table(spark, sf_dir, "events")
-    cut = (
-        ev.where(F.col("event_type") == "purchase")
-        .agg(F.max("ts").alias("mp"))
-        .crossJoin(
-            ev.where(F.col("event_type") == "click").agg(F.max("ts").alias("me"))
-        )
-        .select(
-            (F.least("mp", "me") - F.expr("INTERVAL 1 HOUR")).alias("cut")
-        )
-    )
+    drain(joined, query_name)
     return (
-        drained.crossJoin(F.broadcast(cut))
+        _with_cut(spark, sf_dir, spark.table(query_name))
         .where(F.col("p_ts") < F.col("cut"))
         .select(
             "p_event_id",
@@ -383,55 +306,17 @@ def run_stream_full_join_over_events(
     stringified ('none') for the strict comparator; the nullable epoch
     columns stay BIGINT in both engines.
     """
-    from pyspark.sql import functions as F
-
-    from ..sources.tables import load_table
-
-    p = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("p_event_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
+    joined = _purchase_join(spark, sf_dir, "click", "full_outer").select(
+        "p_event_id", "p_ts", "e_event_id", "e_ts"
     )
-    e = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("e_event_id"),
-            F.col("user_id").alias("e_user"),
-            F.col("ts").alias("e_ts"),
-        )
-        .withWatermark("e_ts", "1 hour")
-    )
-    joined = p.join(
-        e,
-        F.expr("p_user = e_user AND e_ts >= p_ts - INTERVAL 1 HOUR AND e_ts <= p_ts"),
-        "full_outer",
-    ).select("p_event_id", "p_ts", "e_event_id", "e_ts")
-    drained = _drain(joined, query_name)
-
-    ev = load_table(spark, sf_dir, "events")
-    cut = (
-        ev.where(F.col("event_type") == "purchase")
-        .agg(F.max("ts").alias("mp"))
-        .crossJoin(
-            ev.where(F.col("event_type") == "click").agg(F.max("ts").alias("me"))
-        )
-        .select(
-            (F.least("mp", "me") - F.expr("INTERVAL 1 HOUR")).alias("cut")
-        )
-    )
+    drain(joined, query_name)
     matched = F.col("p_event_id").isNotNull() & F.col("e_event_id").isNotNull()
     p_only = F.col("e_event_id").isNull() & (F.col("p_ts") < F.col("cut"))
     e_only = F.col("p_event_id").isNull() & (
         F.col("e_ts") < F.col("cut") - F.expr("INTERVAL 1 HOUR")
     )
     return (
-        drained.crossJoin(F.broadcast(cut))
+        _with_cut(spark, sf_dir, spark.table(query_name))
         .where(matched | p_only | e_only)
         .select(
             F.coalesce(F.col("p_event_id").cast("string"), F.lit("none")).alias(
@@ -464,14 +349,15 @@ def run_stream_dedup_within_watermark_over_events(
     delay to the real duplicate window (minutes), which is where the
     state bound pays off.
     """
-    stream = _events_stream(spark, sf_dir)
+    stream = events_stream(spark, sf_dir)
     deduped = (
         stream.withWatermark("ts", "3650 days")
         .select("user_id", "event_type", "ts")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    return _drain(deduped, query_name)
+    drain(deduped, query_name)
+    return spark.table(query_name)
 
 
 def _merge_sessions_vec(
@@ -586,8 +472,6 @@ def stateful_sessions(
     after upgrading across either change. The bounded-replay runners in
     this repo always stage into a new temp dir, so they are unaffected.
     """
-    from pyspark.sql import functions as F
-
     gap_us = gap_minutes * 60_000_000
 
     def _row(user_id, s):
@@ -754,16 +638,12 @@ def _stage_events_with_sentinel(
     output is COMPLETE — the streaming result equals the batch oracle.
     (An unbounded production source needs no sentinel: the next real
     event advances the watermark.)"""
-    import shutil
     import tempfile
     import time as _time
 
     import pyarrow.parquet as pq
 
     src = os.path.join(sf_dir, "events.parquet")
-    stage = tempfile.mkdtemp(prefix="bdi_sess_stage_")
-    dst = os.path.join(stage, "00_events.parquet")
-    shutil.copyfile(src, dst)
     # max(ts) from parquet ROW-GROUP STATISTICS — metadata only, zero
     # data pages read. The previous implementation materialized the
     # full ts column on the driver (pq.read_table + Python max), which
@@ -833,6 +713,11 @@ def _stage_events_with_sentinel(
                 "TIMESTAMP(NANOS) ceiling (2262-04-11); filter or cap "
                 "malformed far-future timestamps upstream"
             ) from None
+    # stage only once the sentinel fits: a corpus that fails the
+    # headroom check above leaves no stage dir behind
+    stage = tempfile.mkdtemp(prefix="bdi_sess_stage_")
+    dst = os.path.join(stage, "00_events.parquet")
+    shutil.copyfile(src, dst)
     # Write the sentinel THROUGH SPARK against the staged file's own
     # Spark-visible schema. A pyarrow-written sentinel reproduces the
     # source's ARROW schema but not necessarily its PARQUET physical
@@ -885,6 +770,66 @@ def _stage_events_with_sentinel(
     return stage
 
 
+def run_staged_sessions(
+    spark, sf_dir: str, query_name: str, gap_minutes_for_key=None
+) -> tuple[DataFrame, StreamingQuery]:
+    """The sentinel-staged bounded replay of :func:`stateful_sessions`
+    (10-minute gap, or ``gap_minutes_for_key``): stage the events with a
+    sentinel, drain the sessions in append mode at a state-partition
+    count scaled from the stage directory, and remove the stage.
+
+    Returns the per-user sessions without the sentinel's, and the
+    terminated query (its ``recentProgress`` holds the per-batch
+    progress)."""
+    stage = _stage_events_with_sentinel(spark, sf_dir)
+    try:
+        batch_schema = spark.read.parquet(
+            os.path.join(stage, "00_events.parquet")
+        ).schema
+        # ONE data batch (no maxFilesPerTrigger): events + sentinel land
+        # in the same micro-batch. The sentinel is purely a watermark
+        # vehicle — it is its own key, the state kernel sorts each
+        # group's batch by ts, and timeouts fire in the final no-data
+        # batch either way — so splitting it into a second batch only
+        # repeated the whole state machinery (plan + state-store commit
+        # + Python state workers per partition) for one row. A/B at
+        # sf0.1: 8.0 s -> 4.0 s drain, output hash identical (guide
+        # §1.2: remove unnecessary passes).
+        stream = normalize_event_ts(
+            spark.readStream.schema(batch_schema).parquet(stage)
+        )
+        keyed = (
+            # untimed events quarantine BEFORE the state machine: unlike
+            # the built-in windowed aggs (which silently drop NULL event
+            # times at the watermark), the grouped-map state kernel would
+            # receive the NULL and crash comparing None > Timestamp
+            stream.where(F.col("ts").isNotNull())
+            .withWatermark("ts", "1 minute")
+            .select("user_id", "ts", "value")
+        )
+        out_schema = StructType(
+            [
+                StructField("session_start", TimestampType()),
+                StructField("user_id", LongType()),
+                StructField("n_events", LongType()),
+                StructField("sum_value", DoubleType()),
+            ]
+        )
+        sessions = stateful_sessions(
+            keyed, 10, out_schema, gap_minutes_for_key=gap_minutes_for_key
+        )
+        # partition-count-independent result (oracle-parity swept at
+        # 3/32/200 partitions); only the state-exchange width changes
+        q = drain(sessions, query_name, scale=stage)
+    finally:
+        # the memory sink holds the rows; the staged copy is dead weight
+        shutil.rmtree(stage, ignore_errors=True)
+    drained = spark.table(query_name)
+    # eqNullSafe: the NULL-user session must SURVIVE this filter (SQL
+    # window partitioning emits it; plain != would NULL it away)
+    return drained.where(~F.col("user_id").eqNullSafe(F.lit(_SENTINEL_USER))), q
+
+
 def run_stream_stateful_sessions_over_events(
     spark, sf_dir: str, query_name: str = "bdi_stateful_sessions"
 ) -> DataFrame:
@@ -892,62 +837,7 @@ def run_stream_stateful_sessions_over_events(
     query (file source + sentinel flush, memory sink, append mode) and
     return per-user sessions — must equal the batch gaps-and-islands
     aggregation (the stream_user_sessions oracle)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        TimestampType,
-    )
-
-    from ..sources.tables import normalize_event_ts
-
-    stage = _stage_events_with_sentinel(spark, sf_dir)
-    batch_schema = spark.read.parquet(os.path.join(stage, "00_events.parquet")).schema
-    # ONE data batch (no maxFilesPerTrigger): events + sentinel land in
-    # the same micro-batch. The sentinel is purely a watermark vehicle —
-    # it is its own key, the state kernel sorts each group's batch by
-    # ts, and timeouts fire in the final no-data batch either way — so
-    # splitting it into a second batch only repeated the whole state
-    # machinery (plan + state-store commit + Python state workers per
-    # partition) for one row. A/B at sf0.1: 8.0 s -> 4.0 s drain,
-    # output hash identical (guide §1.2: remove unnecessary passes).
-    stream = normalize_event_ts(
-        spark.readStream.schema(batch_schema).parquet(stage)
-    )
-    keyed = (
-        # untimed events quarantine BEFORE the state machine: unlike the
-        # built-in windowed aggs (which silently drop NULL event times at
-        # the watermark), the grouped-map state kernel would receive the
-        # NULL and crash comparing None > Timestamp
-        stream.where(F.col("ts").isNotNull())
-        .withWatermark("ts", "1 minute")
-        .select("user_id", "ts", "value")
-    )
-    out_schema = StructType(
-        [
-            StructField("session_start", TimestampType()),
-            StructField("user_id", LongType()),
-            StructField("n_events", LongType()),
-            StructField("sum_value", DoubleType()),
-        ]
-    )
-    sessions = stateful_sessions(keyed, 10, out_schema)
-    try:
-        # partition-count-independent result (oracle-parity swept at
-        # 3/32/200 partitions); only the state-exchange width changes
-        with _shuffle_partitions_override(
-            spark, _scaled_state_partitions(stage)
-        ):
-            drained = _drain(sessions, query_name)
-    finally:
-        # the memory sink holds the rows; the staged copy is dead weight
-        import shutil
-
-        shutil.rmtree(stage, ignore_errors=True)
-    # eqNullSafe: the NULL-user session must SURVIVE this filter (SQL
-    # window partitioning emits it; plain != would NULL it away)
-    return drained.where(~F.col("user_id").eqNullSafe(F.lit(_SENTINEL_USER)))
+    return run_staged_sessions(spark, sf_dir, query_name)[0]
 
 
 def run_stream_dynamic_gap_sessions_over_events(
@@ -962,54 +852,10 @@ def run_stream_dynamic_gap_sessions_over_events(
     Same sentinel-staged bounded replay + watermark flush as the
     fixed-gap runner; equals the batch gaps-and-islands oracle with
     the same per-user gap expression."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        TimestampType,
-    )
-
-    from ..sources.tables import normalize_event_ts
-
-    stage = _stage_events_with_sentinel(spark, sf_dir)
-    batch_schema = spark.read.parquet(os.path.join(stage, "00_events.parquet")).schema
-    # one data batch — see the fixed-gap runner for the A/B rationale
-    stream = normalize_event_ts(
-        spark.readStream.schema(batch_schema).parquet(stage)
-    )
-    keyed = (
-        stream.where(F.col("ts").isNotNull())  # see the fixed-gap runner
-        .withWatermark("ts", "1 minute")
-        .select("user_id", "ts", "value")
-    )
-    out_schema = StructType(
-        [
-            StructField("session_start", TimestampType()),
-            StructField("user_id", LongType()),
-            StructField("n_events", LongType()),
-            StructField("sum_value", DoubleType()),
-        ]
-    )
-    sessions = stateful_sessions(
-        keyed,
-        10,
-        out_schema,
+    return run_staged_sessions(
+        spark, sf_dir, query_name,
         gap_minutes_for_key=lambda key: 5 + (key[0] % 3) * 5,
-    )
-    try:
-        # same data-scaled state-partition policy as the fixed-gap runner
-        with _shuffle_partitions_override(
-            spark, _scaled_state_partitions(stage)
-        ):
-            drained = _drain(sessions, query_name)
-    finally:
-        import shutil
-
-        shutil.rmtree(stage, ignore_errors=True)
-    # eqNullSafe: the NULL-user session must SURVIVE this filter (SQL
-    # window partitioning emits it; plain != would NULL it away)
-    return drained.where(~F.col("user_id").eqNullSafe(F.lit(_SENTINEL_USER)))
+    )[0]
 
 
 def _stage_events_chunks(sf_dir: str, n_chunks: int = 2) -> str:
@@ -1071,13 +917,10 @@ def run_stream_running_totals_over_events(
             "(absent in this container; its state server protocol is "
             "protobuf-framed)"
         )
-    from pyspark.sql import functions as F
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
     )
-
-    from ..sources.tables import normalize_event_ts
 
     class RunningTotals(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -1131,16 +974,14 @@ def run_stream_running_totals_over_events(
                 timeMode="None",
             )
         )
-        drained = _drain(emitted, query_name, mode="update")
+        drain(emitted, query_name, "update")
     finally:
         if prev is None:
             spark.conf.unset(prov_key)
         else:
             spark.conf.set(prov_key, prev)
-        import shutil
-
         shutil.rmtree(stage, ignore_errors=True)
-    return drained.groupBy("user_id").agg(
+    return spark.table(query_name).groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.round(F.max_by("sum_value", "n_events"), 2).alias("sum_value"),
     )
@@ -1171,8 +1012,6 @@ def run_stream_quality_gated_write(
     import json
 
     def _process(batch_df, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         batch_df = batch_df.cache()
         try:
             stats = batch_df.agg(
@@ -1204,10 +1043,9 @@ def run_stream_quality_gated_write(
         finally:
             batch_df.unpersist()
 
-    q = (
+    await_drained(
         source_df.writeStream.foreachBatch(_process)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)

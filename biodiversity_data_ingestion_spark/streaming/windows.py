@@ -1,4 +1,5 @@
-"""Structured Streaming operators (engine extension beyond reference).
+"""Built-in windowed streaming aggregations (engine extension beyond
+reference).
 
 The reference is purely bounded batch (SURVEY.md §2.9: no watermarks,
 no event-time windows anywhere); its "incremental" story is daily
@@ -6,6 +7,13 @@ re-builds plus the gate anti-join. This module adds the Structured
 Streaming surface a modern large-scale pipeline needs, expressed so the
 STREAMING result is bit-identical to the batch aggregation over the
 same data — which is how it is oracle-checked.
+
+It owns the window builders (tumbling, sliding, session) and their
+runners: the five memory-sink replays (tumbling counts, sessions,
+sliding windows, windowed top-k, stream-static enrichment), each
+drained in complete mode at a partition count scaled from
+``events.parquet``, and the append-mode parquet-sink runner. The
+events source, the drain and the await live in ``replay.py``.
 
 Scale notes: the windowed aggregation is stateful — state is keyed by
 (window, event_type), so state size is bounded by windows x types, not
@@ -22,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.decimals import dec_sum
+from .replay import await_drained, drain, events_stream
 
 
 def windowed_event_counts(events: DataFrame, window: str = "1 hour",
@@ -92,69 +101,6 @@ def session_event_counts(events: DataFrame, gap: str = "10 minutes",
     )
 
 
-def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events table as a file-stream source (micro-batch replay).
-
-    On a cluster the same downstream plans run over Kafka/files
-    unbounded with watermarks bounding state; here the bounded replay
-    lets streaming results be oracle-checked against batch SQL.
-    """
-    from ..sources.tables import normalize_event_ts
-
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", "1")
-        # file-stream sources take a directory; glob down to the events table
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    # normalize nanos-long / TIMESTAMP_NTZ / TIMESTAMP exactly like the
-    # batch path — withWatermark requires TIMESTAMP, not NTZ
-    return normalize_event_ts(stream)
-
-
-def _drain_to_memory_table(
-    spark: SparkSession,
-    agg: DataFrame,
-    query_name: str,
-    sf_dir: str | None = None,
-) -> DataFrame:
-    """Drain a bounded streaming aggregate into a memory table.
-
-    When ``sf_dir`` is given, the streaming state/shuffle partition
-    count is derived from the events table's on-disk size for the
-    duration of the query (same data-scaled policy as the stateful
-    runners — see functions.partitioning.scaled_shuffle_partitions;
-    results are partition-count independent, only the state-exchange
-    width changes)."""
-    from .stateful import _shuffle_partitions_override
-    from ..functions.partitioning import scaled_shuffle_partitions
-
-    try:
-        spark.catalog.dropTempView(query_name)
-    except Exception:
-        pass
-
-    def _start_and_drain():
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout=300)
-
-    if sf_dir is not None:
-        n = scaled_shuffle_partitions([f"{sf_dir}/events.parquet"])
-        with _shuffle_partitions_override(spark, n):
-            _start_and_drain()
-    else:
-        _start_and_drain()
-    return spark.table(query_name)
-
-
 def run_stream_over_events(
     spark: SparkSession, sf_dir: str, query_name: str = "bdi_stream_events"
 ) -> DataFrame:
@@ -167,10 +113,9 @@ def run_stream_over_events(
     oracle checks, wrong for production. The at-scale path is
     :func:`run_stream_append_to_files` (append mode, durable sink,
     watermark-finalized windows, bounded state)."""
-    return _drain_to_memory_table(
-        spark, windowed_event_counts(events_stream(spark, sf_dir)), query_name,
-        sf_dir=sf_dir,
-    )
+    drain(windowed_event_counts(events_stream(spark, sf_dir)), query_name,
+          "complete", f"{sf_dir}/events.parquet")
+    return spark.table(query_name)
 
 
 def run_stream_append_to_files(
@@ -206,7 +151,7 @@ def run_stream_append_to_files(
         .queryName(query_name)
         .start()
     )
-    q.awaitTermination(timeout=300)
+    await_drained(q)
     return spark.read.parquet(out_dir)
 
 
@@ -221,10 +166,9 @@ def run_stream_sessions_over_events(
     the watermark closes sessions whose gap has definitively passed.
     Drained over the bounded replay, the result must equal the batch
     gaps-and-islands aggregation (the user_sessions oracle)."""
-    return _drain_to_memory_table(
-        spark, session_event_counts(events_stream(spark, sf_dir)), query_name,
-        sf_dir=sf_dir,
-    )
+    drain(session_event_counts(events_stream(spark, sf_dir)), query_name,
+          "complete", f"{sf_dir}/events.parquet")
+    return spark.table(query_name)
 
 
 def run_stream_sliding_over_events(
@@ -233,10 +177,9 @@ def run_stream_sliding_over_events(
     """Sliding event-time windows executed as a real streaming query
     (duration 2h, slide 1h: every event lands in two windows; state
     keyed by (window, type), bounded by time range x types)."""
-    return _drain_to_memory_table(
-        spark, sliding_event_counts(events_stream(spark, sf_dir)), query_name,
-        sf_dir=sf_dir,
-    )
+    drain(sliding_event_counts(events_stream(spark, sf_dir)), query_name,
+          "complete", f"{sf_dir}/events.parquet")
+    return spark.table(query_name)
 
 
 def run_stream_windowed_topk_over_events(
@@ -251,10 +194,9 @@ def run_stream_windowed_topk_over_events(
     the event stream."""
     from pyspark.sql import Window as W
 
-    agg = _drain_to_memory_table(
-        spark, windowed_event_counts(events_stream(spark, sf_dir)), query_name,
-        sf_dir=sf_dir,
-    )
+    drain(windowed_event_counts(events_stream(spark, sf_dir)), query_name,
+          "complete", f"{sf_dir}/events.parquet")
+    agg = spark.table(query_name)
     w = W.partitionBy("window_start").orderBy(
         F.desc("n_events"), "event_type"
     )
@@ -274,8 +216,6 @@ def run_stream_static_enrichment_over_events(
     pattern. The static side is planned once and broadcast into every
     micro-batch; no stream-side state is created by the join itself.
     Aggregated per tier x type so the drained result is oracle-sized."""
-    from pyspark.sql import functions as F
-
     ev = events_stream(spark, sf_dir)
     tiers = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -291,4 +231,5 @@ def run_stream_static_enrichment_over_events(
         # not deterministic for double sums (see plans/_q1)
         dec_sum("value").alias("sum_value"),
     )
-    return _drain_to_memory_table(spark, enriched, query_name, sf_dir=sf_dir)
+    drain(enriched, query_name, "complete", f"{sf_dir}/events.parquet")
+    return spark.table(query_name)

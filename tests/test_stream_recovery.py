@@ -444,9 +444,16 @@ def test_sentinel_staging_near_timestamp_ceiling(spark, tmp_path):
     # internals traceback
     import pytest as _pytest
 
+    import tempfile
+
+    def stages():
+        return set(glob.glob(os.path.join(tempfile.gettempdir(), "bdi_sess_stage_*")))
+
     at_edge = pd.Timestamp.max - pd.Timedelta(hours=2)
+    before = stages()
     with _pytest.raises(ValueError, match="headroom above max"):
         _stage_events_with_sentinel(spark, stage_dir(at_edge))
+    assert stages() == before, "a failed staging must leave no stage dir"
 
     # ordinary data: default margin unchanged, and NO degradation warn
     normal = pd.Timestamp("2024-06-01 12:00:00")

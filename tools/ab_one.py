@@ -16,7 +16,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -29,8 +28,7 @@ def main() -> int:
     ap.add_argument("--tag", default="")
     args = ap.parse_args()
 
-    from bench import EAGER
-    from biodiversity_data_ingestion_spark.plans.queries import QUERIES
+    from bench import time_query
     from biodiversity_data_ingestion_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -38,13 +36,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # warm-up
 
-    reps = []
-    for _ in range(args.reps):
-        t0 = time.perf_counter()
-        df = QUERIES[args.query]["builder"](spark, sf_dir)
-        t1 = time.perf_counter() if args.query not in EAGER else t0
-        df.write.format("noop").mode("overwrite").save()
-        reps.append(round(time.perf_counter() - t1, 3))
+    reps = time_query(spark, args.query, sf_dir, args.reps)
     print(
         json.dumps(
             {

@@ -1,14 +1,16 @@
 #!/usr/bin/env python
-"""Decompose the stream_stateful_sessions drain (r15, VERDICT r14 #3).
+"""Decompose the stream_stateful_sessions replay (r15, VERDICT r14 #3).
 
-Runs the sentinel-staged bounded replay with a chosen state-partition
-count and Arrow batch size, and prints the per-micro-batch
+Runs the sentinel-staged bounded replay through
+``streaming.stateful.run_staged_sessions``, the runner the registry
+query uses (state partitions scaled from the stage directory), with a
+chosen Arrow batch size, and prints the per-micro-batch
 StreamingQueryProgress durations (triggerExecution, addBatch,
-stateOperators commit times, number of batches) plus the staging and
-total drain wall-clock — so the remaining cost (state-store commits vs
-Python state workers vs batch machinery) is attributable.
+stateOperators commit times, number of batches) plus the replay's
+wall-clock, staging included — so the remaining cost (state-store
+commits vs Python state workers vs batch machinery) is attributable.
 
-    SPARK_GRAFT_SF_DIR=... python tools/profile_stateful.py --partitions 8
+    SPARK_GRAFT_SF_DIR=... python tools/profile_stateful.py --reps 3
 """
 
 from __future__ import annotations
@@ -25,22 +27,13 @@ sys.path.insert(0, REPO)
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--partitions", type=int, default=0,
-                    help="state/shuffle partitions (0 = the operator's "
-                         "data-scaled policy)")
     ap.add_argument("--arrow-batch", type=int, default=0,
                     help="spark.sql.execution.arrow.maxRecordsPerBatch "
                          "(0 = session default 10000)")
     ap.add_argument("--reps", type=int, default=3)
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        DoubleType, LongType, StructField, StructType, TimestampType,
-    )
-
     from biodiversity_data_ingestion_spark.session import get_spark
-    from biodiversity_data_ingestion_spark.sources.tables import normalize_event_ts
     from biodiversity_data_ingestion_spark.streaming import stateful as st
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -52,75 +45,29 @@ def main() -> int:
         )
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
-    out_schema = StructType([
-        StructField("session_start", TimestampType()),
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("sum_value", DoubleType()),
-    ])
-
     for rep in range(args.reps):
         t0 = time.perf_counter()
-        stage = st._stage_events_with_sentinel(spark, sf_dir)
-        t_stage = time.perf_counter() - t0
-        try:
-            batch_schema = spark.read.parquet(
-                os.path.join(stage, "00_events.parquet")
-            ).schema
-            stream = normalize_event_ts(
-                spark.readStream.schema(batch_schema).parquet(stage)
-            )
-            keyed = (
-                stream.where(F.col("ts").isNotNull())
-                .withWatermark("ts", "1 minute")
-                .select("user_id", "ts", "value")
-            )
-            sessions = st.stateful_sessions(keyed, 10, out_schema)
-            nparts = args.partitions or st._scaled_state_partitions(stage)
-            t1 = time.perf_counter()
-            with st._shuffle_partitions_override(spark, nparts):
-                try:
-                    spark.catalog.dropTempView("prof_sessions")
-                except Exception:
-                    pass
-                q = (
-                    sessions.writeStream.format("memory")
-                    .queryName("prof_sessions")
-                    .outputMode("append")
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination(timeout=300)
-            t_drain = time.perf_counter() - t1
-            n_rows = spark.table("prof_sessions").count()
-            batches = []
-            for p in q.recentProgress:
-                d = p["durationMs"] if isinstance(p, dict) else json.loads(p.json)["durationMs"]
-                pj = p if isinstance(p, dict) else json.loads(p.json)
-                so = pj.get("stateOperators") or []
-                batches.append({
-                    "batchId": pj.get("batchId"),
-                    "numInputRows": pj.get("numInputRows"),
-                    "durationMs": d,
-                    "stateCommitMs": [
-                        o.get("commitTimeMs") for o in so
-                    ],
-                    "stateRowsUpdated": [
-                        o.get("numRowsUpdated") for o in so
-                    ],
-                })
-            print(json.dumps({
-                "rep": rep,
-                "partitions": nparts,
-                "arrow_batch": args.arrow_batch or 10000,
-                "stage_s": round(t_stage, 3),
-                "drain_s": round(t_drain, 3),
-                "rows": n_rows,
-                "batches": batches,
-            }))
-        finally:
-            import shutil
-            shutil.rmtree(stage, ignore_errors=True)
+        sessions, q = st.run_staged_sessions(spark, sf_dir, "prof_sessions")
+        t_replay = time.perf_counter() - t0
+        batches = []
+        for p in q.recentProgress:
+            pj = json.loads(p.json)
+            so = pj.get("stateOperators") or []
+            batches.append({
+                "batchId": pj.get("batchId"),
+                "numInputRows": pj.get("numInputRows"),
+                "durationMs": pj["durationMs"],
+                "stateCommitMs": [o.get("commitTimeMs") for o in so],
+                "stateRowsUpdated": [o.get("numRowsUpdated") for o in so],
+                "statePartitions": [o.get("numShufflePartitions") for o in so],
+            })
+        print(json.dumps({
+            "rep": rep,
+            "arrow_batch": args.arrow_batch or 10000,
+            "replay_s": round(t_replay, 3),
+            "rows": sessions.count(),
+            "batches": batches,
+        }))
     spark.stop()
     return 0
 

@@ -25,7 +25,6 @@ import json
 import os
 import statistics
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -53,8 +52,7 @@ def main() -> int:
     ap.add_argument("--out", default=None, help="also write the JSON here")
     args = ap.parse_args()
 
-    from bench import EAGER, _calibrate  # bench.py methodology, reused
-    from biodiversity_data_ingestion_spark.plans.queries import QUERIES
+    from bench import _calibrate, time_query  # bench.py methodology, reused
     from biodiversity_data_ingestion_spark.session import get_spark
 
     names = args.queries or list(DEFAULT_QUERIES)
@@ -72,19 +70,9 @@ def main() -> int:
     all_reps: dict[str, list[float]] = {}
     for name in names:
         spark.sparkContext.setJobDescription(f"scaling-leg: {name}")
-        best = None
-        reps = []
-        for _ in range(args.repeats):
-            t0 = time.perf_counter()
-            df = QUERIES[name]["builder"](spark, sf_dir)
-            t1 = time.perf_counter() if name not in EAGER else t0
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t1
-            reps.append(round(dt, 3))
-            best = dt if best is None else min(best, dt)
+        all_reps[name] = time_query(spark, name, sf_dir, args.repeats)
         spark.sparkContext.setJobDescription(None)
-        all_reps[name] = reps
-        timings[name] = round(best, 3)
+        timings[name] = min(all_reps[name])
         print(f"  {name}: {timings[name]:.3f}s", file=sys.stderr)
         cal_times.append(_calibrate(spark))
     cal = statistics.median(cal_times)
