@@ -21,11 +21,12 @@ features:
 - compressed image: GIF — from-scratch variable-width LZW (the
   dictionary coder itself is hand-rolled, both directions)
   (`decode_gif_features`)
-- compressed image: baseline JPEG, grayscale and YCbCr 4:4:4 color —
-  the Huffman ENTROPY CODER hand-rolled both directions, plus
-  zigzag/dequantize/IDCT (`decode_jpeg_features`,
-  `decode_jpeg444_features`), and progressive spectral-selection JPEG
-  (`decode_jpeg_progressive_features`)
+- compressed image: baseline JPEG, grayscale and YCbCr 4:4:4 color
+  (`decode_jpeg_features`, `decode_jpeg444_features`), and
+  progressive spectral-selection JPEG
+  (`decode_jpeg_progressive_features`) — one header walker for all
+  three, the Huffman ENTROPY CODER hand-rolled both directions, plus
+  zigzag/dequantize/IDCT
 
 Only stream codecs (H.264/Opus-class) and progressive JPEG's
 successive-approximation refinement remain a clearly-marked stub
@@ -866,21 +867,22 @@ def decode_gif_features(
 
 # --- JPEG (baseline) --------------------------------------------------------
 # The THIRD real compressed codec, with the ENTROPY CODER written from
-# scratch: JFIF marker parse, DQT/SOF0/DHT/SOS, canonical Huffman
-# decode of the MSB-first bitstream (0xFF byte-unstuffing), DC
-# difference coding, run/size AC symbols with EOB, de-zigzag,
-# dequantize, full 2D IDCT (numpy cosine basis), level shift. The
-# entropy decode is the only per-block Python: the bit reader fills
-# a byte at a time and matches Huffman codes one code length at a
-# time. `_jpeg_idct_blocks` transforms many blocks per stacked numpy
-# pass, bitwise the one-block formula, for the baseline and the
-# progressive decoder alike. The baseline parser transforms a band
-# of whole block rows, about _JPEG_IDCT_CHUNK blocks per component,
-# whenever the band fills: one pass per file for small images, and
-# its int64 coefficients and float temporaries stay a few MiB beside
-# the uint8 planes whatever the image size. The progressive decoder
-# keeps its whole coefficient grid, which its scans fill in turn. One
-# parser (`_jpeg_baseline_planes`) serves grayscale and YCbCr 4:4:4
+# scratch. One header walker, `_jpeg_scans`, parses the markers for
+# the baseline and the progressive decoder alike; each decoder then
+# runs canonical Huffman decode of the MSB-first bitstream (0xFF
+# byte-unstuffing), DC difference coding, run/size AC symbols with
+# EOB, de-zigzag, dequantize, full 2D IDCT (numpy cosine basis), level
+# shift. The entropy decode is the only per-block Python: the bit
+# reader fills a byte at a time and matches Huffman codes one code
+# length at a time. `_jpeg_idct_blocks` transforms many blocks per
+# stacked numpy pass, bitwise the one-block formula, for both
+# decoders. The baseline decoder transforms a band of whole block
+# rows, about _JPEG_IDCT_CHUNK blocks per component, whenever the band
+# fills: one pass per file for small images, and its int64
+# coefficients and float temporaries stay a few MiB beside the uint8
+# planes whatever the image size. The progressive decoder keeps its
+# whole coefficient grid, which its scans fill in turn. One baseline
+# decoder (`_jpeg_baseline_planes`) serves grayscale and YCbCr 4:4:4
 # color: interleaved MCUs (one block per component per MCU position),
 # one DC difference predictor PER COMPONENT, per-component DHT/DQT
 # selectors honored from the file. The synth twins restrict CONTENT
@@ -1149,90 +1151,140 @@ def synth_jpeg_payload(df: DataFrame, id_col: str) -> DataFrame:
     return _synth_kernel(df, id_col, _jpeg_payload)
 
 
-def _jpeg_baseline_planes(buf: bytes):
-    """THE baseline (SOF0) JPEG parser: marker walk (DQT/SOF0/DHT/SOS,
-    others skipped by length), canonical Huffman tables rebuilt FROM
-    THE FILE, MSB-first bit reader with 0xFF unstuffing, DC difference
-    + run/size AC decode, de-zigzag, dequantize, exact 2D IDCT via the
-    cosine basis matrix (one stacked pass per band of block rows, about
-    _JPEG_IDCT_CHUNK blocks of every component), level shift and
-    clamp. One or three
-    components, no subsampling, no restart markers — raises otherwise.
-    Returns ``(w, h, ncomp, comp_order, planes)``: the SOF's component
-    count, the scan's component ids in order, and each component's
-    (h, w) uint8 plane by id."""
+def _jpeg_entropy_end(buf: bytes, start: int) -> int:
+    """Index of the marker that ends the entropy-coded data from
+    ``start``: the first 0xFF followed by anything but the 0x00
+    stuffing byte."""
+    i = buf.find(b"\xff", start)
+    while 0 <= i < len(buf) - 1:
+        if buf[i + 1] != 0x00:
+            return i
+        i = buf.find(b"\xff", i + 2)
+    raise ValueError("unterminated entropy segment")
+
+
+def _jpeg_scans(buf: bytes, sof: int):
+    """THE JPEG header walker, shared by the baseline (``sof`` = 0xC0)
+    and progressive (0xC2) decoders. After the SOI it walks the
+    segments, skipping 0xFF fill bytes before a marker (T.81 B.1.1.2)
+    and any segment it does not use by its length, and stops at EOI:
+
+    - DQT: every table of the segment, 8-bit and 64 entries each;
+    - SOF0/SOF2: the decoder's own kind only (the other kind raises),
+      8-bit precision, positive dims, no subsampling;
+    - DHT: every table, through `_jpeg_read_dht`;
+    - DRI: an interval of 0 (restarts off) is skipped; any other
+      raises, as neither decoder reads RSTn markers;
+    - SOS: yields the scan, whose entropy-coded data runs to the next
+      marker; the walk resumes there.
+
+    It is lazy, so a DHT between two scans is read before the second
+    is yielded. Each scan is ``(w, h, ncomp, quant, huff, comps, band,
+    data)``: the SOF's dims and component count; ``{component id:
+    int64 quant table}`` for every SOF component, each by the selector
+    in its SOF entry (a missing table raises); the Huffman tables so
+    far, keyed (class, id); the scan's ``[(component id, DC table id,
+    AC table id)]``; the unparsed SOS bytes after them (Ss, Se,
+    Ah<<4|Al); and the entropy-coded bytes."""
     if buf[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload")
-    pos = 2
     qts: dict[int, np.ndarray] = {}
-    w = h = None
-    comp_q: dict[int, int] = {}
     huff: dict[tuple[int, int], _HuffTable] = {}
-    comp_tabs: dict[int, tuple[int, int]] = {}
-    comp_order: list[int] = []
-    scan_start = None
-    while pos < len(buf):
+    frame = None
+    pos = 2
+    while pos + 1 < len(buf):
         if buf[pos] != 0xFF:
             raise ValueError("marker expected")
         marker = buf[pos + 1]
+        if marker == 0xFF:  # fill byte before a marker
+            pos += 1
+            continue
         if marker == 0xD9:
-            break
+            return
         (ln,) = struct.unpack_from(">H", buf, pos + 2)
         body = buf[pos + 4 : pos + 2 + ln]
+        pos += 2 + ln
         if marker == 0xDB:
-            if body[0] & 0xF0 != 0:
-                raise ValueError("8-bit quant table only")
-            qts[body[0] & 0x0F] = np.array(list(body[1:65]), dtype=np.int64)
-        elif marker == 0xC0:
+            for off in range(0, len(body), 65):
+                if body[off] & 0xF0 != 0:
+                    raise ValueError("8-bit quant table only")
+                if len(body) < off + 65:
+                    raise ValueError("quant table shorter than 64 entries")
+                qts[body[off]] = np.frombuffer(body, np.uint8, 64, off + 1).astype(np.int64)
+        elif marker in (0xC0, 0xC2):
+            if marker != sof:
+                raise ValueError(f"SOF{marker - 0xC0} frame, expected SOF{sof - 0xC0}")
             prec, h, w, ncomp = struct.unpack_from(">BHHB", body, 0)
-            if not (prec == 8 and ncomp in (1, 3)):
-                raise ValueError("baseline 1/3-comp")
-            # per-component spec: id, sampling, qtable id
+            if prec != 8:
+                raise ValueError("8-bit precision only")
+            if not (w > 0 and h > 0):
+                raise ValueError(f"bad JPEG dims {w}x{h}")
+            qsel = {}
             for ci in range(ncomp):
                 cid, samp, qid = body[6 + 3 * ci : 9 + 3 * ci]
                 if samp != 0x11:
                     raise ValueError("no subsampling (4:4:4 only)")
-                comp_q[cid] = qid
+                qsel[cid] = qid
+            frame = (w, h, ncomp, qsel)
         elif marker == 0xC4:
             _jpeg_read_dht(body, huff)
+        elif marker == 0xDD:
+            if body != b"\x00\x00":
+                raise ValueError("restart intervals unsupported")
         elif marker == 0xDA:
+            if frame is None:
+                raise ValueError("SOS before SOF")
+            w, h, ncomp, qsel = frame
+            quant = {}
+            for cid, qid in qsel.items():
+                if qid not in qts:
+                    raise ValueError(f"no quant table {qid}")
+                quant[cid] = qts[qid]
             ns = body[0]
-            for ci in range(ns):
-                cid = body[1 + 2 * ci]
-                sel = body[2 + 2 * ci]
-                comp_tabs[cid] = (sel >> 4, sel & 0x0F)
-                comp_order.append(cid)
-            scan_start = pos + 2 + ln
-            break
-        pos += 2 + ln
-    if scan_start is None or w is None:
+            comps = [
+                (body[1 + 2 * i], body[2 + 2 * i] >> 4, body[2 + 2 * i] & 0x0F)
+                for i in range(ns)
+            ]
+            end = _jpeg_entropy_end(buf, pos)
+            yield w, h, ncomp, quant, huff, comps, body[1 + 2 * ns :], buf[pos:end]
+            pos = end
+
+
+def _jpeg_baseline_planes(buf: bytes):
+    """THE baseline (SOF0) JPEG decoder: the first scan `_jpeg_scans`
+    yields, entropy-decoded as interleaved MCUs (DC difference + run/size
+    AC), then de-zigzag, dequantize, IDCT, level shift and clamp in one
+    stacked pass per band of block rows (about _JPEG_IDCT_CHUNK blocks
+    of every component). One or three components — raises otherwise.
+    Returns ``(w, h, ncomp, comp_order, planes)``: the SOF's component
+    count, the scan's component ids in order, and each component's
+    (h, w) uint8 plane by id."""
+    scan = next(_jpeg_scans(buf, 0xC0), None)
+    if scan is None:
         raise ValueError("no SOF0 frame or no scan")
-    end = buf.rindex(b"\xff\xd9")
-    rd = _JpegBitReader(buf[scan_start:end])
+    w, h, ncomp, quant, huff, comps, _, data = scan
+    if ncomp not in (1, 3):
+        raise ValueError("baseline 1/3-comp")
+    rd = _JpegBitReader(data)
     # per spec the scan carries ceil(w/8) x ceil(h/8) MCUs — decode
     # into the padded grid, crop to (h, w) at the end, so
     # non-multiple-of-8 images (the common case) decode exactly
     # instead of silently truncating planes
     nbw, nbh = (w + 7) // 8, (h + 7) // 8
-    # corrupt-SOF quarantine: zero dims would yield a NaN-mean
-    # garbage row; HUGE declared dims (e.g. 0xFFFF x 0xFFFF)
-    # would allocate a multi-GiB block grid BEFORE the bit
+    # corrupt-SOF quarantine: HUGE declared dims (e.g. 0xFFFF x
+    # 0xFFFF) would allocate a multi-GiB block grid BEFORE the bit
     # reader could fail — an allocation bomb per corrupt row at
     # scale. Each 8x8 block consumes >= 2 bits (DC code + EOB),
     # so the entropy stream bounds the legal block count.
-    if not (w > 0 and h > 0):
-        raise ValueError(f"bad JPEG dims {w}x{h}")
-    if not nbw * nbh * max(1, len(comp_order)) <= 4 * (end - scan_start) + 64:
+    if not nbw * nbh * max(1, len(comps)) <= 4 * len(data) + 64:
         raise ValueError("declared dims exceed entropy stream capacity")
-    ncs = len(comp_order)
-    # per scan component: its Huffman tables and quant table (a quant
-    # table of one entry scales every coefficient, as numpy broadcasts)
-    tabs = [
-        (huff[(0, comp_tabs[cid][0])], huff[(1, comp_tabs[cid][1])]) for cid in comp_order
-    ]
+    ncs = len(comps)
+    comp_order = [cid for cid, _, _ in comps]
+    # per scan component: its Huffman tables and quant table
+    tabs = [(huff[(0, dc)], huff[(1, ac)]) for _, dc, ac in comps]
     q = np.empty((ncs, 1, 64), dtype=np.int64)
     for ci, cid in enumerate(comp_order):
-        q[ci, 0] = qts[comp_q[cid]]
+        q[ci, 0] = quant[cid]
     # the MCUs decode into a band of whole block rows, transformed into
     # the planes whenever it fills: the int64 coefficients never
     # outgrow one band of about _JPEG_IDCT_CHUNK blocks per component
@@ -1288,15 +1340,12 @@ def decode_jpeg_features(
     on_error: str = "raise",
 ) -> DataFrame:
     """REAL baseline JPEG decode, entropy coder and all, stdlib+numpy
-    only: marker walk (DQT/SOF0/DHT/SOS, others skipped by length),
-    canonical Huffman tables rebuilt FROM THE FILE, MSB-first bit
-    reader with 0xFF unstuffing, DC difference + run/size AC decode,
-    de-zigzag, dequantize, exact 2D IDCT via the cosine basis matrix
-    (batched: one pass per band of about _JPEG_IDCT_CHUNK blocks, so
-    one per file for small images and bounded memory for large ones),
-    level shift and clamp. Grayscale baseline (1 component, no
-    subsampling, no restart markers) — raises otherwise. Features:
-    (width, height, n_pixels, mean_gray)."""
+    only: the header walk of `_jpeg_scans` (Huffman tables rebuilt
+    FROM THE FILE), then `_jpeg_baseline_planes` on its first scan,
+    its IDCT batched (one pass per band of about _JPEG_IDCT_CHUNK
+    blocks, so one per file for small images and bounded memory for
+    large ones). Grayscale baseline (1 component) — raises otherwise.
+    Features: (width, height, n_pixels, mean_gray)."""
     fields = _IMAGE_DIMS + [("mean_gray", _DOUBLE)]
     return _decode_kernel(df, id_col, payload_col, fields, _jpeg_features, on_error)
 
@@ -1336,14 +1385,12 @@ def decode_jpeg444_features(
     df: DataFrame, id_col: str, payload_col: str = "payload",
     on_error: str = "raise",
 ) -> DataFrame:
-    """REAL full-color baseline JPEG decode (YCbCr 4:4:4): interleaved
-    MCU entropy decode with one DC predictor per component,
-    per-component quant/Huffman table selectors honored from SOF/SOS,
-    exact cosine-basis IDCT, batched over every component's blocks as
-    in `decode_jpeg_features` (one pass per band of block rows, so its
-    memory stays bounded). Features are per-channel means
-    in YCbCr space (no colorspace conversion — the lossless part of
-    the pipeline)."""
+    """REAL full-color baseline JPEG decode (YCbCr 4:4:4): the same
+    walk and decoder as `decode_jpeg_features`, interleaved MCUs with
+    one DC predictor per component and per-component quant/Huffman
+    table selectors honored from SOF/SOS. Features are per-channel
+    means in YCbCr space (no colorspace conversion — the lossless part
+    of the pipeline)."""
     fields = _IMAGE_DIMS + [
         ("mean_y", _DOUBLE), ("mean_cb", _DOUBLE), ("mean_cr", _DOUBLE),
     ]
@@ -1363,7 +1410,8 @@ def decode_jpeg444_features(
 #
 # Envelope (documented, enforced): grayscale (1 component), 8-bit,
 # Ah = 0 per scan (spectral selection WITHOUT successive-approximation
-# refinement; Al >= 0 point transforms honored), no restart intervals.
+# refinement; Al >= 0 point transforms honored); the header rules,
+# restart intervals among them, are `_jpeg_scans`'.
 # The entropy coder is general: EOBn run coding (the progressive-only
 # symbol class), ZRL, in-band (run, size) coefficients.
 
@@ -1438,132 +1486,78 @@ def synth_jpeg_progressive_payload(df: DataFrame, id_col: str) -> DataFrame:
     return _synth_kernel(df, id_col, _jpeg_progressive_payload)
 
 
-def _jpeg_entropy_end(buf: bytes, start: int) -> int:
-    # entropy data runs to the next real marker (FF followed by
-    # anything but the 00 stuffing byte)
-    i = start
-    while i + 1 < len(buf):
-        if buf[i] == 0xFF and buf[i + 1] != 0x00:
-            return i
-        i += 1
-    raise ValueError("unterminated entropy segment")
-
-
 def _jpeg_progressive_features(buf: bytes) -> tuple:
-    if buf[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload")
-    pos = 2
-    qt = None
-    w = h = None
-    huff: dict[tuple[int, int], _HuffTable] = {}
     zz = None  # (nblocks, 64) coefficient grid, int64
-    nbw = nbh = 0
-    prev_dc = 0
-    n_scans = 0
-    while pos + 1 < len(buf):
-        if buf[pos] != 0xFF:
-            raise ValueError("marker expected")
-        marker = buf[pos + 1]
-        if marker == 0xFF:  # fill byte before a marker
-            pos += 1
-            continue
-        if marker == 0xD9:
-            break
-        (ln,) = struct.unpack_from(">H", buf, pos + 2)
-        body = buf[pos + 4 : pos + 2 + ln]
-        if marker == 0xDB:
-            if body[0] & 0xF0 != 0:
-                raise ValueError("8-bit quant table only")
-            qt = np.array(list(body[1:65]), dtype=np.int64)
-        elif marker == 0xC2:
-            prec, h, w, ncomp = struct.unpack_from(">BHHB", body, 0)
-            if (prec, ncomp) != (8, 1):
-                raise ValueError("grayscale progressive only")
-            if body[7] != 0x11:
-                raise ValueError("no subsampling")
-        elif marker == 0xC0:
-            raise ValueError("baseline SOF0 — use decode_jpeg_features")
-        elif marker == 0xDD:
-            raise ValueError("restart intervals unsupported")
-        elif marker == 0xC4:
-            _jpeg_read_dht(body, huff)
-        elif marker == 0xDA:
-            if w is None:
-                raise ValueError("SOS before SOF2")
-            ns = body[0]
-            if ns != 1:
-                raise ValueError("one component per scan (grayscale)")
-            sel = body[2]
-            ss, se, ahal = body[3], body[4], body[5]
-            ah, al = ahal >> 4, ahal & 0x0F
-            if ah != 0:
-                raise ValueError(
-                    "successive-approximation refinement unsupported "
-                    "(spectral selection only)"
-                )
-            if not 0 <= ss <= se <= 63:
-                raise ValueError(f"bad spectral band {ss}..{se}")
-            seg_start = pos + 2 + ln
-            seg_end = _jpeg_entropy_end(buf, seg_start)
-            rd = _JpegBitReader(buf[seg_start:seg_end])
-            if zz is None:
-                # the first scan must be the DC scan (spec:
-                # every block's DC precedes any AC band) — its
-                # entropy capacity bounds the grid allocation
-                # (>= 1 bit per block), closing the corrupt-SOF
-                # allocation bomb exactly as in the baseline
-                # kernel
-                if ss != 0:
-                    raise ValueError("first progressive scan must be DC")
-                if not (w > 0 and h > 0):
-                    raise ValueError(f"bad JPEG dims {w}x{h}")
-                nbw, nbh = (w + 7) // 8, (h + 7) // 8
-                if not nbw * nbh <= 8 * (seg_end - seg_start) + 64:
-                    raise ValueError("declared dims exceed entropy stream capacity")
-                zz = np.zeros((nbw * nbh, 64), dtype=np.int64)
-            elif ss == 0:
-                # one component has one DC scan: a second one would
-                # re-add every DC difference onto the first scan's
-                raise ValueError("second DC scan")
-            nblocks = zz.shape[0]
-            if ss == 0:
-                dc_tab = huff[(0, sel >> 4)]
-                for b in range(nblocks):
-                    t = rd.huff(dc_tab)
-                    prev_dc += _jpeg_extend(rd.bits(t), t)
-                    zz[b, 0] = prev_dc << al
-            else:
-                ac_tab = huff[(1, sel & 0x0F)]
-                eob_run = 0
-                for b in range(nblocks):
-                    if eob_run:
-                        eob_run -= 1
-                        continue
-                    kk = ss
-                    while kk <= se:
-                        sym = rd.huff(ac_tab)
-                        r, s = sym >> 4, sym & 0x0F
-                        if s == 0:
-                            if r == 15:  # ZRL: 16 zeros
-                                kk += 16
-                                continue
-                            # EOBn: this block's band ends and
-                            # the next (run - 1) blocks' bands
-                            # are all zero
-                            eob_run = (1 << r) + rd.bits(r) - 1
-                            break
-                        kk += r
-                        if kk > se:
-                            raise ValueError("coefficient run past band")
-                        zz[b, kk] = _jpeg_extend(rd.bits(s), s) << al
-                        kk += 1
-            n_scans += 1
-            pos = seg_end
-            continue
-        pos += 2 + ln
-    if zz is None or qt is None:
+    prev_dc = n_scans = 0
+    for w, h, ncomp, quant, huff, comps, band, data in _jpeg_scans(buf, 0xC2):
+        if ncomp != 1:
+            raise ValueError("grayscale progressive only")
+        if len(comps) != 1:
+            raise ValueError("one component per scan (grayscale)")
+        _, dc_sel, ac_sel = comps[0]
+        ss, se, ahal = band[:3]
+        ah, al = ahal >> 4, ahal & 0x0F
+        if ah != 0:
+            raise ValueError(
+                "successive-approximation refinement unsupported "
+                "(spectral selection only)"
+            )
+        if not 0 <= ss <= se <= 63:
+            raise ValueError(f"bad spectral band {ss}..{se}")
+        rd = _JpegBitReader(data)
+        if zz is None:
+            # the first scan must be the DC scan (spec: every block's
+            # DC precedes any AC band) — its entropy capacity bounds
+            # the grid allocation (>= 1 bit per block), closing the
+            # corrupt-SOF allocation bomb exactly as in the baseline
+            # decoder
+            if ss != 0:
+                raise ValueError("first progressive scan must be DC")
+            nbw, nbh = (w + 7) // 8, (h + 7) // 8
+            if not nbw * nbh <= 8 * len(data) + 64:
+                raise ValueError("declared dims exceed entropy stream capacity")
+            zz = np.zeros((nbw * nbh, 64), dtype=np.int64)
+            (q,) = quant.values()
+        elif ss == 0:
+            # one component has one DC scan: a second one would
+            # re-add every DC difference onto the first scan's
+            raise ValueError("second DC scan")
+        nblocks = zz.shape[0]
+        if ss == 0:
+            dc_tab = huff[(0, dc_sel)]
+            for b in range(nblocks):
+                t = rd.huff(dc_tab)
+                prev_dc += _jpeg_extend(rd.bits(t), t)
+                zz[b, 0] = prev_dc << al
+        else:
+            ac_tab = huff[(1, ac_sel)]
+            eob_run = 0
+            for b in range(nblocks):
+                if eob_run:
+                    eob_run -= 1
+                    continue
+                kk = ss
+                while kk <= se:
+                    sym = rd.huff(ac_tab)
+                    r, s = sym >> 4, sym & 0x0F
+                    if s == 0:
+                        if r == 15:  # ZRL: 16 zeros
+                            kk += 16
+                            continue
+                        # EOBn: this block's band ends and
+                        # the next (run - 1) blocks' bands
+                        # are all zero
+                        eob_run = (1 << r) + rd.bits(r) - 1
+                        break
+                    kk += r
+                    if kk > se:
+                        raise ValueError("coefficient run past band")
+                    zz[b, kk] = _jpeg_extend(rd.bits(s), s) << al
+                    kk += 1
+        n_scans += 1
+    if zz is None:
         raise ValueError("no scan decoded")
-    img = _jpeg_tile(_jpeg_idct_blocks(zz, qt), nbh, nbw)[:h, :w]
+    img = _jpeg_tile(_jpeg_idct_blocks(zz, q), nbh, nbw)[:h, :w]
     return w, h, w * h, n_scans, _jpeg_mean(img)
 
 
@@ -1571,22 +1565,20 @@ def decode_jpeg_progressive_features(
     df: DataFrame, id_col: str, payload_col: str = "payload",
     on_error: str = "raise",
 ) -> DataFrame:
-    """REAL progressive-JPEG decode (spectral selection): multi-scan
-    marker parse (SOF2; DHT tables may arrive between scans), per-scan
-    entropy decode into ONE per-block coefficient grid — DC scans code
-    every block's DC diff (<< Al), AC band scans code zigzag indices
-    [Ss, Se] with EOBn run symbols / ZRL / (run, size) coefficients —
-    then a single batched dequantize + 2D IDCT + crop pass over the
-    grid (its float temporaries bounded by _JPEG_IDCT_CHUNK blocks).
-    Same Arrow
-    mapInPandas batch contract and on_error='null' dead letter as every
-    other decoder. Envelope enforced in-kernel (raises otherwise):
-    grayscale, 8-bit, one DC scan, Ah = 0 (no successive-approximation
-    refinement scans), no restart intervals. Corrupt-SOF guards match the baseline
-    kernel: positive dims, and the block grid is allocated only after
-    the (mandatory first) DC scan's entropy capacity bounds it — a
-    corrupt SOF declaring 0xFFFF x 0xFFFF must quarantine, not
-    allocate."""
+    """REAL progressive-JPEG decode (spectral selection): every scan
+    of the `_jpeg_scans` walk (SOF2; DHT tables may arrive between
+    scans) entropy-decoded into ONE per-block coefficient grid — DC
+    scans code every block's DC diff (<< Al), AC band scans code
+    zigzag indices [Ss, Se] with EOBn run symbols / ZRL / (run, size)
+    coefficients — then a single batched dequantize + 2D IDCT + crop
+    pass over the grid (its float temporaries bounded by
+    _JPEG_IDCT_CHUNK blocks). Same Arrow mapInPandas batch contract
+    and on_error='null' dead letter as every other decoder. Envelope
+    enforced in-kernel (raises otherwise): grayscale, one DC scan,
+    Ah = 0 (no successive-approximation refinement scans). The block
+    grid is allocated only after the (mandatory first) DC scan's
+    entropy capacity bounds it — a corrupt SOF declaring 0xFFFF x
+    0xFFFF must quarantine, not allocate."""
     fields = _IMAGE_DIMS + [("n_scans", _LONG), ("mean_gray", _DOUBLE)]
     return _decode_kernel(
         df, id_col, payload_col, fields, _jpeg_progressive_features, on_error

@@ -1430,6 +1430,45 @@ def test_jpeg444_grayscale_component_id_is_not_fixed():
     assert multimodal._jpeg444_features(bytes(buf)) == (24, 16, 384, 109.0, None, None)
 
 
+@pytest.mark.parametrize("decoder", ["baseline", "progressive"])
+@pytest.mark.parametrize("case", [
+    "unused second DQT", "one-entry DQT", "fill byte before DHT",
+    "two tables in one DQT", "DRI interval 0", "DRI interval 4",
+])
+def test_jpeg_header_cases_decode_or_raise(case, decoder):
+    # One header edit of doc 5's twin, whose true mean is 109.0: a valid
+    # file decodes to the true row in both decoders, a malformed one
+    # (a quant table of one entry, restart intervals neither decoder
+    # reads) raises in both instead of giving a plausible wrong row.
+    from biodiversity_data_ingestion_spark.operators import multimodal as M
+
+    seg, dqt = M._jpeg_seg, M._JPEG_SYNTH_DQT
+
+    def table(tq, v):
+        return bytes([tq]) + bytes([v] * 64)
+
+    old, new, error = {
+        "unused second DQT": (dqt, dqt + seg(0xDB, table(1, 2)), None),
+        "one-entry DQT": (dqt, bytes.fromhex("ffdb00040002"), "shorter than 64"),
+        "fill byte before DHT": (b"\xff\xc4", b"\xff\xff\xc4", None),
+        "two tables in one DQT": (dqt, seg(0xDB, table(1, 2) + table(0, 1)), None),
+        "DRI interval 0": (dqt, dqt + seg(0xDD, b"\x00\x00"), None),
+        "DRI interval 4": (dqt, dqt + seg(0xDD, b"\x00\x04"), "restart intervals"),
+    }[case]
+    if decoder == "baseline":
+        buf, decode, row = M._jpeg_payload(5), M._jpeg_features, (24, 16, 384, 109.0)
+    else:
+        buf, decode = M._jpeg_progressive_payload(5), M._jpeg_progressive_features
+        row = (24, 16, 384, 2, 109.0)
+    assert decode(buf) == row and old in buf
+    buf = buf.replace(old, new, 1)
+    if error is None:
+        assert decode(buf) == row
+    else:
+        with pytest.raises(ValueError, match=error):
+            decode(buf)
+
+
 def test_pq_adc_recovers_exact_blobs(spark):
     # Corpus = 4 distinct prototype vectors, each repeated: every
     # subspace codebook recovers the prototypes exactly (centroid of
@@ -2339,27 +2378,27 @@ def test_corrupt_headers_quarantine_across_all_codecs(spark):
 _FUZZ_CODECS = ("wav", "bmp", "y4m", "png", "gif", "jpeg", "jpeg444", "jpeg_progressive")
 
 
-def _header_fuzz_rows() -> list[str]:
-    """The header fuzz: per codec, its doc-0 synth payload and 120
-    copies with 1-4 random byte writes in the first 64 bytes (a fresh
+def _fuzz_rows(codecs, n_cases: int, span) -> list[str]:
+    """Per codec, its doc-0 synth payload and ``n_cases`` copies with
+    1-4 random byte writes at offsets below ``span(payload)`` (a fresh
     random.Random(20260816) per codec), each decoded by a direct
     ``_<codec>_features`` call; any exception gives the all-null row,
-    as under on_error='null'. One repr per row, 968 in all."""
+    as under on_error='null'. One repr per row."""
     import random
 
     from biodiversity_data_ingestion_spark.operators import multimodal as M
 
     out = []
-    for name in _FUZZ_CODECS:
+    for name in codecs:
         payload = M._wav_payload(0, 8000) if name == "wav" else getattr(
             M, f"_{name}_payload")(0)
         decode = getattr(M, f"_{name}_features")
-        n, rng = len(payload), random.Random(20260816)
+        n, rng = span(payload), random.Random(20260816)
         cases = [payload]
-        for _ in range(120):
+        for _ in range(n_cases):
             m = bytearray(payload)
             for _ in range(rng.randint(1, 4)):
-                m[rng.randrange(min(64, n))] = rng.randrange(256)
+                m[rng.randrange(n)] = rng.randrange(256)
             cases.append(bytes(m))
         width = len(decode(payload))
         for i, buf in enumerate(cases):
@@ -2369,6 +2408,29 @@ def _header_fuzz_rows() -> list[str]:
                 row = (None,) * width
             out.append(repr((name, i) + row))
     return out
+
+
+def _header_fuzz_rows() -> list[str]:
+    """The header fuzz: 120 cases per codec, writes in the first 64
+    bytes. 968 rows in all."""
+    return _fuzz_rows(_FUZZ_CODECS, 120, lambda p: min(64, len(p)))
+
+
+def _jpeg_first_entropy_byte(payload: bytes) -> int:
+    """Offset of the first scan's entropy-coded data: the byte after
+    the first SOS segment."""
+    import struct
+
+    sos = payload.index(b"\xff\xda")
+    return sos + 2 + struct.unpack_from(">H", payload, sos + 2)[0]
+
+
+def _jpeg_header_fuzz_rows() -> list[str]:
+    """The whole-header fuzz of the three JPEG twins: 2,000 cases per
+    codec, writes anywhere before the first scan's entropy data, so
+    the SOF, DHT and SOS bytes are hit as well as SOI and DQT. 6,003
+    rows in all."""
+    return _fuzz_rows(("jpeg", "jpeg444", "jpeg_progressive"), 2000, _jpeg_first_entropy_byte)
 
 
 def test_decoder_header_fuzz_outcomes_are_pinned():
@@ -2382,3 +2444,16 @@ def test_decoder_header_fuzz_outcomes_are_pinned():
     assert len(rows) == 968
     digest = hashlib.sha256("\n".join(rows).encode()).hexdigest()
     assert digest == "b6af45841de676947a671577c58b4f2b6d4f416e639c4943a3e0ac94a5b1914a"
+
+
+def test_jpeg_header_fuzz_outcomes_are_pinned():
+    # The whole-header fuzz of the three JPEG twins, pinned as one
+    # digest: unlike the 64-byte fuzz above it also writes the SOF,
+    # DHT and SOS bytes. To see which rows moved, diff
+    # _jpeg_header_fuzz_rows() between two trees.
+    import hashlib
+
+    rows = _jpeg_header_fuzz_rows()
+    assert len(rows) == 6003
+    digest = hashlib.sha256("\n".join(rows).encode()).hexdigest()
+    assert digest == "e5a965cc47beef4fc355f6ba56107785371ca06c3385b50c45881609ab5098b7"

@@ -6,6 +6,7 @@ the exactly-once-source contract a production stream depends on."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import glob
 
@@ -423,45 +424,52 @@ def test_sentinel_staging_near_timestamp_ceiling(spark, tmp_path):
         pq.write_table(t, str(d / "events.parquet"))
         return str(d)
 
-    # within 10 years of the ceiling but > 1 day: 1-day fallback engages
-    # AND is VISIBLE (ADVICE r12: a silently degraded margin means a
-    # materially different replay sentinel with no operator signal)
-    import warnings as _warnings
+    made = []  # the stage dirs of the two successful stagings
+    try:
+        # within 10 years of the ceiling but > 1 day: 1-day fallback engages
+        # AND is VISIBLE (ADVICE r12: a silently degraded margin means a
+        # materially different replay sentinel with no operator signal)
+        import warnings as _warnings
 
-    near = pd.Timestamp.max - pd.Timedelta(days=100)
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        stage = _stage_events_with_sentinel(spark, stage_dir(near))
-    assert any(
-        issubclass(w.category, RuntimeWarning)
-        and "sentinel margin degraded" in str(w.message)
-        for w in caught
-    ), "1-day fallback must warn"
-    sent = pq.read_table(f"{stage}/01_sentinel.parquet")["ts"].to_pylist()[0]
-    assert pd.Timestamp(sent) == near + pd.Timedelta(days=1)
+        near = pd.Timestamp.max - pd.Timedelta(days=100)
+        with _warnings.catch_warnings(record=True) as caught:
+            _warnings.simplefilter("always")
+            stage = _stage_events_with_sentinel(spark, stage_dir(near))
+            made.append(stage)
+        assert any(
+            issubclass(w.category, RuntimeWarning)
+            and "sentinel margin degraded" in str(w.message)
+            for w in caught
+        ), "1-day fallback must warn"
+        sent = pq.read_table(f"{stage}/01_sentinel.parquet")["ts"].to_pylist()[0]
+        assert pd.Timestamp(sent) == near + pd.Timedelta(days=1)
 
-    # within 1 day of the ceiling: clear contract error, not a pandas
-    # internals traceback
-    import pytest as _pytest
+        # within 1 day of the ceiling: clear contract error, not a pandas
+        # internals traceback
+        import pytest as _pytest
 
-    import tempfile
+        import tempfile
 
-    def stages():
-        return set(glob.glob(os.path.join(tempfile.gettempdir(), "bdi_sess_stage_*")))
+        def stages():
+            return set(glob.glob(os.path.join(tempfile.gettempdir(), "bdi_sess_stage_*")))
 
-    at_edge = pd.Timestamp.max - pd.Timedelta(hours=2)
-    before = stages()
-    with _pytest.raises(ValueError, match="headroom above max"):
-        _stage_events_with_sentinel(spark, stage_dir(at_edge))
-    assert stages() == before, "a failed staging must leave no stage dir"
+        at_edge = pd.Timestamp.max - pd.Timedelta(hours=2)
+        before = stages()
+        with _pytest.raises(ValueError, match="headroom above max"):
+            _stage_events_with_sentinel(spark, stage_dir(at_edge))
+        assert stages() == before, "a failed staging must leave no stage dir"
 
-    # ordinary data: default margin unchanged, and NO degradation warn
-    normal = pd.Timestamp("2024-06-01 12:00:00")
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        stage = _stage_events_with_sentinel(spark, stage_dir(normal))
-    assert not any(
-        "sentinel margin degraded" in str(w.message) for w in caught
-    ), "ordinary data must not warn"
-    sent = pq.read_table(f"{stage}/01_sentinel.parquet")["ts"].to_pylist()[0]
-    assert pd.Timestamp(sent) == normal + pd.Timedelta(days=3650)
+        # ordinary data: default margin unchanged, and NO degradation warn
+        normal = pd.Timestamp("2024-06-01 12:00:00")
+        with _warnings.catch_warnings(record=True) as caught:
+            _warnings.simplefilter("always")
+            stage = _stage_events_with_sentinel(spark, stage_dir(normal))
+            made.append(stage)
+        assert not any(
+            "sentinel margin degraded" in str(w.message) for w in caught
+        ), "ordinary data must not warn"
+        sent = pq.read_table(f"{stage}/01_sentinel.parquet")["ts"].to_pylist()[0]
+        assert pd.Timestamp(sent) == normal + pd.Timedelta(days=3650)
+    finally:
+        for d in made:
+            shutil.rmtree(d, ignore_errors=True)
