@@ -176,7 +176,8 @@ EAGER = {
     "bm25_doc_retrieval",
     # iterative peel: per-round checkpoints run during construction
     "copurchase_kcore",
-    # per-subspace kmeans codebooks checkpoint during construction
+    # one Lloyd loop trains every subspace codebook: its per-round
+    # checkpoints and the code-table checkpoint run during construction
     "pq_adc_topk",
     # edge/node checkpoints + per-round frontiers run during construction
     "purchase_hits_scores",

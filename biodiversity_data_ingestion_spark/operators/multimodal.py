@@ -1175,8 +1175,8 @@ def _jpeg_scans(buf: bytes, sof: int):
     - DHT: every table, through `_jpeg_read_dht`;
     - DRI: an interval of 0 (restarts off) is skipped; any other
       raises, as neither decoder reads RSTn markers;
-    - SOS: yields the scan, whose entropy-coded data runs to the next
-      marker; the walk resumes there.
+    - SOS: 1-4 components (T.81 B.2.3); yields the scan, whose
+      entropy-coded data runs to the next marker; the walk resumes there.
 
     It is lazy, so a DHT between two scans is read before the second
     is yielded. Each scan is ``(w, h, ncomp, quant, huff, comps, band,
@@ -1241,6 +1241,8 @@ def _jpeg_scans(buf: bytes, sof: int):
                     raise ValueError(f"no quant table {qid}")
                 quant[cid] = qts[qid]
             ns = body[0]
+            if not 1 <= ns <= 4:
+                raise ValueError(f"SOS component count {ns}, expected 1-4")
             comps = [
                 (body[1 + 2 * i], body[2 + 2 * i] >> 4, body[2 + 2 * i] & 0x0F)
                 for i in range(ns)

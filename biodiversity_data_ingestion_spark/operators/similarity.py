@@ -279,21 +279,15 @@ def ivf_topk(
     is computed from bit-identical inputs everywhere, which is what
     lets ivf_kmeans_topk carry an exact SQL oracle.
     """
-    cents = (
+    cents = _int_centroids(
         corpus.select(
             F.col(label_col).alias("label"),
-            F.posexplode(quantize_vec(F.col(vec_col))).alias("dim", "val"),
-        )
-        .groupBy("label", "dim")
-        .agg(F.expr("sum(val) div count(1)").alias("cq"))
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "cq"))).alias("pairs"))
-        .select(
-            "label",
-            F.transform(
-                "pairs", lambda p: p["cq"] / F.lit(float(KMEANS_SCALE))
-            ).alias("cvec"),
-        )
+            quantize_vec(F.col(vec_col)).alias("v"),
+        ),
+        ["label"],
+    ).select(
+        "label",
+        F.transform("cvec", lambda c: c / F.lit(float(KMEANS_SCALE))).alias("cvec"),
     )
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double_vec(F.col(vec_col)).alias("qv")
@@ -380,11 +374,94 @@ def _argmin_cluster(v: Column, cents_arr: Column) -> Column:
     )["c"]
 
 
-def _cents_as_row(cents: DataFrame, alias: str = "_cents") -> DataFrame:
-    """Fold a k-row centroid table into ONE row holding the
-    (cluster, cvec) struct array — the broadcast-projection argmin's
-    input (see kmeans_lloyd)."""
-    return cents.agg(F.collect_list(F.struct("cluster", "cvec")).alias(alias))
+def _int_centroids(df: DataFrame, keys: list[str], vec: str = "v") -> DataFrame:
+    """Per-``keys`` integer mean of the bigint vector column ``vec``,
+    as ``cvec``: posexplode, then ``sum div count`` per (keys, dim)
+    (truncating integer division — identical in Spark ``div``, DuckDB
+    ``//`` and Python int()), reassembled in dim order. Map-side
+    combinable; the shuffle is groups x dims, independent of corpus
+    size."""
+    return (
+        df.select(*keys, F.posexplode(vec).alias("dim", "val"))
+        .groupBy(*keys, "dim")
+        .agg(F.expr("sum(val) div count(1)").alias("cval"))
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("dim", "cval"))).alias("pairs"))
+        .select(*keys, F.transform("pairs", lambda p: p["cval"]).alias("cvec"))
+    )
+
+
+def _lloyd(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    n_iter: int,
+    n_subspaces: int = 1,
+    width: int = 0,
+) -> tuple[DataFrame, DataFrame]:
+    """The fixed-point Lloyd loop behind :func:`kmeans_lloyd` and
+    :func:`pq_adc_topk`: one k-code codebook per contiguous
+    ``width``-dim slice of the quantized vectors — the whole vector
+    when ``n_subspaces`` is 1 — with every subspace trained in the
+    same jobs each round.
+
+    Returns (codes, codebook). codes is the checkpointed final
+    assignment (vid, code_0 .. code_{n_subspaces-1}); codebook is the
+    post-final-assign update (subspace, cluster, cvec), left lazy so
+    only a caller that reads it pays for it.
+    """
+    subs = range(n_subspaces)
+    vecs = corpus.select(
+        F.col(id_col).alias("vid"), quantize_vec(F.col(vec_col)).alias("v")
+    )
+
+    def sl(s: int) -> Column:
+        return F.col("v") if n_subspaces == 1 else F.slice("v", s * width + 1, width)
+
+    def slices(frame: DataFrame, code) -> DataFrame:
+        # one (subspace, cluster, slice) row per subspace of each vector
+        return frame.select(F.inline(F.array(*[
+            F.struct(F.lit(s).alias("subspace"), code(s).alias("cluster"), sl(s).alias("v"))
+            for s in subs
+        ])))
+
+    # seed selection is a global top-k (TakeOrderedAndProject — per-
+    # partition heaps, no total sort); the row_number window then runs
+    # over only k rows, and every subspace seeds from the same k ids
+    seed = vecs.orderBy("vid").limit(k)
+    seed = seed.withColumn("cluster", F.row_number().over(Window.orderBy("vid")) - 1)
+    cents = slices(seed, lambda s: F.col("cluster")).withColumnRenamed("v", "cvec")
+    cents = cents.localCheckpoint()
+    for it in range(n_iter):
+        # the centroid table folds into ONE broadcast row holding a
+        # (cluster, cvec) struct array per subspace, so the assign step
+        # is a pure projection and the only per-round exchanges are the
+        # map-side-combinable centroid update's
+        row = cents.agg(*[
+            F.collect_list(F.when(F.col("subspace") == s, F.struct("cluster", "cvec")))
+            .alias(f"_c{s}")
+            for s in subs
+        ])
+        assigned = vecs.crossJoin(F.broadcast(row)).select(
+            "vid",
+            "v",
+            *[_argmin_cluster(sl(s), F.col(f"_c{s}")).alias(f"code_{s}") for s in subs],
+        )
+        codebook = _int_centroids(
+            slices(assigned, lambda s: F.col(f"code_{s}")), ["subspace", "cluster"]
+        )
+        if it < n_iter - 1:
+            # NOTE (measured, do not "optimize"): checkpointing only
+            # every third round re-scans vecs per level and serializes
+            # the nested broadcasts inside one job — 3.7 s vs 3.2 s at
+            # sf0.1. Per-round checkpoints win.
+            cents = codebook.localCheckpoint()
+    # materialize the final assignment (ids and codes, vectors dropped):
+    # consumers reference it from both sides of a self-join, and an
+    # unmaterialized plan would re-run the last assign once per reference
+    codes = assigned.select("vid", *[f"code_{s}" for s in subs]).localCheckpoint()
+    return codes, codebook
 
 
 def kmeans_lloyd(
@@ -393,9 +470,7 @@ def kmeans_lloyd(
     vec_col: str = "embedding",
     k: int = 8,
     n_iter: int = 5,
-    return_centroids: bool = False,
-    return_assign_centroids: bool = False,
-):
+) -> DataFrame:
     """Deterministic FIXED-POINT Lloyd k-means over an embedding column.
 
     Init: the k vectors with the smallest ids (reproducible, no RNG).
@@ -407,15 +482,12 @@ def kmeans_lloyd(
     partition-independent only up to a rounding-boundary race).
 
     Each iteration: (1) assign every vector to its nearest centroid —
-    integer squared-L2 with cluster-id tie-break, computed as a
-    broadcast cross join + map-side min over a (dist, cluster) struct,
-    so the only shuffled bytes are one (id, cluster) pair per vector;
-    (2) recompute centroids dimension-wise via posexplode +
-    groupBy(cluster, dim) with ``sum div count`` (truncating integer
-    division — identical in Spark ``div``, DuckDB ``//`` and Python
-    int()); map-side combinable, shuffle size = k x dims, independent
-    of corpus size. Overflow headroom: |xq| <= |x|_max * 2^24, so the
-    64-dim squared distance stays ~2^52 << 2^63 for |x| <= 8.
+    integer squared-L2 with cluster-id tie-break, a projection against
+    the broadcast centroid row (:func:`_argmin_cluster`), so no vector
+    is shuffled; (2) recompute centroids dimension-wise as truncating
+    integer means (:func:`_int_centroids`). Overflow headroom:
+    |xq| <= |x|_max * 2^24, so the 64-dim squared distance stays
+    ~2^52 << 2^63 for |x| <= 8.
 
     Centroids are localCheckpoint'ed per iteration (flat lineage, same
     pattern as corpus.connected_components). Fixed iteration count, no
@@ -423,89 +495,10 @@ def kmeans_lloyd(
     budget anyway. A cluster that loses every member simply drops out
     of the centroid table (same as the SQL replay).
 
-    Returns (id, cluster) final assignments; with
-    ``return_centroids=True`` returns (assignments, centroids) where
-    centroids is the post-final-assign update (cluster, cvec) with
-    cvec the KMEANS_SCALE-denominated integer coordinates — the
-    code/codebook pair product quantization consumes. With
-    ``return_assign_centroids=True`` returns (assign_cents, centroids)
-    INSTEAD — assign_cents being the (checkpointed) centroid table the
-    final assignment used — and never materializes the assignments:
-    a caller that re-derives assignments as a projection
-    (:func:`_argmin_cluster` over the folded assign_cents — bit-exact
-    by construction) skips one full assign-pass job per call.
+    Returns the checkpointed (id, cluster) final assignments.
     """
-    vecs = corpus.select(
-        F.col(id_col).alias("vid"), quantize_vec(F.col(vec_col)).alias("v")
-    )
-    # seed selection is a global top-k (TakeOrderedAndProject — per-
-    # partition heaps, no total sort); the row_number window then runs
-    # over only k rows
-    seed = vecs.orderBy("vid").limit(k)
-    cents = (
-        seed.withColumn("cluster", F.row_number().over(Window.orderBy("vid")) - 1)
-        .select("cluster", F.col("v").alias("cvec"))
-        .localCheckpoint()
-    )
-
-    assigned = None
-    assign_cents = None
-    for it in range(n_iter):
-        # r14: the k-row centroid table folds into ONE row holding an
-        # array of (cluster, cvec) structs, and the argmin becomes a
-        # pure PROJECTION (_argmin_cluster — array_min over a
-        # transform; struct comparison orders by d then c, identical to
-        # the former min-over-rows semantics, same integer arithmetic,
-        # bit-exact). The former shape (crossJoin(broadcast(cents)) +
-        # groupBy(vid)) materialized k rows per vector and re-shuffled
-        # the whole (vid, v) table every iteration just to take the
-        # k-way min; now the only per-iteration exchange is the
-        # centroid update's map-side-combinable groupBy (guide §2.4:
-        # remove shuffles outright). A/B at sf0.1: kmeans_clusters
-        # (k=8, n_iter=4) 4.92 -> 3.79 s best-of-4 on the clean pair
-        # (4.07 -> 2.95 over 17 interleaved samples), result hashes
-        # identical.
-        assigned = vecs.crossJoin(F.broadcast(_cents_as_row(cents))).select(
-            "vid",
-            "v",
-            _argmin_cluster(F.col("v"), F.col("_cents")).alias("cluster"),
-        )
-        if it == n_iter - 1:
-            assign_cents = cents
-            if not return_centroids and not return_assign_centroids:
-                # the post-final-assign centroid update is consumed
-                # only by return_centroids callers (PQ codebooks);
-                # skipping it for assignment-only callers drops one
-                # dead assign+update pass — the trajectory up to the
-                # final assignment is untouched
-                break
-        cents = (
-            assigned.select("cluster", F.posexplode("v").alias("dim", "val"))
-            .groupBy("cluster", "dim")
-            .agg(F.expr("sum(val) div count(1)").alias("cval"))
-            .groupBy("cluster")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "cval"))).alias("pairs"))
-            .select("cluster", F.transform("pairs", lambda p: p["cval"]).alias("cvec"))
-            .localCheckpoint()
-        )
-        # NOTE (measured, do not "optimize"): checkpointing only every
-        # third round looks like it should collapse job overhead, but
-        # the chained multi-round plan re-scans vecs per level and
-        # serializes its nested broadcasts inside one job — 3.7 s vs
-        # 3.2 s at sf0.1. Per-round checkpoints win.
-    if return_assign_centroids:
-        # the caller re-derives assignments as a projection (bit-exact
-        # by construction) — never pay the materialization job
-        return assign_cents, cents
-    # materialize the final assignment (ids only, vectors dropped
-    # first): consumers like SemDeDup and IVF reference the clustering
-    # from BOTH sides of a self-join, and an unmaterialized assignment
-    # plan would re-run the last assign round once per reference —
-    # the same re-execution class the pagerank bench caught.
-    out = assigned.select(F.col("vid").alias(id_col), "cluster").localCheckpoint()
-    if return_centroids:
-        return out, cents
-    return out
+    codes, _ = _lloyd(corpus, id_col, vec_col, k, n_iter)
+    return codes.select(F.col("vid").alias(id_col), F.col("code_0").alias("cluster"))
 
 
 def _jl_sign(i: int, j: int, d_out: int) -> float:
@@ -633,12 +626,15 @@ def pq_adc_topk(
     (Jégou et al., "Product Quantization for Nearest Neighbor Search").
 
     Train: the vector splits into ``n_subspaces`` contiguous slices;
-    each slice gets its own fixed-point k-means codebook
-    (:func:`kmeans_lloyd` with ``return_centroids``), and a vector's
-    code is its per-subspace cluster ids — storage drops from
-    dims x 4 bytes to n_subspaces x 1 byte per vector (the reason PQ
-    exists at 100 TB: a billion 64-dim float vectors become a 4 GB
-    code table that fits one executor's memory).
+    each slice gets its own fixed-point k-means codebook, all of them
+    trained together by the one Lloyd loop behind :func:`kmeans_lloyd`
+    (one set of jobs per round for every subspace), and a vector's
+    code is its per-subspace cluster ids, read straight from the loop's
+    checkpointed final assignment — storage drops from dims x 4 bytes
+    to n_subspaces x 1 byte per vector (the reason PQ exists at 100 TB:
+    a billion 64-dim float vectors become a 4 GB code table that fits
+    one executor's memory). Dims past ``n_subspaces`` x width are
+    ignored.
 
     Search (ADC): for each query, the distance to every CENTROID of
     every subspace is precomputed — a queries x subspaces x codes
@@ -654,66 +650,24 @@ def pq_adc_topk(
 
     Returns (query_id, vec_id, adc_dist, rank), top ``k`` per query.
     """
-    dims_per = None  # derived per-slice below via F.slice
-
-    def sub(col: Column, s: int, width: int) -> Column:
-        return F.slice(col, s * width + 1, width)
-
     # subspace width from the first vector (plan literal; embeddings
     # are fixed-width by contract)
-    width_row = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
-    width = width_row["d"] // n_subspaces
+    width = corpus.select(F.size(F.col(vec_col)).alias("d")).first()["d"] // n_subspaces
+    codes, codebook = _lloyd(
+        corpus, id_col, vec_col, codes_per_subspace, n_iter, n_subspaces, width
+    )
+    cents = codebook.localCheckpoint()
 
-    tables = []
     qv = queries.select(
         F.col(id_col).alias("query_id"), quantize_vec(F.col(vec_col)).alias("qv")
     )
-
-    # train the per-subspace codebooks CONCURRENTLY: each k-means is
-    # independent and dominated by fixed per-job overhead (checkpoint
-    # jobs over a broadcast-assign), so submitting them from worker
-    # threads lets the scheduler interleave the rounds — results are
-    # unchanged (no shared state between subspaces)
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _train(s: int):
-        sliced = corpus.select(
-            F.col(id_col).alias("vec_id"), sub(F.col(vec_col), s, width).alias("sv")
-        )
-        return kmeans_lloyd(
-            sliced,
-            id_col="vec_id",
-            vec_col="sv",
-            k=codes_per_subspace,
-            n_iter=n_iter,
-            return_assign_centroids=True,
-        )
-
-    with ThreadPoolExecutor(max_workers=n_subspaces) as pool:
-        trained = list(pool.map(_train, range(n_subspaces)))
-
-    # r14: codes are computed INLINE as projections against the
-    # broadcast assign-step centroid arrays — the former shape joined
-    # n_subspaces materialized assignment tables back onto the corpus
-    # by vec_id (a 4-deep SortMergeJoin chain: 4 Exchanges + 3 sorts of
-    # O(corpus) rows in the plan), purely to re-attach values that are
-    # a pure function of the vector itself. quantize_vec is elementwise
-    # so quantize(slice(x)) == slice(quantize(x)), and _argmin_cluster
-    # is the identical decimal arithmetic the kmeans assign step runs —
-    # codes are bit-equal to the materialized assignments they replace
-    # (guide §2.4: remove shuffles outright; §8: never shuffle the
-    # payload to attach a value derivable from it).
-    # per-row decimal argmin x n_subspaces is CPU-bound; fan_out lifts
-    # the scan to cluster parallelism when the parquet split count is
-    # below it (no-op at scale — same guard as cosine_topk)
-    scored = fan_out(corpus).select(
-        F.col(id_col).alias("vec_id"), quantize_vec(F.col(vec_col)).alias("_xq")
+    scored = codes.withColumnRenamed("vid", "vec_id").crossJoin(
+        F.broadcast(qv.select("query_id"))
     )
+    total = None
     for s in range(n_subspaces):
-        acents, cents = trained[s]
-        scored = scored.crossJoin(F.broadcast(_cents_as_row(acents, f"_ac{s}")))
-        # query -> centroid integer sq-L2 per (subspace, code): the ADC
-        # lookup table slice (queries x codes rows, kilobytes)
+        # query -> centroid integer sq-L2 per code: the ADC lookup
+        # table slice (queries x codes rows, kilobytes)
         qslice = qv.select(
             "query_id", F.slice(F.col("qv"), s * width + 1, width).alias("qs")
         )
@@ -734,42 +688,11 @@ def pq_adc_topk(
             F.lit(0).cast("long"),
             lambda acc, d: acc + d,
         )
-        tables.append(
-            qslice.crossJoin(F.broadcast(cents)).select(
-                "query_id",
-                F.lit(s).alias("subspace"),
-                F.col("cluster").alias(f"code_{s}"),
-                dist.alias(f"d_{s}"),
-            )
+        t = qslice.crossJoin(F.broadcast(cents.where(F.col("subspace") == s))).select(
+            "query_id",
+            F.col("cluster").alias(f"code_{s}"),
+            dist.alias(f"d_{s}"),
         )
-    # derive the per-subspace codes in one projection over the single
-    # corpus scan, MATERIALIZED once (vec_id + n_subspaces 1-byte-range
-    # codes — the PQ code table itself): without the barrier Catalyst
-    # collapses the argmin projections into the downstream ADC join
-    # conditions, re-evaluating the decimal argmin per (vec, query)
-    # pair inside BroadcastNestedLoopJoins (observed in the plan). The
-    # former shape materialized n_subspaces full assignment tables and
-    # re-attached them with a 4-deep SortMergeJoin chain (4 Exchanges +
-    # 3 sorts of O(corpus) rows) after 4 separate assign passes; one
-    # narrow checkpoint over ONE corpus pass replaces all of that.
-    # Local sf0.1 timing is a wash (bests 2.8-4.9 s overlap across 10
-    # A/B process-pairs — the fused pass serializes what the thread
-    # pool used to overlap), but at scale this removes three corpus
-    # passes and five corpus-sized exchanges. Then fold the
-    # per-subspace lookups into one map-side sum per (query, vec).
-    coded = scored.select(
-        "vec_id",
-        *[
-            _argmin_cluster(sub(F.col("_xq"), s, width), F.col(f"_ac{s}")).alias(
-                f"code_{s}"
-            )
-            for s in range(n_subspaces)
-        ],
-    ).localCheckpoint()
-    scored = coded.crossJoin(F.broadcast(qv.select("query_id")))
-    total = None
-    for s in range(n_subspaces):
-        t = tables[s].select("query_id", f"code_{s}", f"d_{s}")
         scored = scored.join(F.broadcast(t), ["query_id", f"code_{s}"])
         total = F.col(f"d_{s}") if total is None else total + F.col(f"d_{s}")
     # PARTIAL TOP-K before the per-query ranking window (the BM25 skew

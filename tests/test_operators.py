@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from biodiversity_data_ingestion_spark.operators import cleaning, dedup, joins, similarity
 from biodiversity_data_ingestion_spark.operators.classify import classify
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, SMOKE_DIR
 
 
 # ---------------------------------------------------------------------------
@@ -1430,16 +1430,17 @@ def test_jpeg444_grayscale_component_id_is_not_fixed():
     assert multimodal._jpeg444_features(bytes(buf)) == (24, 16, 384, 109.0, None, None)
 
 
-@pytest.mark.parametrize("decoder", ["baseline", "progressive"])
+@pytest.mark.parametrize("decoder", ["baseline", "color", "progressive"])
 @pytest.mark.parametrize("case", [
     "unused second DQT", "one-entry DQT", "fill byte before DHT",
     "two tables in one DQT", "DRI interval 0", "DRI interval 4",
+    "SOS with 0 components",
 ])
 def test_jpeg_header_cases_decode_or_raise(case, decoder):
-    # One header edit of doc 5's twin, whose true mean is 109.0: a valid
-    # file decodes to the true row in both decoders, a malformed one
-    # (a quant table of one entry, restart intervals neither decoder
-    # reads) raises in both instead of giving a plausible wrong row.
+    # One header edit of doc 5's twin: a valid file decodes to the true
+    # row in every decoder, a malformed one (a quant table of one entry,
+    # restart intervals no decoder reads, a scan of no component) raises
+    # in every decoder instead of giving a plausible wrong row.
     from biodiversity_data_ingestion_spark.operators import multimodal as M
 
     seg, dqt = M._jpeg_seg, M._JPEG_SYNTH_DQT
@@ -1447,6 +1448,15 @@ def test_jpeg_header_cases_decode_or_raise(case, decoder):
     def table(tq, v):
         return bytes([tq]) + bytes([v] * 64)
 
+    if decoder == "baseline":
+        buf, decode, row = M._jpeg_payload(5), M._jpeg_features, (24, 16, 384, 109.0)
+    elif decoder == "color":
+        buf, decode = M._jpeg444_payload(5), M._jpeg444_features
+        row = (24, 16, 384, 99.0, 65.5, 46.0)
+    else:
+        buf, decode = M._jpeg_progressive_payload(5), M._jpeg_progressive_features
+        row = (24, 16, 384, 2, 109.0)
+    sos = buf[buf.index(b"\xff\xda") :][:5]  # marker, length, Ns
     old, new, error = {
         "unused second DQT": (dqt, dqt + seg(0xDB, table(1, 2)), None),
         "one-entry DQT": (dqt, bytes.fromhex("ffdb00040002"), "shorter than 64"),
@@ -1454,12 +1464,8 @@ def test_jpeg_header_cases_decode_or_raise(case, decoder):
         "two tables in one DQT": (dqt, seg(0xDB, table(1, 2) + table(0, 1)), None),
         "DRI interval 0": (dqt, dqt + seg(0xDD, b"\x00\x00"), None),
         "DRI interval 4": (dqt, dqt + seg(0xDD, b"\x00\x04"), "restart intervals"),
+        "SOS with 0 components": (sos, sos[:4] + b"\x00", "SOS component count 0"),
     }[case]
-    if decoder == "baseline":
-        buf, decode, row = M._jpeg_payload(5), M._jpeg_features, (24, 16, 384, 109.0)
-    else:
-        buf, decode = M._jpeg_progressive_payload(5), M._jpeg_progressive_features
-        row = (24, 16, 384, 2, 109.0)
     assert decode(buf) == row and old in buf
     buf = buf.replace(old, new, 1)
     if error is None:
@@ -1501,6 +1507,31 @@ def test_pq_adc_recovers_exact_blobs(spark):
         for r in rs:
             assert r.vec_id % 4 == blob  # all top-5 from the query's blob
             assert r.adc_dist == 0  # codebook reconstructs the blob exactly
+
+
+def test_kmeans_family_job_and_cache_budget(spark):
+    # Build-time Spark jobs come from the status store's job list, which
+    # holds the jobs of every driver thread (a job group sees only its
+    # own thread's); persisted RDDs are the new keys of
+    # getPersistentRDDs(). pq_adc_topk's budget allows one set of jobs
+    # and one checkpoint per Lloyd round for all four subspace
+    # codebooks together; kmeans_clusters is the one-codebook case.
+    from biodiversity_data_ingestion_spark.plans.queries import QUERIES
+
+    sc = spark.sparkContext
+    jvm_sc = sc._jsc.sc()
+
+    def last_job_id():
+        jvm_sc.listenerBus().waitUntilEmpty()
+        jobs = jvm_sc.statusStore().jobsList(None)  # newest first
+        return jobs.head().jobId() if jobs.size() else -1
+
+    for name, max_jobs, max_rdds in [("pq_adc_topk", 18, 4), ("kmeans_clusters", 20, 5)]:
+        j0, r0 = last_job_id(), set(sc._jsc.getPersistentRDDs().keySet())
+        QUERIES[name]["builder"](spark, SMOKE_DIR)
+        jobs = last_job_id() - j0
+        rdds = len(set(sc._jsc.getPersistentRDDs().keySet()) - r0)
+        assert jobs <= max_jobs and rdds <= max_rdds, (name, jobs, rdds)
 
 
 def test_pq_rerank_improves_recall(spark):

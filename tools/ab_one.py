@@ -1,13 +1,16 @@
 #!/usr/bin/env python
-"""One fresh-process leg of an alternating A/B (r14 host-contention
-protocol, memory/r14-host-contention-protocol.md): run ONE bench query
-with bench.py's exact timing (consecutive best-of-N, noop sink, EAGER
-builder handling) and print a single JSON line.
+"""One fresh-process leg of an alternating A/B: run ONE bench query
+with bench.py's timing loop (``bench.time_query``: consecutive repeats,
+noop sink, EAGER builders timed with their builder) and print a single
+JSON line.
 
-Variants are selected by the caller via env vars the code under test
-reads (e.g. BDI_HITS_EDGE_CACHE=1) — this script is variant-agnostic.
+A leg measures the checkout the script lives in (it puts that checkout
+first on ``sys.path``). To compare two versions, keep one checkout of
+each and run one leg from each in turn, parent then change, for several
+pairs; ``tools/ab_pairs.sh`` does exactly that. Compare the medians of
+the legs' ``best`` figures.
 
-    SPARK_GRAFT_SF_DIR=... python tools/ab_one.py purchase_hits_scores --reps 4
+    SPARK_GRAFT_SF_DIR=<sf dir> python tools/ab_one.py kmeans_clusters --reps 4
 """
 
 from __future__ import annotations

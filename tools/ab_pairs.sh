@@ -1,16 +1,14 @@
 #!/bin/bash
-# Alternating fresh-process A/B driver (r14 host-contention protocol):
-#   tools/ab_pairs.sh <query> <pairs> <reps> <env_key> <old_val> <new_val> [sf_dir] [out]
-# Each pair runs OLD then NEW in separate fresh processes; results append
-# as JSON lines to $out.
+# Alternating fresh-process A/B of one bench query between two checkouts:
+#   tools/ab_pairs.sh <query> <pairs> <reps> <old_checkout> <new_checkout> <out> [sf_dir]
+# Each pair runs tools/ab_one.py from OLD, then from NEW, each in a
+# fresh process; results append as JSON lines to <out>, tagged
+# OLD_p<i> / NEW_p<i>. Without sf_dir, ab_one.py's default applies.
 set -u
-Q="$1"; PAIRS="$2"; REPS="$3"; KEY="$4"; OLDV="$5"; NEWV="$6"
-SF="${7:-/root/testdata/sf0.1}"; OUT="${8:-/tmp/ab_${Q}.jsonl}"
-cd "$(dirname "$0")/.."
+Q="$1"; PAIRS="$2"; REPS="$3"; OLD="$4"; NEW="$5"; OUT="$6"
+if [ -n "${7:-}" ]; then export SPARK_GRAFT_SF_DIR="$7"; fi
 for i in $(seq 1 "$PAIRS"); do
-  env "$KEY=$OLDV" SPARK_GRAFT_SF_DIR="$SF" \
-    python tools/ab_one.py "$Q" --reps "$REPS" --tag "OLD_p$i" 2>/dev/null >> "$OUT"
-  env "$KEY=$NEWV" SPARK_GRAFT_SF_DIR="$SF" \
-    python tools/ab_one.py "$Q" --reps "$REPS" --tag "NEW_p$i" 2>/dev/null >> "$OUT"
+  (cd "$OLD" && python tools/ab_one.py "$Q" --reps "$REPS" --tag "OLD_p$i" 2>/dev/null) >> "$OUT"
+  (cd "$NEW" && python tools/ab_one.py "$Q" --reps "$REPS" --tag "NEW_p$i" 2>/dev/null) >> "$OUT"
 done
 echo "done -> $OUT"
